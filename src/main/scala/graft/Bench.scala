@@ -77,10 +77,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.defaultCpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("Bench")
     // untimed warmup: JIT, codegen compiler, parquet footers for every
     // input table — otherwise whichever query touches a table first
     // absorbs its one-time open cost and the per-query times are noise
@@ -105,27 +102,15 @@ object Bench {
     // the output file lets a one-off 17 s GC/environment outlier
     // self-identify (max >> median) without a same-machine judge rerun.
     def timeReps(name: String, fn: (SparkSession, String) => DataFrame): Seq[Double] = {
-      // drop every cached frame leaked by EARLIER queries (operators that
-      // persist their result for the caller can't unpersist it — across
-      // 131 queries x reps those caches accumulate, squeeze the unified
-      // memory region, and later persisting queries pay eviction/spill
-      // churn instead of their own cost; the round-7 driver-side geo_knn
-      // "regression" — 7.7 s there, 0.6 s isolated — fits exactly this).
-      // Clearing per REP: clearCache() only drops the SQL cache —
-      // localCheckpoint()ed frames pin RDD blocks the catalog never
-      // sees, and across reps x queries those blocks accumulate in the
-      // block manager (the r16 adjudication measured ann_nndescent reps
-      // growing 27 -> 60 -> 159 s from exactly this). Every operator
-      // builds its frames fresh per call, so a finished rep's blocks
-      // are unreachable garbage, never warmth — releasing them between
-      // reps removes the cross-rep memory pressure without cooling
-      // anything a later rep could reuse (JIT, codegen and parquet
-      // footers stay warm in the JVM regardless).
+      // reset per REP: a result persisted for the caller, or a pin a
+      // query hands over to this scope-less caller, stays in the block
+      // manager, and across 131 queries x reps those blocks squeeze the
+      // unified memory region — later queries pay eviction/spill churn
+      // instead of their own cost (the round-7 geo_knn "regression",
+      // 7.7 s there vs 0.6 s isolated; the r16 adjudication's
+      // ann_nndescent reps growing 27 -> 60 -> 159 s).
       (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
+        GraftSession.reset(spark)
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable =>

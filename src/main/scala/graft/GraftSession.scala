@@ -31,4 +31,17 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Between-reps reset for the bench and probe mains: drop the SQL
+    * cache, release every persisted or pinned RDD (the catalog never
+    * sees `localCheckpoint` blocks, so `clearCache` alone leaves them),
+    * and collect. Operators build their frames fresh per call, so a
+    * finished rep's blocks are garbage, never warmth; JIT, codegen and
+    * parquet footers stay warm regardless. */
+  def reset(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
 }

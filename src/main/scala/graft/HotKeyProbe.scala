@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Pins
 
 /** HOT-KEY PROBE — the adversarial input the shape-preserving scale
   * replication cannot manufacture: a boilerplate sentence present in
@@ -56,19 +57,16 @@ object HotKeyProbe {
       .as("text"))
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Pins.scope { s =>
     val nDocs = args.lift(0).map(_.toLong).getOrElse(500000L)
-    val cpus = GraftSession.defaultCpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("HotKeyProbe")
 
-    val docs = corpus(spark, nDocs).localCheckpoint()
+    val docs = s.pin(corpus(spark, nDocs))
+    // each probe's pins end with it (the corpus pin outlives them all)
     def timed[A](f: => A): (A, Double) = {
       spark.catalog.clearCache(); System.gc()
       val t0 = System.nanoTime()
-      val a = f
+      val a = Pins.scope { _ => f }
       (a, (System.nanoTime() - t0) / 1e9)
     }
 
@@ -189,11 +187,8 @@ object HotKeyProbe {
     }
     val prPlanted = prTop == 0L // the celebrity dominates the rank mass
     val (lpRows, lpSec) = timed {
-      val labels = operators.Graph.labelPropOver(gEdges,
-        spark.range(nG).select(col("id")), rounds = 2)
-      val n = labels.count()
-      org.apache.spark.sql.graftbridge.SparkBridge.unpersistCheckpoint(labels)
-      n
+      operators.Graph.labelPropOver(gEdges,
+        spark.range(nG).select(col("id")), rounds = 2).count()
     }
     val lpOk = lpRows == nG
     val epoch = lit("2026-01-01 00:00:00").cast("timestamp")

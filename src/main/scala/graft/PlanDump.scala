@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` for a set of registered queries to
@@ -18,11 +17,7 @@ object PlanDump {
     val suffix = args(2)
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
-    val cpus = GraftSession.defaultCpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("PlanDump")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** STAGE-LEVEL PROFILE of the production-tau banded near-dup pipeline —
@@ -30,21 +29,14 @@ object ProdProfile {
     val dir = args.lift(0).getOrElse("/tmp/graft_sf1")
     val tau = args.lift(1).map(_.toDouble).getOrElse(0.9)
     val targetOcc = args.lift(2).map(_.toLong).getOrElse(1024L)
-    val cpus = GraftSession.defaultCpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("ProdProfile")
     import operators.Similarity
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
     def timeOne(mk: => DataFrame): (Double, Long) = {
       var rows = 0L
       val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
+        GraftSession.reset(spark)
         val t0 = System.nanoTime()
         rows = mk.count()
         (System.nanoTime() - t0) / 1e9

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-job / per-stage wall-clock profile of one registered query —
@@ -19,11 +18,7 @@ object ProfileOne {
     val sfDir = args(0)
     val keys = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = GraftSession.defaultCpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("ProfileOne")
 
     case class StageRec(id: Int, name: String, nTasks: Int,
                         taskMs: Long, wallMs: Long)
@@ -62,15 +57,10 @@ object ProfileOne {
       val fn = SparkEntry.queries(key)
       // warmup rep(s): JIT + codegen + parquet footers
       (1 until reps).foreach { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        GraftSession.reset(spark)
         fn(spark, sfDir).count()
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
+      GraftSession.reset(spark)
       jobs.synchronized { jobs.clear() }
       stageToJob.synchronized { stageToJob.clear() }
       record = true

@@ -202,11 +202,7 @@ object ScaleProbe {
     val base = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val scaled = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = GraftSession.defaultCpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("ScaleProbe")
 
     if (!scaledIsCurrent(base, scaled, factor))
       buildScaled(spark, base, scaled, factor)
@@ -215,17 +211,11 @@ object ScaleProbe {
     def timeOne(fn: (SparkSession, String) => DataFrame,
                 dir: String): Double = {
       val ts = (1 to reps).map { _ =>
-        // release finished frames BETWEEN reps/keys, not just the SQL
-        // cache: localCheckpoint()ed frames pin RDD blocks the catalog
-        // never sees, and at factor 100 a cold ModelStore fit's blocks
-        // alone can hold most of the heap into the NEXT key's
-        // quadratic pass (observed: emb_dedup_final OOMing right after
-        // ann_nndescent's cold fit — the same leak Bench fixed in r16,
-        // never ported here)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
+        // release finished frames BETWEEN reps/keys: at factor 100 one
+        // key's leftover blocks can hold most of the heap into the NEXT
+        // key's quadratic pass (observed: emb_dedup_final OOMing right
+        // after ann_nndescent's cold fit)
+        GraftSession.reset(spark)
         val t0 = System.nanoTime()
         try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable =>
@@ -346,10 +336,7 @@ object ScaleProbe {
         val arms = Seq(32, 64).map { mb =>
           val (arm, r, bands) =
             operators.Similarity.nearDupLshPlan(n, tau, 64, 8, occ, mb)
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          System.gc()
+          GraftSession.reset(spark)
           val t0 = System.nanoTime()
           val nPairs = operators.Similarity
             .nearDupLsh(spark, scaled, tau, 64, 8, targetOcc = occ,

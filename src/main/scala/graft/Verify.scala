@@ -1,16 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = GraftSession.defaultCpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("Verify")
     new java.io.File(outDir).mkdirs()
     // local-iteration hook, same contract as Bench: SPARK_GRAFT_ONLY=a,b
     // dumps a subset (the driver never sets it — full map by default)

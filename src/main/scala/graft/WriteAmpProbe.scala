@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** WRITE-AMPLIFICATION PROBE — the measured version of the deletion-
@@ -41,11 +40,7 @@ object WriteAmpProbe {
     import graft.sources.SnapshotLog
     val nRows = args.lift(0).map(_.toLong).getOrElse(2000000L)
     val nUpd = args.lift(1).map(_.toInt).getOrElse(100)
-    val cpus = GraftSession.defaultCpus
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("WriteAmpProbe")
     import spark.implicits._
 
     val root = s"/tmp/graft_writeamp"

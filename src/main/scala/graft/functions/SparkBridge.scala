@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.util.CallSite
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ScalarSubquery}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -15,26 +18,21 @@ object SparkBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Release the block-manager storage behind a `localCheckpoint()`ed
-    * frame (or any frame derived from one): find the pinned RDDs under
-    * the plan's [[LogicalRDD]] leaves and unpersist them.
-    *
-    * `Dataset.unpersist` only covers CacheManager entries, so superseded
-    * checkpoints of an iterative algorithm (label propagation, shortest
-    * path) otherwise accumulate one pinned copy per round until context
-    * GC gets around to them — on a shared cluster that is real executor
-    * storage pressure. Non-blocking removal — but note a
-    * `localCheckpoint()`ed RDD has its lineage truncated and CANNOT be
-    * recomputed: a task that races the removal fails hard with a
-    * missing-checkpoint-block error. Callers must therefore unpersist
-    * round N-1 only after round N is synchronously materialized and no
-    * concurrent action still reads the old frame (the discipline every
-    * iterative loop here follows).
-    */
-  def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
+  /** The RDDs under a frame's [[LogicalRDD]] leaves — for a
+    * `localCheckpoint()`ed frame, its pinned blocks. Subquery plans are
+    * walked too: [[scalarSubquery]] hides a plan inside an expression. */
+  def checkpointRdds(df: Dataset[_]): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectWithSubqueries {
       case lr: LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    }
+
+  /** Run `body` with the RDDs and jobs it creates attributed to the
+    * short call site `site` (when given), then restore the caller's. */
+  def withCallSite[T](sc: SparkContext, site: Option[String])(body: => T): T = {
+    val outer = sc.getLocalProperty(CallSite.SHORT_FORM)
+    site.foreach(sc.setLocalProperty(CallSite.SHORT_FORM, _))
+    try body finally sc.setLocalProperty(CallSite.SHORT_FORM, outer)
+  }
 
   /** Rebuild a checkpoint-backed frame with its propagated plan
     * statistics DROPPED (reset to the conf default).
@@ -49,7 +47,9 @@ object SparkBridge {
     * round's planning by round 12 of the component loop. Dropping
     * originStats at each round boundary keeps every round's stats O(1)
     * while the checkpoint still truncates lineage. The frame must
-    * already be materialized (its LogicalRDD leaves re-used as-is). */
+    * already be materialized (its LogicalRDD leaves re-used as-is).
+    * Loops reach this through [[graft.functions.Pins.advance]], which
+    * pairs it with the release of the superseded round. */
   def dropOriginStats(df: DataFrame): DataFrame = {
     val spark =
       df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

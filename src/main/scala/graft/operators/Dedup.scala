@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{CappedSet, TextFunctions}
+import graft.functions.{CappedSet, Pins, TextFunctions}
 
 /** Document deduplication, exact and near-dup, over the `documents` table.
   *
@@ -331,7 +331,7 @@ object Dedup {
   private[graft] def classifyBatch(spark: SparkSession, dir: String,
                                    index: DataFrame, batch: DataFrame,
                                    tau: Double, k: Int = 64,
-                                   bands: Int = 16): DataFrame = {
+                                   bands: Int = 16): DataFrame = Pins.scope { s =>
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 5 =!= 4)
     // hash ladder (the [[incremental]] definitions, corpus pre-reduced).
@@ -362,25 +362,22 @@ object Dedup {
         min(when(col("kind") === "n", col("match_id"))).as("norm_match"))
     // LSH probe: batch-side banding only; the index is the standing one.
     // The candidate frame is referenced twice below (member list +
-    // verify join) — pin it once, candidate-pair-sized (the
-    // verifiedJaccard discipline; unpinned, the banding + index join
-    // ran once per reference)
-    val cands = minhashBands(batch, k, bands)
+    // verify join) — pin it once, candidate-pair-sized (unpinned, the
+    // banding + index join ran once per reference)
+    val cands = s.pin(minhashBands(batch, k, bands)
       .join(index, Seq("band", "bucket"))
       .select(col("doc_id"), explode(col("corpus_ids")).as("cand_doc"))
       .filter(col("doc_id") =!= col("cand_doc"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // exact-Jaccard verify over candidate members only (the
     // [[ngramJaccard]] semi-join-prune-then-shingle discipline)
     val members = cands.select(col("doc_id")).union(
       cands.select(col("cand_doc").as("doc_id"))).distinct()
-    val sets = withShingles(
+    // member-sized, referenced by both verify-join sides — pinned so
+    // the pruned corpus scan runs once
+    val sets = s.pin(withShingles(
       docs.join(broadcast(members), Seq("doc_id"), "left_semi"))
-      .select(col("doc_id"), array_distinct(col("shingles")).as("sh"))
-      // member-sized, referenced by both verify-join sides — pinned so
-      // the pruned corpus scan runs once (the verifiedJaccard shape)
-      .localCheckpoint()
+      .select(col("doc_id"), array_distinct(col("shingles")).as("sh")))
     val jac = round(
       size(array_intersect(col("sa"), col("sb"))).cast("double") /
         size(array_union(col("sa"), col("sb"))).cast("double"), 4)
@@ -471,8 +468,7 @@ object Dedup {
     * from its shared signature frame. */
   private[graft] def verifiedJaccard(spark: SparkSession, dir: String,
                                      cands: DataFrame,
-                                     tau: Double): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SparkBridge
+                                     tau: Double): DataFrame = Pins.scope { s =>
     // The candidate frame is referenced TWICE below (member list +
     // verify join) and Catalyst does not reuse the aggregated exchange
     // across the two branches, so without a pin the ENTIRE banding +
@@ -481,7 +477,7 @@ object Dedup {
     // near-dup-density-sized (the point of LSH), so one localCheckpoint
     // costs one tiny materialization and halves the corpus-scale work —
     // at 100 TB the saved pass is a full corpus banding.
-    val candsP = cands.localCheckpoint()
+    val candsP = s.pin(cands)
     // LSH output is a tiny fraction of the corpus (that is the point of
     // LSH) — broadcast its member list to prune map-side
     val candDocs = candsP
@@ -492,17 +488,16 @@ object Dedup {
     // the whole corpus (verified on the optimized plan). The set frame
     // is member-sized and referenced by BOTH verify-join sides — pinned,
     // so the pruned corpus scan runs once, not once per side.
-    val sets = withShingles(
+    val sets = s.pin(withShingles(
       Tables.documents(spark, dir)
         .join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
-      .select(col("doc_id"), array_distinct(col("shingles")).as("sh"))
-      .localCheckpoint()
+      .select(col("doc_id"), array_distinct(col("shingles")).as("sh")))
     // output is verified-pair-sized (tinier still); pinning it lets
     // multi-reference consumers (nearDupClusters' two-orientation
     // union, splitLeakage's two broadcast builds) read it instead of
     // re-running the verify join per reference, and frees the
     // candidate pin immediately
-    val out = candsP
+    s.pin(candsP
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
       .withColumn("jaccard", round(
@@ -510,11 +505,7 @@ object Dedup {
           size(array_union(col("sh_a"), col("sh_b"))), 4))
       .filter(col("jaccard") >= tau)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(sets)
-    SparkBridge.unpersistCheckpoint(candsP)
-    out
+      .orderBy(col("doc_a"), col("doc_b")))
   }
 
   /** The LSH BANDING S-CURVE TABLE — [[graft.operators.Similarity
@@ -541,8 +532,7 @@ object Dedup {
     * exactly once for the whole sweep. */
   def lshSweep(spark: SparkSession, dir: String, k: Int = 64,
                tau: Double = 0.8,
-               bandConfigs: Seq[Int] = Seq(4, 8, 16, 32)): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SparkBridge
+               bandConfigs: Seq[Int] = Seq(4, 8, 16, 32)): DataFrame = Pins.scope { s =>
     // the k-hash signature pass (shingles + k minhashes per doc — the
     // expensive half of every arm) is computed ONCE and checkpointed;
     // each arm and the truth's candidate stage band the SHARED
@@ -551,16 +541,15 @@ object Dedup {
     // corpus is shingled+hashed once instead of bandConfigs.size + 1
     // times. Truth reuses the 16-band arm's exact candidate pipeline
     // (ngramJaccard's defaults) when this k matches its 64.
-    val sigs = minhashSigs(Tables.documents(spark, dir), k)
-      .localCheckpoint()
+    val sigs = s.pin(minhashSigs(Tables.documents(spark, dir), k))
     // the 16-band candidate set feeds BOTH the truth verify and the
     // 16-band arm — pin it once (candidate-pair-sized) so the banding +
     // bucket-gather over the shared signatures runs once, not per
     // consumer (r22 profile: the gather stages were the sweep's
     // dominant 32-task jobs)
     val cands16 =
-      if (k == 64) Some(candidatesFromBanded(bandsFromSigs(sigs, k, 16), 100)
-        .localCheckpoint())
+      if (k == 64) Some(s.pin(
+        candidatesFromBanded(bandsFromSigs(sigs, k, 16), 100)))
       else None
     def candsOf(b: Int): DataFrame =
       if (b == 16 && cands16.isDefined) cands16.get
@@ -568,12 +557,12 @@ object Dedup {
     val truthPairs =
       if (k == 64) verifiedJaccard(spark, dir, cands16.get, tau)
       else ngramJaccard(spark, dir, tau)
-    val truth = truthPairs
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
+    val truth = s.pin(truthPairs
+      .select(col("doc_a"), col("doc_b")))
     // n_true is arm-independent: ONE one-row agg pinned and broadcast
     // into every arm (the per-arm nT agg re-ran 4x inside the union
     // plan — identical values, 4 redundant stage-jobs)
-    val nT = truth.agg(count(lit(1)).as("n_true")).localCheckpoint()
+    val nT = s.pin(truth.agg(count(lit(1)).as("n_true")))
     val arms = bandConfigs.map { b =>
       val r = k / b
       val cand = candsOf(b)
@@ -594,13 +583,7 @@ object Dedup {
         (col("n_found").cast("double") >=
           col("n_true") * sCurve(tau, r, b)).as("recall_ok"))
     }
-    val out = arms.reduce(_ unionByName _).orderBy(col("bands"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(nT)
-    SparkBridge.unpersistCheckpoint(truth)
-    cands16.foreach(SparkBridge.unpersistCheckpoint)
-    SparkBridge.unpersistCheckpoint(sigs)
-    out
+    s.pin(arms.reduce(_ unionByName _).orderBy(col("bands")))
   }
 
   /** 1 − (1 − s^r)^b by left-folded multiplication (both engines'
@@ -680,8 +663,7 @@ object Dedup {
     * hash joins on top of the dedup pipeline it reuses, never a
     * corpus x corpus step. */
   def splitLeakage(spark: SparkSession, dir: String, tau: Double = 0.8)
-      : DataFrame = {
-    import org.apache.spark.sql.graftbridge.SparkBridge
+      : DataFrame = Pins.scope { s =>
     val pairs = ngramJaccard(spark, dir, tau)
     // split assignment is ROW-LOCAL (md5 of the text), so it only needs
     // computing for PAIR MEMBERS: semi-join prune the corpus scan first
@@ -694,12 +676,11 @@ object Dedup {
     val members = pairs
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
-    val memberSplits = TextAnalysis.hashSplitOf(
+    val memberSplits = s.pin(TextAnalysis.hashSplitOf(
       Tables.documents(spark, dir)
         .join(broadcast(members), Seq("doc_id"), "left_semi"))
-      .select(col("doc_id"), col("split"))
-      .localCheckpoint()
-    val out = pairs
+      .select(col("doc_id"), col("split")))
+    s.pin(pairs
       .join(broadcast(memberSplits.select(col("doc_id").as("doc_a"),
         col("split").as("split_a"))), Seq("doc_a"))
       .join(broadcast(memberSplits.select(col("doc_id").as("doc_b"),
@@ -707,10 +688,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"),
         col("split_a"), col("split_b"),
         (col("split_a") =!= col("split_b")).as("leaked"))
-      .orderBy(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(memberSplits)
-    out
+      .orderBy(col("doc_a"), col("doc_b")))
   }
 
   /** Asymmetric CONTAINMENT dedup — the doc-inside-doc detector that
@@ -737,7 +715,7 @@ object Dedup {
     * doc-inside-doc pair whose Jaccard is far below any LSH tuning. */
   private[graft] def containmentOf(docs: DataFrame, n: Int = ShingleSize,
                                    maxDF: Int = 20, tau: Double = 0.9,
-                                   minSize: Int = 5): DataFrame = {
+                                   minSize: Int = 5): DataFrame = Pins.scope { s =>
     val sh = docs
       .select(col("doc_id"),
         explode(array_distinct(TextFunctions.word_shingles(col("text"), n)))
@@ -756,7 +734,7 @@ object Dedup {
     // kept shingle's doc array (fan-out <= maxDF^2 per shingle by the
     // cap): no join, no sort, nothing corpus x corpus anywhere. Pinned
     // once: the index feeds both the pair source and the per-doc sizes.
-    val byShingle = sh.groupBy(col("s"))
+    val byShingle = s.pin(sh.groupBy(col("s"))
       .agg(CappedSet.capped_distinct_set(col("doc_id"), maxDF).as("docs"))
       .filter(col("docs").isNotNull)
       .select(col("docs"))
@@ -765,8 +743,7 @@ object Dedup {
       // partition, the checkpoint inherits that layout, and both
       // consumers' explodes (up to maxDF²/2 pairs per row) then run
       // single-task. The exchange moves only capped id arrays.
-      .repartition(sh.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .repartition(sh.sparkSession.sparkContext.defaultParallelism))
     val sizes = byShingle.select(explode(col("docs")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("size_a"))
     // shared counts are symmetric: aggregate each UNORDERED pair once
@@ -786,7 +763,7 @@ object Dedup {
           col("n_shared")))).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"), col("p.n_shared"))
     val c = floor(col("n_shared") / col("size_a") * 10000.0 + 0.5) / 10000.0
-    val out = pairs
+    s.pin(pairs
       .join(sizes.select(col("doc_id").as("doc_a"), col("size_a")),
         Seq("doc_a"))
       .filter(col("size_a") >= minSize)
@@ -794,11 +771,7 @@ object Dedup {
       .filter(col("containment") >= tau)
       .select(col("doc_a"), col("doc_b"), col("n_shared"), col("size_a"),
         col("containment"))
-      .orderBy(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
-    org.apache.spark.sql.graftbridge.SparkBridge
-      .unpersistCheckpoint(byShingle)
-    out
+      .orderBy(col("doc_a"), col("doc_b")))
   }
 
   /** Near-duplicate CLUSTERS from the verified pair list: connected
@@ -808,7 +781,7 @@ object Dedup {
     *
     * Each iteration is ONE job: the changed-label count rides inside the
     * same aggregation that materializes the next label frame (a lazy
-    * `localCheckpoint` whose first action is that count), instead of a
+    * pin whose first action is that count), instead of a
     * separate join + isEmpty convergence probe. Converges in O(component
     * diameter) rounds — near-dup components are shallow in practice
     * (diameter 1-2 after a 0.8-Jaccard verify), which is also why this
@@ -816,7 +789,7 @@ object Dedup {
     * pointer jumping: the r21 optimization round measured the jump
     * kernel's three joins per round costing more AQE stage-jobs than
     * its round savings returns on these graphs (3.2 s vs 4.2 s at
-    * sf0.1). `localCheckpoint` truncates the growing lineage each round
+    * sf0.1). A per-round pin truncates the growing lineage each round
     * so the plan stays O(1) instead of O(iterations); the superseded
     * round's pinned blocks are explicitly unpersisted. Driver-side
     * loop control with a scalar count per round; no per-row driver work.
@@ -831,9 +804,8 @@ object Dedup {
     * the component (deterministic), singletons excluded (docs in no
     * pair are their own survivor by definition). */
   def nearDupClusters(spark: SparkSession, dir: String,
-                      maxIter: Int = 20): DataFrame = {
+                      maxIter: Int = 20): DataFrame = Pins.scope { s =>
     import spark.implicits._
-    import org.apache.spark.sql.graftbridge.SparkBridge
     val pairs = ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b"))
     // single-hop min-label loop, deliberately NOT the pointer-jumping
     // kernel: near-dup components are SHALLOW (diameter 1-2 — a
@@ -842,33 +814,27 @@ object Dedup {
     // kernel's three joins per round cost more AQE stage-jobs than
     // its round savings returns (r21 measured: 3.2 s hop vs 4.2 s
     // jump at sf0.1; job profile 38 vs 59 jobs).
-    val edges = pairs
+    val edges = s.pin(pairs
       .union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst")
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
+      .toDF("src", "dst"))
+    var labels = s.pin(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
       val prop = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-      val next = labels.join(prop, labels("id") === prop("src"), "left")
+      val next = s.pin(labels.join(prop, labels("id") === prop("src"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
           (coalesce(col("nlabel"), col("label")) < col("label"))
-            .cast("long").as("_chg"))
-        .localCheckpoint(eager = false)
+            .cast("long").as("_chg")), eager = false)
       // the one job per round: materializes `next` into the checkpoint
       // AND returns the changed-label count (sum of the _chg flags)
       val nChanged = next.agg(coalesce(sum(col("_chg")), lit(0L)))
         .as[Long].head()
       converged = nChanged == 0L
-      SparkBridge.unpersistCheckpoint(labels)
-      // reset propagated stats at the round boundary (the iterative-loop
-      // stats-compounding hazard — see SparkBridge.dropOriginStats)
-      labels = SparkBridge.dropOriginStats(next.drop("_chg"))
+      labels = s.advance(labels, next.drop("_chg"))
       i += 1
     }
     require(converged,
@@ -879,17 +845,13 @@ object Dedup {
     // no join (a labels x sizes join would be large-large at scale, and
     // the checkpointed side has no stats for a broadcast decision).
     // The result is pinned (output-sized) so the working label frame and
-    // edge list can be released immediately rather than at context GC.
-    val out = labels
+    // edge list are released at scope exit rather than at context GC.
+    s.pin(labels
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("label"))))
       .select(col("id").as("doc_id"), col("label").as("cluster"),
         col("cluster_size"))
-      .orderBy(col("cluster"), col("doc_id"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(labels)
-    SparkBridge.unpersistCheckpoint(edges)
-    out
+      .orderBy(col("cluster"), col("doc_id")))
   }
 
   /** The corpus after the FULL dedup pipeline: exact survivors minus

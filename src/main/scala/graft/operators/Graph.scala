@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SparkBridge
 import graft.Tables
+import graft.functions.Pins
 
 /** Iterative graph analytics over a deterministic synthetic graph — the
   * same distributed fixed-point shape as [[Routing]]'s Bellman-Ford, but
@@ -19,11 +19,11 @@ import graft.Tables
   *
   * Scale posture: per round, ONE equi-join (ranks.node == edges.src) and
   * ONE (dst) sum aggregation, both partial-agg friendly. The edge table
-  * is pre-partitioned on its join key and `localCheckpoint`ed ONCE, so
+  * is pre-partitioned on its join key and pinned ONCE, so
   * rounds reuse the materialized partitioning instead of re-shuffling
   * the (at 100 TB, dominant) edge side every iteration; the rank frame is
   * output-sized (one row per node). Superseded rank checkpoints are
-  * released each round (see [[SparkBridge.unpersistCheckpoint]]).
+  * released each round (see [[graft.functions.Pins]]).
   *
   * FP determinism (why the DuckDB oracle hash-matches bitwise): every
   * number in the computation is a dyadic rational with a short mantissa.
@@ -75,15 +75,14 @@ object Graph {
     * per-round join/agg plan the registered operator runs. Returns
     * the unordered (node, pr) frame. */
   private[graft] def pagerankOver(nodes: DataFrame, edges0: DataFrame,
-                                  iters: Int): DataFrame = {
+                                  iters: Int): DataFrame = Pins.scope { s =>
     require(iters >= 1)
-    // partition the edge side by its join key ONCE; localCheckpoint
+    // partition the edge side by its join key ONCE; the pin
     // materializes that layout so the per-round join reuses it
-    val edges = edges0
+    val edges = s.pin(edges0
       .withColumnRenamed("src", "esrc")
-      .repartition(col("esrc"))
-      .localCheckpoint()
-    var ranks = nodes.withColumn("r", lit(1.0)).localCheckpoint()
+      .repartition(col("esrc")))
+    var ranks = s.pin(nodes.withColumn("r", lit(1.0)))
     for (_ <- 1 to iters) {
       val inbound = ranks.join(edges, ranks("node") === edges("esrc"))
         .select(edges("dst").as("node"),
@@ -92,15 +91,9 @@ object Graph {
       val next = nodes.join(inbound, Seq("node"), "left_outer")
         .select(col("node"),
           (lit(1 - Damping) + lit(Damping) * coalesce(col("m"), lit(0.0))).as("r"))
-        .localCheckpoint()
-      SparkBridge.unpersistCheckpoint(ranks)
-      // see minLabelComponents: reset propagated stats per round so the
-      // size estimate cannot compound across iterations
-      ranks = SparkBridge.dropOriginStats(next)
+      ranks = s.advance(ranks, s.pin(next))
     }
-    val out = ranks.select(col("node"), col("r").as("pr"))
-    SparkBridge.unpersistCheckpoint(edges)
-    out
+    ranks.select(col("node"), col("r").as("pr"))
   }
 
   /** Unrolled DuckDB oracle for [[pagerank]] — fixed-iteration dataflow,
@@ -147,16 +140,15 @@ object Graph {
     * dyadic. Non-seeds start at 0: mass genuinely FLOWS from seeds. */
   def personalizedPagerank(spark: SparkSession, dir: String,
                            iters: Int = DefaultIters,
-                           seedMod: Int = 16): DataFrame = {
+                           seedMod: Int = 16): DataFrame = Pins.scope { s =>
     require(iters >= 1)
     val nodes = Tables.supplier(spark, dir)
       .select(col("s_suppkey").as("node"))
       .withColumn("seed", (col("node") % seedMod === 0).cast("double"))
-    val edges = pageEdges(spark, dir)
+    val edges = s.pin(pageEdges(spark, dir)
       .withColumnRenamed("src", "esrc")
-      .repartition(col("esrc"))
-      .localCheckpoint()
-    var ranks = nodes.withColumn("r", col("seed")).localCheckpoint()
+      .repartition(col("esrc")))
+    var ranks = s.pin(nodes.withColumn("r", col("seed")))
     for (_ <- 1 to iters) {
       val inbound = ranks.join(edges, ranks("node") === edges("esrc"))
         .select(edges("dst").as("node"), (col("r") / OutDegree).as("c"))
@@ -165,16 +157,12 @@ object Graph {
         .select(col("node"), col("seed"),
           (lit(1 - Damping) * col("seed")
             + lit(Damping) * coalesce(col("m"), lit(0.0))).as("r"))
-        .localCheckpoint()
-      SparkBridge.unpersistCheckpoint(ranks)
-      ranks = SparkBridge.dropOriginStats(next)
+      ranks = s.advance(ranks, s.pin(next))
     }
-    val out = ranks
+    ranks
       .select(col("node"), (col("seed") > 0.5).as("is_seed"),
         col("r").as("ppr"))
       .orderBy(col("node"))
-    SparkBridge.unpersistCheckpoint(edges)
-    out
   }
 
   /** Unrolled DuckDB oracle for [[personalizedPagerank]] — the
@@ -275,30 +263,31 @@ object Graph {
     * ~2^22 with the +1 included; callers with a known diameter bound
     * should derive their own (see [[CcMaxIter]]). */
   def minLabelComponents(edges0: DataFrame, nodes: DataFrame,
-                         maxIter: Int = 24): DataFrame = {
+                         maxIter: Int = 24): DataFrame = Pins.scope { s =>
     val spark = edges0.sparkSession
     import spark.implicits._
-    val edges = edges0.toDF("src", "dst")
+    val edges = s.pin(edges0.toDF("src", "dst")
       .union(edges0.toDF("dst", "src").select(col("src"), col("dst")))
       .distinct()
       .withColumnRenamed("src", "esrc")
-      .repartition(col("esrc"))
-      .localCheckpoint()
-    var labels = nodes.toDF("id")
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
+      .repartition(col("esrc")))
+    var labels = s.pin(nodes.toDF("id")
+      .select(col("id"), col("id").as("label")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
+      // one scope per round: the round-local pin m is released when the
+      // round's count has materialized `next`
+      val (next, nChanged) = Pins.scope { r =>
       val tB0 = System.nanoTime()
       val nb = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("esrc")).agg(min(col("label")).as("nl"))
       // m feeds BOTH sides of the jump join; the lazy checkpoint makes
       // the edge join compute once per round, not once per branch
-      val m = labels.join(nb, labels("id") === nb("esrc"), "left")
+      val m = r.pin(labels.join(nb, labels("id") === nb("esrc"), "left")
         .select(col("id"), col("label").as("plabel"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("mlabel"))
-        .localCheckpoint(eager = false)
+          least(col("label"), coalesce(col("nl"), col("label"))).as("mlabel")),
+        eager = false)
       val jump = m.select(col("id").as("jid"), col("mlabel").as("jlabel"))
       val j1 = m.join(jump, m("mlabel") === jump("jid"), "left")
         .select(col("id"), col("plabel"),
@@ -318,34 +307,26 @@ object Graph {
       // the loop's wall as ~80% driver plan-build (0.3-0.7 s/round)
       // against <0.1 s of action.
       val jump2 = j1.select(col("id").as("jid2"), col("l1").as("jlabel2"))
-      val next = j1.join(jump2, j1("l1") === jump2("jid2"), "left")
+      val next = r.pin(j1.join(jump2, j1("l1") === jump2("jid2"), "left")
         .select(col("id"),
           least(col("l1"), coalesce(col("jlabel2"), col("l1"))).as("label"),
           col("plabel"))
         .withColumn("_chg", (col("label") < col("plabel")).cast("long"))
-        .drop("plabel")
-        .localCheckpoint(eager = false)
+        .drop("plabel"), eager = false)
       val tR0 = System.nanoTime()
       val nChanged = next.agg(coalesce(sum(col("_chg")), lit(0L)))
         .as[Long].head()
       if (sys.env.contains("GRAFT_CC_DEBUG"))
         println(f"[cc] round $i chg=$nChanged build=${(tR0 - tB0) / 1e9}%.2f s act=${(System.nanoTime() - tR0) / 1e9}%.2f s")
+      (next, nChanged)
+      }
       converged = nChanged == 0L
-      SparkBridge.unpersistCheckpoint(labels)
-      SparkBridge.unpersistCheckpoint(m)
-      // drop the checkpoint's propagated statistics at the round
-      // boundary: LogicalRDD forwards origin stats, and across an
-      // iterative loop the size estimate compounds multiplicatively
-      // until Catalyst's BigInt stats arithmetic dominates planning
-      // (measured 505 s for ONE round's planning by round 12) — see
-      // SparkBridge.dropOriginStats
-      labels = SparkBridge.dropOriginStats(next.drop("_chg"))
+      labels = s.advance(labels, next.drop("_chg"))
       i += 1
     }
     require(converged,
       s"component propagation did not converge in $maxIter rounds — " +
         "labels are under-merged; raise maxIter")
-    SparkBridge.unpersistCheckpoint(edges)
     labels
   }
 
@@ -360,21 +341,18 @@ object Graph {
     (32 - Integer.numberOfLeadingZeros(CcBlock - 1)) + 1 + 1 + 2
 
   def components(spark: SparkSession, dir: String,
-                 maxIter: Int = CcMaxIter): DataFrame = {
+                 maxIter: Int = CcMaxIter): DataFrame = Pins.scope { s =>
     val labels = minLabelComponents(
       ccEdges(spark, dir),
       Tables.supplier(spark, dir).select(col("s_suppkey")),
       maxIter)
-    val out = labels
+    s.pin(labels
       .withColumn("component_size", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("label"))))
       .select(col("id").as("node"), col("label").as("component"),
         col("component_size"))
-      .orderBy(col("node"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(labels)
-    out
+      .orderBy(col("node")))
   }
 
   /** Recursive-CTE oracle for [[components]]: rebuild the closed-form
@@ -420,34 +398,29 @@ object Graph {
     * Scale posture: per round ONE equi-join (labels to the symmetrized
     * edge list, partitioned+checkpointed once) + one (node, label)
     * count aggregation + one max_by argmax — all partial-agg friendly,
-    * votes never sort globally; label frames are node-sized,
-    * localCheckpointed per round with the superseded checkpoint
-    * released. Vote counts are exact integers, so there is no FP
+    * votes never sort globally; label frames are node-sized, pinned
+    * per round with the superseded pin released. Vote counts are exact integers, so there is no FP
     * anywhere in the trajectory. */
   def labelProp(spark: SparkSession, dir: String,
-                rounds: Int = 3): DataFrame = {
+                rounds: Int = 3): DataFrame = Pins.scope { s =>
     val nodes = Tables.supplier(spark, dir).select(col("s_suppkey").as("id"))
     val labels = labelPropOver(ccEdges(spark, dir), nodes, rounds)
-    val out = labels
+    s.pin(labels
       .withColumn("community_size", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("label"))))
       .select(col("id").as("node"), col("label").as("community"),
         col("community_size"))
-      .orderBy(col("node"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(labels)
-    out
+      .orderBy(col("node")))
   }
 
   /** [[labelProp]]'s kernel over ANY undirected edge/node frame —
     * (src, dst) pairs in either orientation plus an `id` node spine —
     * shared with the semantic-community composition over the mutual
     * k-NN graph ([[Similarity.semanticCommunities]]). Returns the
-    * final checkpointed (id, label) frame; the caller formats and
-    * releases it. */
+    * final pinned (id, label) frame, handed over to the caller. */
   private[graft] def labelPropOver(edges0: DataFrame, nodes: DataFrame,
-                                   rounds: Int): DataFrame = {
+                                   rounds: Int): DataFrame = Pins.scope { s =>
     require(rounds >= 1)
     // NOTE (r21): a one-lazy-plan variant (self-vote as self-loop
     // edges, single materializing action for all rounds) measured
@@ -455,12 +428,11 @@ object Graph {
     // warm) — the compounded 3-round plan loses the per-round stats
     // reset and re-derives the trajectory per consumer reference — so
     // the per-round eager checkpoint form stays.
-    val edges = edges0.select(col("src"), col("dst"))
+    val edges = s.pin(edges0.select(col("src"), col("dst"))
       .union(edges0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .repartition(col("dst"))
-      .localCheckpoint()
-    var labels = nodes.withColumn("label", col("id")).localCheckpoint()
+      .repartition(col("dst")))
+    var labels = s.pin(nodes.withColumn("label", col("id")))
     for (_ <- 1 to rounds) {
       val votes = edges
         .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
@@ -468,14 +440,11 @@ object Graph {
         .unionByName(labels)
         .groupBy(col("id"), col("label"))
         .agg(count(lit(1)).as("c"))
-      val next = votes.groupBy(col("id"))
+      val next = s.pin(votes.groupBy(col("id"))
         .agg(max_by(col("label"),
-          struct(col("c"), (-col("label")).as("t"))).as("label"))
-        .localCheckpoint()
-      SparkBridge.unpersistCheckpoint(labels)
-      labels = next
+          struct(col("c"), (-col("label")).as("t"))).as("label")))
+      labels = s.advance(labels, next)
     }
-    SparkBridge.unpersistCheckpoint(edges)
     labels
   }
 
@@ -529,7 +498,7 @@ object Graph {
     * friendly, the edge total a one-row broadcast scalar; nothing
     * sorts or broadcasts a corpus-sized side. */
   def modularity(spark: SparkSession, dir: String,
-                 rounds: Int = 3): DataFrame = {
+                 rounds: Int = 3): DataFrame = Pins.scope { s =>
     val nodes = Tables.supplier(spark, dir).select(col("s_suppkey").as("id"))
     val edges = ccEdges(spark, dir)
     val labels = labelPropOver(edges, nodes, rounds)
@@ -553,13 +522,12 @@ object Graph {
     // failing — GraphSpec's integer recompute derives m from the RAW
     // undirected edge set and asserts every q_frac against it, so a
     // lab/und divergence fails the suite, not just the oracle.
-    val lab = edges
+    val lab = s.pin(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("w"))
       .filter(col("u") =!= col("w")).distinct()
       .join(lu, Seq("u")).join(lw, Seq("w"))
-      .select(col("lu"), col("lw"))
-      .localCheckpoint()
+      .select(col("lu"), col("lw")))
     val mEdges = lab.agg(count(lit(1)).as("m"))
     val ein = lab.filter(col("lu") === col("lw"))
       .groupBy(col("lu").as("community")).agg(count(lit(1)).as("e_in"))
@@ -568,7 +536,7 @@ object Graph {
       .groupBy(col("community")).agg(count(lit(1)).as("d_tot"))
     val sizes = labels.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
-    val out = sizes.join(dtot, Seq("community"), "left")
+    s.pin(sizes.join(dtot, Seq("community"), "left")
       .join(ein, Seq("community"), "left")
       .crossJoin(broadcast(mEdges))
       .select(col("community"), col("n_nodes"),
@@ -581,11 +549,7 @@ object Graph {
           * 1000000.0 + 0.5) / 1000000.0)
       .select(col("community"), col("n_nodes"), col("e_in"),
         col("d_tot"), col("q_frac"))
-      .orderBy(col("community"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(labels)
-    SparkBridge.unpersistCheckpoint(lab)
-    out
+      .orderBy(col("community")))
   }
 
   /** Unrolled oracle for [[modularity]]: [[labelPropOracle]]'s CTE
@@ -730,12 +694,12 @@ object Graph {
       .filter(col("u") =!= col("w")).distinct()
   }
 
-  def triangles(spark: SparkSession, dir: String): DataFrame = {
+  def triangles(spark: SparkSession, dir: String): DataFrame = Pins.scope { s =>
     // pin the edge list (edge-sized, the kcore/jaccardLinks bound):
     // und is referenced three times and triEdges is a multi-branch
     // union — unpinned, the closed-form edge set re-derives per
     // reference
-    val und = triEdges(spark, dir).localCheckpoint()
+    val und = s.pin(triEdges(spark, dir))
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("w").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -753,11 +717,10 @@ object Graph {
       (col("du") === col("dw") && col("u") < col("w"))
     // pinned: oriented feeds BOTH wedge sides and the closing join —
     // three references that would each re-run the degree joins
-    val oriented = withDeg.select(
+    val oriented = s.pin(withDeg.select(
       when(lowIsU, col("u")).otherwise(col("w")).as("osrc"),
       when(lowIsU, col("w")).otherwise(col("u")).as("odst"),
-      when(lowIsU, col("dw")).otherwise(col("du")).as("ddst"))
-      .localCheckpoint()
+      when(lowIsU, col("dw")).otherwise(col("du")).as("ddst")))
     val o1 = oriented.select(col("osrc"), col("odst").as("d1"), col("ddst").as("g1"))
     val o2 = oriented.select(col("osrc"), col("odst").as("d2"), col("ddst").as("g2"))
     val wedges = o1.join(o2.hint("SHUFFLE_HASH"), Seq("osrc"))
@@ -777,14 +740,10 @@ object Graph {
       .union(tri.select(col("clo").as("node")))
       .union(tri.select(col("chi").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("n"))
-    val out = Tables.supplier(spark, dir).select(col("s_suppkey").as("node"))
+    s.pin(Tables.supplier(spark, dir).select(col("s_suppkey").as("node"))
       .join(corners.hint("SHUFFLE_HASH"), Seq("node"), "left")
       .select(col("node"), coalesce(col("n"), lit(0L)).as("n_tri"))
-      .orderBy(col("node"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(oriented)
-    SparkBridge.unpersistCheckpoint(und)
-    out
+      .orderBy(col("node")))
   }
 
   /** k-core decomposition at fixed k over the triangle graph
@@ -803,15 +762,13 @@ object Graph {
     * no set-compare job). Rounds are the peel avalanche's own depth;
     * the loop THROWS past maxIter (an under-peeled core is wrong, not
     * slow), and every round boundary resets propagated stats and
-    * releases the superseded checkpoint (the iterative-loop
-    * discipline — see SparkBridge.dropOriginStats). */
+    * releases the superseded checkpoint ([[graft.functions.Pins]]). */
   def kcore(spark: SparkSession, dir: String, k: Int = 4,
-            maxIter: Int = 12): DataFrame = {
+            maxIter: Int = 12): DataFrame = Pins.scope { s =>
     require(k >= 1 && maxIter >= 1)
-    val und = triEdges(spark, dir).localCheckpoint()
-    var alive = und.select(col("u").as("node"))
-      .union(und.select(col("w").as("node"))).distinct()
-      .localCheckpoint()
+    val und = s.pin(triEdges(spark, dir))
+    var alive = s.pin(und.select(col("u").as("node"))
+      .union(und.select(col("w").as("node"))).distinct())
     var aliveN = alive.count()
     var coreDeg: DataFrame = null // (node, deg) of the current alive set
     var converged = false
@@ -823,10 +780,9 @@ object Graph {
       val deg = e.select(col("u").as("node"))
         .union(e.select(col("w").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-      val next = deg.filter(col("core_deg") >= k).localCheckpoint()
+      val next = s.pin(deg.filter(col("core_deg") >= k))
       val nextN = next.count()
-      SparkBridge.unpersistCheckpoint(alive)
-      alive = SparkBridge.dropOriginStats(next)
+      alive = s.advance(alive, next)
       converged = nextN == aliveN
       aliveN = nextN
       coreDeg = alive
@@ -835,15 +791,11 @@ object Graph {
     if (!converged)
       throw new IllegalStateException(
         s"k-core did not reach fixpoint in $maxIter rounds")
-    val out = Tables.supplier(spark, dir).select(col("s_suppkey").as("node"))
+    s.pin(Tables.supplier(spark, dir).select(col("s_suppkey").as("node"))
       .join(coreDeg.hint("shuffle_hash"), Seq("node"), "left")
       .select(col("node"), col("core_deg").isNotNull.as("in_core"),
         col("core_deg"))
-      .orderBy(col("node"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(coreDeg)
-    SparkBridge.unpersistCheckpoint(und)
-    out
+      .orderBy(col("node")))
   }
 
   /** Unrolled peeling oracle for [[kcore]]: `rounds` fixed peel steps
@@ -938,13 +890,13 @@ object Graph {
     * Top-N is a k-sized ordered limit on the ROUNDED score with (a, b)
     * tie-break, so the cut is deterministic both engines. */
   def jaccardLinks(spark: SparkSession, dir: String,
-                   topN: Int = 20): DataFrame = {
+                   topN: Int = 20): DataFrame = Pins.scope { s =>
     // pin the edge list once (edge-sized — the minLabelComponents
     // bound): und is referenced THREE times (both adj orientations +
     // the non-edge anti-join) and triEdges is itself a multi-branch
     // union, so unpinned the plan re-derived the closed-form edge set
     // per reference — 84 parquet scans in the r22 before-plan
-    val und = triEdges(spark, dir).localCheckpoint()
+    val und = s.pin(triEdges(spark, dir))
     val adj = und.select(col("u").as("node"), col("w").as("nbr"))
       .unionByName(und.select(col("w").as("node"), col("u").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -956,7 +908,7 @@ object Graph {
           struct(x.as("a"), y.as("b")))))).as("pr"))
       .groupBy(col("pr.a").as("a"), col("pr.b").as("b"))
       .agg(count(lit(1)).as("common"))
-    val out = pairs
+    s.pin(pairs
       .join(und.select(col("u").as("a"), col("w").as("b")), Seq("a", "b"),
         "left_anti")
       .join(deg.select(col("node").as("a"), col("deg").as("da"))
@@ -967,10 +919,7 @@ object Graph {
         (floor(col("common") / (col("da") + col("db") - col("common"))
           * 10000.0 + 0.5) / 10000.0).as("jaccard"))
       .orderBy(col("jaccard").desc, col("a"), col("b"))
-      .limit(topN)
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(und)
-    out
+      .limit(topN))
   }
 
   /** DuckDB restatement of [[jaccardLinks]] — the wedge enumeration as

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Pins
 
 /** Relational core: the reference's DB-layer query shapes re-expressed as
   * declarative Spark plans (ram-analysis/app/index.js:200-339 — select /
@@ -620,7 +621,7 @@ object Relational {
   val BasketCap = 200
   val PopularParts = 200
   def q34MarketBasket(spark: SparkSession, dir: String,
-                      topN: Int = 20): DataFrame = {
+                      topN: Int = 20): DataFrame = Pins.scope { s =>
     // pinned: cp (the distinct customer-part incidence) feeds BOTH the
     // popularity cut and the basket gather — unpinned, the
     // orders x lineitem join + distinct ran once per reference (two
@@ -628,13 +629,12 @@ object Relational {
     // REDUCED distinct set (far smaller than the fact table), which is
     // also the right 100 TB plan: materialize the working set once
     // rather than re-shuffling raw lineitem per consumer.
-    val cp = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
+    val cp = s.pin(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_partkey")),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val popular = cp.groupBy(col("p"))
       .agg(count(lit(1)).as("n_cust"))
       .orderBy(col("n_cust").desc, col("p"))
@@ -744,7 +744,7 @@ object Relational {
     * resolution x block span (<= 3600 netted rows per hour at second
     * resolution), never by corpus size. */
   private[graft] def q37ConcurrencyOf(ev: DataFrame,
-                                      sessionMin: Int): DataFrame = {
+                                      sessionMin: Int): DataFrame = Pins.scope { s =>
     import org.apache.spark.sql.graftbridge.SparkBridge
     // one generator, ONE scan: the union form read events twice
     val deltas = ev.select(col("etype"), explode(array(
@@ -756,11 +756,10 @@ object Relational {
     // runs, block offsets, and through them the curve) — checkpoint it
     // once instead of recomputing scan+generate+agg per consumer
     // (measured 8 scans / 16 exchanges without; 1 scan with)
-    val net = SparkBridge.dropOriginStats(deltas
+    val net = SparkBridge.dropOriginStats(s.pin(deltas
       .groupBy(col("etype"), col("t"))
       .agg(sum(col("d")).as("dd"))
-      .withColumn("blk", date_trunc("hour", col("t")))
-      .localCheckpoint())
+      .withColumn("blk", date_trunc("hour", col("t")))))
     val wIn = Window.partitionBy(col("etype"), col("blk")).orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = net.withColumn("run", sum(col("dd")).over(wIn))
@@ -771,10 +770,9 @@ object Relational {
       .withColumn("off", coalesce(sum(col("bs")).over(wBlk), lit(0L)))
       .select(col("etype"), col("blk"), col("off"))
     // the curve feeds both the per-type max and the first-reach filter
-    val conc = SparkBridge.dropOriginStats(
+    val conc = SparkBridge.dropOriginStats(s.pin(
       local.join(broadcast(offsets), Seq("etype", "blk"))
-        .select(col("etype"), col("t"), (col("off") + col("run")).as("conc"))
-        .localCheckpoint())
+        .select(col("etype"), col("t"), (col("off") + col("run")).as("conc"))))
     val mx = conc.groupBy(col("etype")).agg(max(col("conc")).as("max_conc"))
     conc.join(broadcast(mx), Seq("etype"))
       .filter(col("conc") === col("max_conc"))
@@ -940,12 +938,12 @@ object Relational {
     * co-partitioned on the order key; the supplier rollup and top-N
     * are k-sized. Date arithmetic is integer-day, tie-broken top-N. */
   def q40NestedExists(spark: SparkSession, dir: String,
-                      lateDays: Int = 60, topN: Int = 10): DataFrame = {
+                      lateDays: Int = 60, topN: Int = 10): DataFrame = Pins.scope { s =>
     import org.apache.spark.sql.graftbridge.SparkBridge
     // the narrow (orderkey, suppkey, late) join result feeds BOTH the
     // per-order stats and the candidate cut — checkpoint the 3-column
     // frame once instead of running the lineitem x orders join twice
-    val li = SparkBridge.dropOriginStats(Tables.lineitem(spark, dir)
+    val li = SparkBridge.dropOriginStats(s.pin(Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
       .join(Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_orderdate"))
@@ -953,8 +951,7 @@ object Relational {
         col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey"), col("l_suppkey"),
         (datediff(col("l_shipdate").cast("date"),
-          col("o_orderdate").cast("date")) > lateDays).as("late"))
-      .localCheckpoint())
+          col("o_orderdate").cast("date")) > lateDays).as("late"))))
     val stats = li.groupBy(col("l_orderkey"))
       .agg(countDistinct(col("l_suppkey")).as("ns"),
         countDistinct(when(col("late"), col("l_suppkey"))).as("nls"))

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SparkBridge
 import graft.Tables
 import graft.functions.GeoFunctions._
+import graft.functions.Pins
 
 /** Road-network travel times — the true OSRM `table` semantics.
   *
@@ -19,10 +19,10 @@ import graft.functions.GeoFunctions._
   *
   * Scale posture: per round, the frontier `dist` frame joins the edge
   * table on the edge's source node — one equi-join + one (src, node)
-  * min-aggregation, both partial-agg friendly; `localCheckpoint`
-  * truncates lineage each round and the superseded round's blocks are
-  * unpersisted immediately. Hop count is part of the QUERY SEMANTICS
-  * (OSRM's table is distance-bounded the same way the reference caps
+  * min-aggregation, both partial-agg friendly; each round is pinned
+  * (lineage truncated) and the superseded round released at the round
+  * boundary ([[graft.functions.Pins]]). Hop count is part of the QUERY
+  * SEMANTICS (OSRM's table is distance-bounded the same way the reference caps
   * its POI buffer search), so the loop is a fixed `hops` rounds — no
   * convergence probe jobs. At 100 TB the dist frame shards by
   * (src, node) across executors; nothing ever collects to the driver.
@@ -84,35 +84,25 @@ object Routing {
     * ((src, dst, w) directed, weights in seconds) from the supplier-key
     * source set. */
   private def routeEtaOver(spark: SparkSession, dir: String,
-                           edgeFrame: DataFrame, hops: Int): DataFrame = {
+      edgeFrame: DataFrame, hops: Int): DataFrame = Pins.scope { s =>
     require(hops >= 1)
-    val edges = edgeFrame
-      .withColumnRenamed("src", "esrc")
-      .localCheckpoint()
-    var dist = Tables.supplier(spark, dir)
+    val edges = s.pin(edgeFrame.withColumnRenamed("src", "esrc"))
+    var dist = s.pin(Tables.supplier(spark, dir)
       .filter(col("s_suppkey") % 41 === 1)
       .select(col("s_suppkey").as("src"), col("s_suppkey").as("node"),
-        lit(0.0).as("d"))
-      .localCheckpoint()
+        lit(0.0).as("d")))
     for (_ <- 1 to hops) {
       val relaxed = dist.join(edges, dist("node") === edges("esrc"))
         .select(dist("src"), edges("dst").as("node"),
           (col("d") + col("w")).as("d"))
-      val next = dist.unionByName(relaxed)
-        .groupBy(col("src"), col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint()
-      SparkBridge.unpersistCheckpoint(dist)
-      // reset propagated stats at the round boundary (the iterative-loop
-      // stats-compounding hazard — see SparkBridge.dropOriginStats)
-      dist = SparkBridge.dropOriginStats(next)
+      dist = s.advance(dist, s.pin(dist.unionByName(relaxed)
+        .groupBy(col("src"), col("node")).agg(min(col("d")).as("d"))))
     }
-    // result is the final frontier itself (output-sized, already
-    // pinned); release the edge table now that the rounds are done
-    val out = dist
+    // the result reads the final frontier (output-sized, already
+    // pinned); the edge table is released at scope exit
+    dist
       .select(col("src"), col("node"), round(col("d"), 4).as("eta_s"))
       .orderBy(col("src"), col("node"))
-    SparkBridge.unpersistCheckpoint(edges)
-    out
   }
 
   /** Routed nearest-POI ETA: the row-min the reference takes over the

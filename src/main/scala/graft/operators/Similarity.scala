@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SparkBridge
 import graft.Tables
+import graft.functions.Pins
 import graft.functions.TopK.top_k_by_score
 import graft.functions.VectorFunctions.{cosine_sim, dot_product, vec_norm}
 
@@ -381,9 +382,9 @@ object Similarity {
     * counts and one frac4. */
   def nprobeSweep(spark: SparkSession, dir: String, k: Int = K,
                   nQueries: Int = NQueries, nCells: Int = 16,
-                  probes: Seq[Int] = Seq(1, 2, 4, 8, 16)): DataFrame = {
-    val truth = bruteTopK(spark, dir, k, nQueries)
-      .select(col("qid"), col("cid")).localCheckpoint()
+                  probes: Seq[Int] = Seq(1, 2, 4, 8, 16)): DataFrame = Pins.scope { s =>
+    val truth = s.pin(bruteTopK(spark, dir, k, nQueries)
+      .select(col("qid"), col("cid")))
     val e = emb(spark, dir)
     val seeds = e.filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cluster_id"), col("embedding").as("se"))
@@ -393,26 +394,24 @@ object Similarity {
     // own ivfTopK call: 5 redundant corpus passes whose plans are
     // bit-identical; the checkpointed assignment is the same frame, so
     // each arm's rows are unchanged)
-    val assigned = assignToSeeds(e, seeds)
+    val assigned = s.pin(assignToSeeds(e, seeds)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("cluster_id").as("cell"))
-      .localCheckpoint()
-    val cellSz = assigned
+        col("cluster_id").as("cell")))
+    val cellSz = s.pin(assigned
       .groupBy(col("cell"))
-      .agg(count(lit(1)).as("csz")).localCheckpoint()
+      .agg(count(lit(1)).as("csz")))
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val pw = Window.partitionBy(col("qid"))
       .orderBy(col("_c").desc, col("cell"))
     // probe ranking computed once WITH the query vector attached: each
     // arm below is a prn filter + one cell-keyed join + the k-heap
-    val probeRanks = q
+    val probeRanks = s.pin(q
       .join(broadcast(seeds.withColumnRenamed("cluster_id", "cell")))
       .select(col("qid"), col("qe"), col("cell"),
         cosine_sim(col("qe"), col("se")).as("_c"))
       .withColumn("prn", row_number().over(pw))
-      .select(col("qid"), col("qe"), col("cell"), col("prn"))
-      .localCheckpoint()
+      .select(col("qid"), col("qe"), col("cell"), col("prn")))
     val arms = probes.map { p =>
       // identical rows to ivfTopK(..., nProbe = p): same probe window
       // (cos desc, cell), same cell-keyed candidate join, same k-heap
@@ -434,13 +433,7 @@ object Similarity {
             * 10000.0 + 0.5) / 10000.0).as("mean_recall"),
           col("n_scanned"))
     }
-    val out = arms.reduce(_ unionByName _).orderBy(col("nprobe"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(truth)
-    SparkBridge.unpersistCheckpoint(assigned)
-    SparkBridge.unpersistCheckpoint(cellSz)
-    SparkBridge.unpersistCheckpoint(probeRanks)
-    out
+    s.pin(arms.reduce(_ unionByName _).orderBy(col("nprobe")))
   }
 
   /** DuckDB restatement of [[nprobeSweep]]: the ann_recall_eval CTE
@@ -761,20 +754,19 @@ object Similarity {
   def hybridRrf(spark: SparkSession, dir: String, k: Int = K,
                 nQueries: Int = NQueries, k1: Double = 1.25,
                 b: Double = 0.75, rrfK: Int = 60, nLex: Int = 20,
-                nSem: Int = 20): DataFrame = {
+                nSem: Int = 20): DataFrame = Pins.scope { s =>
     val docs = Tables.documents(spark, dir)
     // pinned: tf is the BM25 index frame (term-posting-sized, the
     // standing index a serving deployment persists) and it feeds BOTH
     // the df aggregate and the postings join — unpinned, the
     // tokenize+count+window chain evaluated once per reference (two
     // ~150-300 ms single-task stages in the r22 profile)
-    val tf = docs
+    val tf = s.pin(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
       .withColumn("dl",
-        sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
-      .localCheckpoint()
+        sum(col("tf")).over(Window.partitionBy(col("doc_id")))))
     // avgdl as an exact sum/count of integer lengths (order-free)
     val stats = docs
       .select(size(split(col("text"), " ")).cast("long").as("n"))
@@ -1115,9 +1107,8 @@ object Similarity {
     // exchange regressed emb_neardup_prod 0.78 -> 1.17 s on a quiet box
     // — the probe path and per-band explode pay the exchange without
     // enough kernel behind it.
-    val e1 = e0
     if (r == nBits / bands && bandsUsed == bands)
-      e1.select(col("vec_id"),
+      e0.select(col("vec_id"),
           graft.functions.VectorFunctions
             .vec_simhash(col("embedding"), nBits).as("sig"))
         .select(col("vec_id"),
@@ -1133,7 +1124,7 @@ object Similarity {
       // only0 probe's single-band pool is bit-identical to the full
       // pool's band 0 (same conceptual bit indices) — the
       // measured-occupancy dispatch reads the same band it would run.
-      e1.select(col("vec_id"),
+      e0.select(col("vec_id"),
           posexplode(graft.functions.VectorFunctions
             .vec_simhash_pool(col("embedding"), r, nb)))
         .select(col("vec_id"),
@@ -1276,13 +1267,12 @@ object Similarity {
     * the next assignment join. Centroids carry their seed's id, so every
     * round's assignment stays joinable against the original seeding. */
   def kmeans(spark: SparkSession, dir: String, modulus: Int = 29,
-             iters: Int = 3): DataFrame = {
+             iters: Int = 3): DataFrame = Pins.scope { s =>
     require(iters >= 1, "kmeans needs at least one assignment round")
     val e = emb(spark, dir).select(col("vec_id"), col("embedding"))
     var centroids = e.filter(col("vec_id") % modulus === 0)
       .select(col("vec_id").as("cluster_id"), col("embedding").as("se"))
     var assigned: DataFrame = e
-    var prev: DataFrame = null
     for (round <- 1 to iters) {
       assigned = assignToSeeds(e, centroids)
       if (round < iters) {
@@ -1290,25 +1280,16 @@ object Similarity {
         // lineage the caller's action executes is one assignment round
         // deep — not iters nested join+agg rounds whose analysis cost
         // grows with the loop and whose recompute after block loss
-        // replays the whole history. Superseded checkpoints release
-        // immediately (the SparkBridge.unpersistCheckpoint discipline).
-        centroids = assigned
+        // replays the whole history. The superseded round is released
+        // at the round boundary.
+        centroids = s.advance(centroids, s.pin(assigned
           .select(col("cluster_id"), posexplode(col("embedding")))
           .groupBy(col("cluster_id"), col("pos"))
           .agg(avg(col("col")).as("v"))
           .groupBy(col("cluster_id"))
           .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pv"))
           .select(col("cluster_id"),
-            transform(col("pv"), x => x.getField("v").cast("float")).as("se"))
-          .localCheckpoint()
-        // reset propagated stats at the round boundary (the
-        // iterative-loop stats-compounding hazard — see
-        // SparkBridge.dropOriginStats)
-        centroids = org.apache.spark.sql.graftbridge.SparkBridge
-          .dropOriginStats(centroids)
-        if (prev != null)
-          org.apache.spark.sql.graftbridge.SparkBridge.unpersistCheckpoint(prev)
-        prev = centroids
+            transform(col("pv"), x => x.getField("v").cast("float")).as("se"))))
       }
     }
     // avg_cos rounded: the float cast in the centroid update swallows
@@ -1335,21 +1316,18 @@ object Similarity {
     * O(log diameter) rounds; the final verdict is one window-free
     * projection. */
   def semanticDedup(spark: SparkSession, dir: String,
-                    tau: Double = 0.35): DataFrame = {
+                    tau: Double = 0.35): DataFrame = Pins.scope { s =>
     val pairs = semanticPairs(spark, dir, tau).select(col("va"), col("vb"))
     val labels = Graph.minLabelComponents(
       pairs, emb(spark, dir).select(col("vec_id")))
     // dispatch provenance IN the hash (r16 verdict #8)
     val (arm, candFrac, designRecall) = semanticDispatch(tau)
-    val out = labels
+    s.pin(labels
       .select(col("id").as("vec_id"), col("label").as("cluster"),
         (col("id") === col("label")).as("survivor"),
         lit(arm).as("pair_arm"), lit(candFrac).as("cand_frac"),
         lit(designRecall).as("design_recall"))
-      .orderBy(col("vec_id"))
-      .localCheckpoint()
-    org.apache.spark.sql.graftbridge.SparkBridge.unpersistCheckpoint(labels)
-    out
+      .orderBy(col("vec_id")))
   }
 
   /** Charikar bit-agreement probability: a random hyperplane bit agrees
@@ -1967,19 +1945,16 @@ object Similarity {
     * window-free survivor projection. */
   def prodDedupChecked(spark: SparkSession, dir: String,
                        tau: Double = 0.9,
-                       targetOcc: Long = 1024): DataFrame = {
+                       targetOcc: Long = 1024): DataFrame = Pins.scope { s =>
     val (corpus, pairs, plan) =
       prodDerivedPairs(spark, dir, tau, targetOcc = targetOcc)
     val labels = Graph.minLabelComponents(
       pairs.select(col("va"), col("vb")), corpus.select(col("vec_id")))
-    val out = labels
+    s.pin(labels
       .select(Seq(col("id").as("vec_id"), col("label").as("cluster"),
         (col("id") === col("label")).as("survivor")) ++
         prodProvCols(plan): _*)
-      .orderBy(col("vec_id"))
-      .localCheckpoint()
-    org.apache.spark.sql.graftbridge.SparkBridge.unpersistCheckpoint(labels)
-    out
+      .orderBy(col("vec_id")))
   }
 
   /** DuckDB restatement of [[prodDedupChecked]]: derived corpus +
@@ -2260,7 +2235,7 @@ object Similarity {
     * Scale posture: inherits the knn arms'; each LPA round is one
     * edge-keyed equi-join + two hash aggs over edge-sized frames. */
   def semanticCommunities(spark: SparkSession, dir: String, k: Int = K,
-                          rounds: Int = 3): DataFrame = {
+                          rounds: Int = 3): DataFrame = Pins.scope { s =>
     // mutualKnn is a persisted artifact: labelPropOver's symmetrizing
     // union re-reads the edge-list parquet per branch (cheap stable
     // scans) instead of re-running the pair kernel
@@ -2268,15 +2243,12 @@ object Similarity {
       .select(col("va").as("src"), col("vb").as("dst"))
     val nodes = emb(spark, dir).select(col("vec_id").as("id"))
     val labels = Graph.labelPropOver(knn, nodes, rounds)
-    val out = labels
+    s.pin(labels
       .withColumn("community_size", count(lit(1))
         .over(Window.partitionBy(col("label"))))
       .select(col("id").as("vec_id"), col("label").as("community"),
         col("community_size"))
-      .orderBy(col("vec_id"))
-      .localCheckpoint()
-    org.apache.spark.sql.graftbridge.SparkBridge.unpersistCheckpoint(labels)
-    out
+      .orderBy(col("vec_id")))
   }
 
   /** SEMANTIC CENTRALITY — degree-normalized PageRank over the mutual
@@ -2300,8 +2272,7 @@ object Similarity {
     * loop shape; rank frames node-sized, superseded checkpoints
     * released. */
   def centrality(spark: SparkSession, dir: String, k: Int = K,
-                 iters: Int = 6): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SparkBridge
+                 iters: Int = 6): DataFrame = Pins.scope { s =>
     // mutualKnn is a persisted artifact: the three references (the
     // symmetrizing union's two branches + the degree join) are three
     // scans of the edge-list parquet, not three pair-kernel runs (the
@@ -2311,34 +2282,27 @@ object Similarity {
     val deg0 = m.select(col("va").as("esrc"), col("vb").as("dst"))
       .unionByName(m.select(col("vb").as("esrc"), col("va").as("dst")))
     val deg = deg0.groupBy(col("esrc")).agg(count(lit(1)).as("deg"))
-    val edges = deg0.join(deg, Seq("esrc"))
-      .repartition(col("esrc")).localCheckpoint()
+    val edges = s.pin(deg0.join(deg, Seq("esrc"))
+      .repartition(col("esrc")))
     val nodes = emb(spark, dir).select(col("vec_id").as("node"))
-    var ranks = nodes.withColumn("r", lit(1.0)).localCheckpoint()
+    var ranks = s.pin(nodes.withColumn("r", lit(1.0)))
     for (_ <- 1 to iters) {
       val inbound = ranks.join(edges, ranks("node") === edges("esrc"))
         .select(col("dst").as("node"),
           floor(col("r") / col("deg") * lit(16777216.0) + lit(0.5)).as("cq"))
         .groupBy(col("node"))
         .agg((sum(col("cq")).cast("double") / lit(16777216.0)).as("m"))
-      val next = nodes.join(inbound, Seq("node"), "left_outer")
+      val next = s.pin(nodes.join(inbound, Seq("node"), "left_outer")
         .select(col("node"),
-          (lit(0.25) + lit(0.75) * coalesce(col("m"), lit(0.0))).as("r"))
-        .localCheckpoint()
-      SparkBridge.unpersistCheckpoint(ranks)
-      ranks = SparkBridge.dropOriginStats(next)
+          (lit(0.25) + lit(0.75) * coalesce(col("m"), lit(0.0))).as("r")))
+      ranks = s.advance(ranks, next)
     }
-    val out = ranks
+    s.pin(ranks
       .join(deg.withColumnRenamed("esrc", "node"), Seq("node"), "left_outer")
       .select(col("node").as("vec_id"),
         coalesce(col("deg"), lit(0L)).as("degree"),
         (floor(col("r") * 10000.0 + 0.5) / 10000.0).as("pr"))
-      .orderBy(col("vec_id"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(ranks)
-    SparkBridge.unpersistCheckpoint(edges)
-    SparkBridge.unpersistCheckpoint(m)
-    out
+      .orderBy(col("vec_id")))
   }
 
   /** DuckDB restatement of [[centrality]]: the knn chain spliced into
@@ -2533,7 +2497,7 @@ object Similarity {
     * BROADCAST; each stage is one map-side scoring pass into a
     * per-vector min_by — raw vectors never shuffle. */
   def rqCodes(spark: SparkSession, dir: String, seed1: Int = 31,
-              seed2: Int = 37): DataFrame = {
+              seed2: Int = 37): DataFrame = Pins.scope { s =>
     import graft.functions.VectorFunctions.l2_dist
     val e = emb(spark, dir).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
@@ -2552,10 +2516,9 @@ object Similarity {
         col("b.w").as("cw1"))
     // the residual frame feeds the stage-2 codebook, the stage-2 scan,
     // AND the final assembly — checkpoint once so stage 1 runs once
-    val res = a1.join(e.hint("shuffle_hash"), Seq("vec_id"))
+    val res = s.pin(a1.join(e.hint("shuffle_hash"), Seq("vec_id"))
       .select(col("vec_id"), col("code1"), col("d1"),
-        zip_with(col("v"), col("cw1"), (a, b) => a - b).as("r"))
-      .localCheckpoint()
+        zip_with(col("v"), col("cw1"), (a, b) => a - b).as("r")))
     val cb2 = res.filter(col("vec_id") % seed2 === 0)
       .select(col("vec_id").as("c2"), col("r").as("w2"))
     val a2 = nearest(res, "r", cb2, "c2", "w2")
@@ -2612,13 +2575,12 @@ object Similarity {
     * [[pqTrainedCodes]] and [[ivfPqTrainedTopK]]. */
   private[graft] def trainedCodebook(e: DataFrame, subspaces: Int,
                                      subDim: Int, seedMod: Int,
-                                     trainRounds: Int): DataFrame = {
+                                     trainRounds: Int): DataFrame = Pins.scope { s =>
     import graft.functions.VectorFunctions.l2_dist
     require(trainRounds >= 1)
     // corpus-sized sub-vector kernel: fan out (see assignToSeeds)
     val vsub = subVectors(graft.Tables.fanOut(e), "vec_id", subspaces, subDim)
     var codebook = seedCodebook(e, subspaces, subDim, seedMod)
-    var prev: DataFrame = null
     for (_ <- 1 to trainRounds) {
       // assignment carries the sub-vector through so the update is one
       // explode + two partial aggs over (m, codeword, dim) cells
@@ -2629,7 +2591,7 @@ object Similarity {
         .agg(min_by(struct(col("sid"), col("dist"), col("sub")),
           struct(col("dist"), col("sid"))).as("b"))
         .select(col("m"), col("b.sid").as("sid"), col("b.sub").as("sub"))
-      codebook = assigned
+      codebook = s.advance(codebook, s.pin(assigned
         .select(col("m"), col("sid"), posexplode(col("sub")))
         .groupBy(col("m"), col("sid"), col("pos"))
         .agg(avg(col("col")).as("v"))
@@ -2639,13 +2601,7 @@ object Similarity {
         // l2 kernel sees the same array<float> type as the raw side
         // (values equal the oracle's REAL-rounded doubles)
         .select(col("m"), col("sid"),
-          transform(col("pv"), x => x.getField("v").cast("float")).as("ssub"))
-        .localCheckpoint()
-      codebook = org.apache.spark.sql.graftbridge.SparkBridge
-        .dropOriginStats(codebook)
-      if (prev != null)
-        org.apache.spark.sql.graftbridge.SparkBridge.unpersistCheckpoint(prev)
-      prev = codebook
+          transform(col("pv"), x => x.getField("v").cast("float")).as("ssub"))))
     }
     codebook
   }
@@ -3652,7 +3608,7 @@ object Similarity {
     * (which persists it as the serving graph artifact). See
     * [[nnDescent]] for the round mechanics and determinism contract. */
   private def nnDescentEdges(e: DataFrame, mk: Long, k: Int,
-                             iters: Int): DataFrame = {
+                             iters: Int): DataFrame = Pins.scope { s =>
     val init = e.select(col("v"),
         explode(array((1 to k).map(j => lit(j.toLong)): _*)).as("j"))
       .select(col("v"),
@@ -3662,7 +3618,7 @@ object Similarity {
         when(col("c0") === col("v"), (col("c0") + 1L) % (mk + 1L))
           .otherwise(col("c0")).as("cand"))
       .distinct()
-    var g = init.localCheckpoint(true)
+    var g = s.pin(init)
     for (_ <- 1 to iters) {
       val und = g.select(col("v"), col("cand").as("u"))
         .unionByName(g.select(col("cand").as("v"), col("v").as("u")))
@@ -3681,9 +3637,7 @@ object Similarity {
       val next = scored.groupBy(col("v"))
         .agg(top_k_by_score(col("cs"), col("cand"), k).as("top"))
         .select(col("v"), explode(col("top.id")).as("cand"))
-      val old = g
-      g = next.localCheckpoint(true)
-      old.unpersist()
+      g = s.advance(g, s.pin(next))
     }
     g
   }
@@ -3975,8 +3929,7 @@ object Similarity {
     * the seed is the minimum id present (a deterministic choice that
     * survives upstream filtering, e.g. the dedup-survivor composition
     * [[dedupDiversitySample]]). */
-  def diversitySampleOver(e: DataFrame, nCenters: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SparkBridge
+  def diversitySampleOver(e: DataFrame, nCenters: Int): DataFrame = Pins.scope { s =>
     require(nCenters >= 2)
     val spark = e.sparkSession
     import spark.implicits._
@@ -4001,11 +3954,10 @@ object Similarity {
       if (r0.isNullAt(0)) null else java.lang.Long.valueOf(r0.getLong(0))
     val c0v: Seq[Float] =
       if (r0.isNullAt(1)) null else r0.getSeq[Float](1)
-    var state = e
+    var state = s.pin(e
       .filter(col("vec_id") =!= lit(c0id))
       .select(col("vec_id"), col("embedding"),
-        cosine_sim(col("embedding"), vecLit(c0v)).as("maxsim"))
-      .localCheckpoint()
+        cosine_sim(col("embedding"), vecLit(c0v)).as("maxsim")))
     state = SparkBridge.dropOriginStats(state)
     val one = Seq(1).toDF("_one")
     val picks = scala.collection.mutable.ArrayBuffer[DataFrame](
@@ -4024,16 +3976,13 @@ object Similarity {
         if (cRow.isNullAt(2)) null else java.lang.Double.valueOf(cRow.getDouble(2))
       picks += one.select(lit(r).as("rk"), lit(cid).cast("bigint").as("vec_id"),
         round(lit(cms).cast("double"), 4).as("max_cos"))
-      val next = state
+      val next = s.pin(state
         .filter(col("vec_id") =!= lit(cid))
         .select(col("vec_id"), col("embedding"),
           greatest(col("maxsim"),
-            cosine_sim(col("embedding"), vecLit(cv))).as("maxsim"))
-        .localCheckpoint()
-      SparkBridge.unpersistCheckpoint(state)
-      state = SparkBridge.dropOriginStats(next)
+            cosine_sim(col("embedding"), vecLit(cv))).as("maxsim")))
+      state = s.advance(state, next)
     }
-    SparkBridge.unpersistCheckpoint(state)
     picks.reduce(_ unionByName _).orderBy(col("rk"))
   }
 

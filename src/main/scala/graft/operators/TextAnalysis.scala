@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{CappedSet, TextFunctions}
+import graft.functions.{CappedSet, Pins, TextFunctions}
 
 /** Text-analysis features over the `documents` table: quality scoring,
   * language-ID, token counting, fingerprinting — the standard pre-training
@@ -978,11 +978,9 @@ object TextAnalysis {
     * checkpointed; every section is a partial-agg rollup over it
     * (split/source cardinality-sized), raw totals are one scan, and
     * the section union is a handful of rows. */
-  def datasetCard(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SparkBridge
-    val e2e = llmE2e(spark, dir)
-      .select(col("split"), col("source"), col("n_tokens"))
-      .localCheckpoint()
+  def datasetCard(spark: SparkSession, dir: String): DataFrame = Pins.scope { s =>
+    val e2e = s.pin(llmE2e(spark, dir)
+      .select(col("split"), col("source"), col("n_tokens")))
     val raw = Tables.documents(spark, dir)
       .agg(count(lit(1)).as("raw_docs"),
         sum(size(toks)).cast("long").as("raw_tokens"))
@@ -1007,13 +1005,10 @@ object TextAnalysis {
           col("n_docs"), col("n_tokens"),
           (floor(col("n_docs") / col("kept_docs").cast("double")
             * 10000.0 + 0.5) / 10000.0).as("share"))
-    val out = corpus
+    s.pin(corpus
       .unionByName(sectionOf("split", "split"))
       .unionByName(sectionOf("source", "source"))
-      .orderBy(col("section"), col("key"))
-      .localCheckpoint()
-    SparkBridge.unpersistCheckpoint(e2e)
-    out
+      .orderBy(col("section"), col("key")))
   }
 
   /** DuckDB restatement of [[datasetCard]]: the [[llmE2e]] oracle's
@@ -1512,7 +1507,7 @@ object TextAnalysis {
     * type's nll snaps to an integer once, occ · int is exact, so the
     * mean is order-independent on any partitioning. */
   def perplexity(spark: SparkSession, dir: String,
-                 k: Double = 0.5): DataFrame = {
+                 k: Double = 0.5): DataFrame = Pins.scope { s =>
     val Q = 16777216.0 // 2^24
     // fan out (Tables.fanOut — identity at production scan widths): the
     // bigram explode is this key's heavy map kernel, and docs feeds
@@ -1534,12 +1529,10 @@ object TextAnalysis {
     // (r21 profile: this key's job time tripled its wall). One
     // materialization each; both frames are the compact count ladder
     // (docBg corpus-sized but 4 narrow columns, pairCnt type-sized).
-    val docBg = bi.groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("occ"))
-      .localCheckpoint()
-    val pairCnt = docBg.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("occ")).as("cb"))
-      .localCheckpoint()
+    val docBg = s.pin(bi.groupBy(col("doc_id"), col("w1"), col("w2"))
+      .agg(count(lit(1)).as("occ")))
+    val pairCnt = s.pin(docBg.groupBy(col("w1"), col("w2"))
+      .agg(sum(col("occ")).as("cb")))
     val uniCnt = pairCnt.groupBy(col("w1")).agg(sum(col("cb")).as("cu"))
     val pFrame = pairCnt.join(uniCnt, Seq("w1"))
       .crossJoin(broadcast(vocab))
@@ -1593,12 +1586,11 @@ object TextAnalysis {
     * histogram (one value-sized window), broadcast back as one-row
     * scalars, and bucket assignment is map-side. Ties share a value so
     * they share a bucket — value-determined, partitioning-independent. */
-  def pplBuckets(spark: SparkSession, dir: String): DataFrame = {
+  def pplBuckets(spark: SparkSession, dir: String): DataFrame = Pins.scope { s =>
     // the per-doc nll frame feeds the histogram, the doc count AND the
-    // final bucket projection — checkpoint once or the whole bigram-LM
-    // chain evaluates three times (the kmeans keep-the-live-checkpoint
-    // convention: the returned plan reads it)
-    val p = perplexity(spark, dir).localCheckpoint()
+    // final bucket projection — pin once or the whole bigram-LM chain
+    // evaluates three times (the returned plan reads it)
+    val p = s.pin(perplexity(spark, dir))
     val cum = p.groupBy(col("nll")).agg(count(lit(1)).as("c"))
       .withColumn("cc", sum(col("c")).over(Window.orderBy(col("nll"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -2075,14 +2067,16 @@ object TextAnalysis {
     * held-out eval: term-frequency x per (doc, md5-bucket), plus an
     * intercept pseudo-feature (b = -1, x = 1) — without it the model
     * has no bias term and can only rotate the boundary through the
-    * origin. localCheckpointed once; every GD round reuses it. */
-  private[graft] def classifierFeats(labeled: DataFrame): DataFrame = {
+    * origin. Pinned once (handed over to the caller); every GD round
+    * reuses it. */
+  private[graft] def classifierFeats(labeled: DataFrame): DataFrame =
+    Pins.scope { s =>
     val hex = "0123456789abcdef"
     val bkt = (expr(s"locate(substring(md5(cast(term as binary)), 1, 1), '$hex') - 1")
       * 16 +
       expr(s"locate(substring(md5(cast(term as binary)), 2, 1), '$hex') - 1"))
       .cast("bigint")
-    labeled
+    s.pin(labeled
       .select(col("doc_id"), col("y"), explode(split(col("text"), " ")).as("term"))
       .withColumn("b", bkt)
       .groupBy(col("doc_id"), col("y"), col("b"))
@@ -2091,8 +2085,7 @@ object TextAnalysis {
         / sum(col("cnt")).over(Window.partitionBy(col("doc_id"))))
       .select(col("doc_id"), col("y"), col("b"), col("x"))
       .unionByName(labeled.select(col("doc_id"), col("y"),
-        lit(-1L).as("b"), lit(1.0).as("x")))
-      .localCheckpoint()
+        lit(-1L).as("b"), lit(1.0).as("x"))))
   }
 
   /** The dyadic quantization grid shared by the classifier's sums:
@@ -2125,9 +2118,8 @@ object TextAnalysis {
     * grid ([[DyadicQ]]). nd is the intercept-row count — one row per
     * doc by construction. */
   private[graft] def classifierGd(feats: DataFrame, steps: Int,
-                                  lr: Double): DataFrame = {
+                                  lr: Double): DataFrame = Pins.scope { s =>
     val spark = feats.sparkSession
-    import org.apache.spark.sql.graftbridge.SparkBridge
     import spark.implicits._
     // The feature frame, hash-partitioned by doc_id ONCE and
     // checkpointed: every GD step is then a single whole-stage-codegen
@@ -2145,7 +2137,7 @@ object TextAnalysis {
     // the driver-side update w - lr*g is the identical double
     // expression — so the weight trajectory, and every downstream
     // logit, is bit-equal to the joined form.
-    val featsP = feats.repartition(col("doc_id")).localCheckpoint()
+    val featsP = s.pin(feats.repartition(col("doc_id")))
     // one job: distinct buckets AND the doc count (= the intercept
     // pseudo-feature's row count, exactly the old nd frame's value)
     val bCounts = featsP.groupBy(col("b")).agg(count(lit(1)).as("c"))
@@ -2181,9 +2173,7 @@ object TextAnalysis {
         wm(b) = wm(b) - lr * g
       }
     }
-    val w = wm.toSeq.toDF("b", "w")
-    SparkBridge.unpersistCheckpoint(featsP)
-    w
+    wm.toSeq.toDF("b", "w")
   }
 
   /** Interpolated KNESER-NEY bigram perplexity — the industry-standard

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SparkBridge
 import graft.Tables
+import graft.functions.Pins
 
 /** Warehouse-shaped operators the reference's DB layer implies but never
   * spells out: runtime-filtered fact scans, band (range) lookups, and
@@ -1362,9 +1363,8 @@ object Warehouse {
         minmaxAggView(SnapshotLog.read(spark, srcPath, Some(0))), viewPath,
         "grp")
     SnapshotLog.followDiff(spark, srcPath, "key", app) { (feed, v) =>
-      if (SnapshotLog.lastTxnVersion(viewPath, app).forall(_ < v)) {
-        val d = minmaxDecide(feed, SnapshotLog.read(spark, viewPath))
-          .localCheckpoint(true)
+      if (SnapshotLog.lastTxnVersion(viewPath, app).forall(_ < v)) Pins.scope { s =>
+        val d = s.pin(minmaxDecide(feed, SnapshotLog.read(spark, viewPath)))
         // evicted groups re-aggregate from the source AT THE FEED'S
         // version, selected by a broadcast LEFT-SEMI join against the
         // eviction frame — never a collect: a feed that evicts every
@@ -1390,7 +1390,6 @@ object Warehouse {
           incr.unionByName(rescanned).unionByName(emptied)
             .withColumn("_del", col("cnt") === 0L),
           viewPath, "grp", "_del", txn = Some((app, v)))
-        d.unpersist()
         ()
       }
     }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.Pins
 
 /** Shared-storage registry for FIT-ONCE model artifacts (PQ codebooks,
   * PCA eigenvectors, kNN graphs): a configurable root written and read
@@ -128,7 +129,8 @@ object ModelStore {
       val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tmp = new org.apache.hadoop.fs.Path(
         s"$path.__tmp-${java.util.UUID.randomUUID()}")
-      fit.write.mode("overwrite").parquet(tmp.toString)
+      // the fit's pins end with the write: the artifact is read back
+      Pins.scope { _ => fit.write.mode("overwrite").parquet(tmp.toString) }
       if (isFitted(spark, name)) {
         // a concurrent fitter published while we were fitting: keep the
         // winner, discard our run

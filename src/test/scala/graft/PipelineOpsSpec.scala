@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.Pins
 import graft.operators.{Similarity, TextAnalysis}
 
 /** Training-data pipeline operators added in round 3: sequence packing,
@@ -301,32 +302,38 @@ class PipelineOpsSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 5 =!= 4)
     val arrivingAll = docs.filter(col("doc_id") % 5 === 4)
-    val index = operators.Dedup.corpusLshIndex(corpus).localCheckpoint()
-    val ids = arrivingAll.select(col("doc_id")).as[Long].collect().sorted
-    val (b1, b2) = ids.splitAt(ids.length / 2)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[Long]
-    val got = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
-    val q = ms.toDS().writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Long], _: Long) =>
-        val arrived = docs.join(b.toDF("doc_id"), Seq("doc_id"), "left_semi")
-        got.synchronized {
-          got ++= operators.Dedup.classifyBatch(spark, sf, index, arrived, 0.8)
-            .collect().map(_.toSeq)
+    // the test owns the index pin; each micro-batch's own pins end with
+    // its batch, as a streaming caller's should
+    Pins.scope { s =>
+      val index = s.pin(operators.Dedup.corpusLshIndex(corpus))
+      val ids = arrivingAll.select(col("doc_id")).as[Long].collect().sorted
+      val (b1, b2) = ids.splitAt(ids.length / 2)
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val ms = MemoryStream[Long]
+      val got = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val q = ms.toDS().writeStream
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[Long], _: Long) =>
+          val arrived = docs.join(b.toDF("doc_id"), Seq("doc_id"), "left_semi")
+          val verdicts = Pins.scope { _ =>
+            operators.Dedup.classifyBatch(spark, sf, index, arrived, 0.8).collect()
+          }
+          got.synchronized { got ++= verdicts.map(_.toSeq) }
+          ()
         }
-        ()
-      }
-      .start()
-    try {
-      ms.addData(b1.toIndexedSeq); q.processAllAvailable()
-      ms.addData(b2.toIndexedSeq); q.processAllAvailable()
-    } finally { q.stop() }
-    val full = operators.Dedup.incrementalMinhash(spark, sf)
-      .collect().map(_.toSeq).toSet
-    assert(got.size == ids.length, "one verdict per arriving doc")
-    assert(got.toSet == full,
-      "streamed micro-batch verdicts must equal the one-shot batch run")
-    org.apache.spark.sql.graftbridge.SparkBridge.unpersistCheckpoint(index)
+        .start()
+      try {
+        ms.addData(b1.toIndexedSeq); q.processAllAvailable()
+        ms.addData(b2.toIndexedSeq); q.processAllAvailable()
+      } finally { q.stop() }
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet.subsetOf(before),
+        "a micro-batch left pins behind")
+      val full = operators.Dedup.incrementalMinhash(spark, sf)
+        .collect().map(_.toSeq).toSet
+      assert(got.size == ids.length, "one verdict per arriving doc")
+      assert(got.toSet == full,
+        "streamed micro-batch verdicts must equal the one-shot batch run")
+    }
   }
 
   test("curate funnel agrees with its component operators") {
