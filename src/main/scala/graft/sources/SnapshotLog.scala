@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext,
   FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Thrown by a commit that lost the version race: another writer
@@ -68,6 +68,14 @@ final class ConcurrentCommitException(msg: String)
   * untouched segments are carried forward BY REFERENCE into the new
   * manifest (copy-on-write at segment granularity, spec-proven); the
   * rewrite itself is one anti join + one union, both key-partitioned.
+  *
+  * Three private helpers carry the mechanics the verbs share:
+  * [[writeSlices]] is the one partitioned write that cuts a tagged
+  * frame into segments (sliced [[compact]], [[compactZOrder]],
+  * [[purgeDv]]); [[readPruned]] is the one stats/bloom-pruned read
+  * ([[readProbe]], [[readRange]], [[readPoint]], [[readPoints]]); and
+  * [[scanLive]] is the one segment-tagged scan with tombstones applied
+  * ([[readRows]], [[mergeDv]]'s presence scan).
   */
 object SnapshotLog {
 
@@ -95,6 +103,24 @@ object SnapshotLog {
       while ({ n = in.read(buf); n > 0 }) out.write(buf, 0, n)
       new String(out.toByteArray, StandardCharsets.UTF_8)
     } finally in.close()
+  }
+
+  /** Replace the one-line file `f` (the LATEST seek hint, a follower
+    * cursor) with `text`: a temp file beside it, then an overwrite
+    * rename. Correctness never depends on the LATEST hint — see
+    * [[latestVersion]]'s roll-forward — so a concurrent hint race or a
+    * non-atomic object-store rename costs a longer forward scan, never
+    * a wrong answer. */
+  private def writeSmall(f: Path, text: String): Unit = {
+    val fs = fsOf(f)
+    val tmp = new Path(f.getParent,
+      s".${f.getName}-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    val fc = FileContext.getFileContext(fs.makeQualified(f).toUri, hadoopConf)
+    fc.rename(fs.makeQualified(tmp), fs.makeQualified(f),
+      Options.Rename.OVERWRITE)
   }
 
   /** The committed latest version, or None for an empty/absent table.
@@ -451,12 +477,8 @@ object SnapshotLog {
     val rows = manifest(spark, path, v).collect().toSeq
     // readRows applies any deletion vectors ([[mergeDv]]); a DV-free
     // manifest goes through the plain multi-directory scan unchanged
-    val phys = readRows(spark, rows, mergeSchema).getOrElse(
-      // a delete-everything merge commits a segment-less manifest; the
-      // version reads as an empty frame under the table's schema
-      spark.read.parquet(anchorSeg(spark, path, v).getOrElse(sys.error(
-        s"read at $path v$v: no surviving version lists a segment to " +
-          "anchor the table schema"))).limit(0))
+    val phys = readRows(spark, rows, mergeSchema)
+      .getOrElse(emptyFrame(spark, path, v, rows))
     // VERSION v's OWN column mapping: a pre-rename time travel shows
     // the old names; identity tables pay nothing
     val (pairs, dropped) = columnMapping(path, v)
@@ -564,26 +586,8 @@ object SnapshotLog {
             s"writer; re-read latestVersion and retry on top of it")
         else throw e
     }
-    writeLatestHint(path, v)
+    writeSmall(latestFile(path), v.toString)
     v
-  }
-
-  /** Advance the LATEST seek hint to `v` (temp file + overwrite
-    * rename). Correctness never depends on this file — see
-    * [[latestVersion]]'s roll-forward — so a concurrent hint race or a
-    * non-atomic object-store rename costs a longer forward scan, never
-    * a wrong answer. */
-  private def writeLatestHint(path: String, v: Int): Unit = {
-    val f = latestFile(path)
-    val fs = fsOf(f)
-    val tmp = new Path(logDir(path),
-      s".LATEST-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = FileContext.getFileContext(fs.makeQualified(f).toUri, hadoopConf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(f),
-      Options.Rename.OVERWRITE)
   }
 
   /** Create the table at version 0. */
@@ -713,32 +717,58 @@ object SnapshotLog {
     * (the empty segment is elided, never listed). */
   def merge(spark: SparkSession, df: DataFrame, path: String,
             keyCol: String, deleteCol: String,
-            txn: Option[(String, Int)] = None): Int =
-    mergeAt(spark, df, path, keyCol, deleteCol,
-      latestVersion(path).getOrElse(
-        sys.error(s"merge into non-existent table $path")) + 1, txn)
+            txn: Option[(String, Int)] = None): Int = {
+    val v = latestVersion(path).getOrElse(
+      sys.error(s"merge into non-existent table $path")) + 1
+    mergeAt(spark, df, path, keyCol, deleteCol, v, keyRange(df, keyCol), txn)
+  }
 
-  /** [[merge]] with the target version fixed by the caller — the race
-    * surface [[appendAt]] exposes, for specs and for
-    * [[mergeOrRebase]]'s retry loop. */
-  private[graft] def mergeAt(spark: SparkSession, df: DataFrame,
-                             path: String, keyCol: String,
-                             deleteCol: String, v: Int,
-                             txn: Option[(String, Int)] = None): Int = {
-    val Array(lo, hi) = df.agg(min(col(keyCol)), max(col(keyCol)))
-      .collect().head.toSeq.map(x => x.asInstanceOf[Long]).toArray
+  /** The incoming [min, max] key range of a merge batch — one job, run
+    * once per logical merge (rebase attempts reuse it). */
+  private def keyRange(df: DataFrame, keyCol: String): (Long, Long) = {
+    val r = df.agg(min(col(keyCol)), max(col(keyCol))).collect().head
+    (r.get(0).asInstanceOf[Long], r.get(1).asInstanceOf[Long])
+  }
+
+  /** What [[mergeAt]] and [[mergeDvAt]] both start from at target
+    * version `v`: the write-path column mapping, the physical key, the
+    * base manifest (`shape`d by the caller) and its non-empty rows,
+    * split by whether their key range overlaps the batch's `range`. */
+  private case class MergeBase(pairs: Seq[(String, String)],
+                               dropped: Seq[String], colMap: ColMapArg,
+                               keyP: String, m: DataFrame,
+                               rows: Seq[org.apache.spark.sql.Row],
+                               affected: Seq[org.apache.spark.sql.Row],
+                               untouched: Seq[org.apache.spark.sql.Row])
+
+  private def mergeBase(df: DataFrame, path: String, keyCol: String, v: Int,
+                        range: (Long, Long),
+                        shape: DataFrame => DataFrame = identity): MergeBase = {
+    val (lo, hi) = range
     // callers speak the LOGICAL schema; segments store the physical one
     // (re-added retired names allocate fresh field-id physicals)
-    val (cmPairs, cmDropped, cmArg) = writeMapping(df, path, v - 1)
-    val keyP = physicalName(cmPairs, cmDropped, keyCol)
+    val (pairs, dropped, arg) = writeMapping(df, path, v - 1)
     // the manifest is segment-count-sized: collecting it is the point.
     // Empty segments (a legacy empty append) are dropped here — they
     // hold no rows, so eliding them from the new manifest loses nothing
-    val m = manifest(spark, path, v - 1)
-    val segs = m.collect().filter(_.getAs[Long]("n_rows") > 0)
-    val (affected, untouched) = segs.partition { r =>
+    val m = shape(manifest(df.sparkSession, path, v - 1))
+    val rows = m.collect().toSeq.filter(_.getAs[Long]("n_rows") > 0)
+    val (affected, untouched) = rows.partition { r =>
       r.getAs[Long]("max_key") >= lo && r.getAs[Long]("min_key") <= hi
     }
+    MergeBase(pairs, dropped, arg, physicalName(pairs, dropped, keyCol), m,
+      rows, affected, untouched)
+  }
+
+  /** [[merge]] with the target version and the batch's key range fixed
+    * by the caller — the race surface [[appendAt]] exposes, for
+    * [[mergeOrRebase]]'s retry loop. */
+  private[graft] def mergeAt(spark: SparkSession, df: DataFrame,
+                             path: String, keyCol: String,
+                             deleteCol: String, v: Int, range: (Long, Long),
+                             txn: Option[(String, Int)] = None): Int = {
+    val MergeBase(cmPairs, cmDropped, cmArg, keyP, m, _, affected,
+      untouched) = mergeBase(df, path, keyCol, v, range)
     val inserts = toPhysical(df.filter(!col(deleteCol)).drop(deleteCol),
       cmPairs, cmDropped)
     // mergeSchema + allowMissingColumns: a merge whose incoming rows
@@ -836,7 +866,7 @@ object SnapshotLog {
     rebaseLoop(spark, df, path, keyCol,
       latestVersion(path).getOrElse(
         sys.error(s"merge into non-existent table $path")), maxRebases,
-      v => mergeDvAt(spark, df, path, keyCol, deleteCol, v))
+      mergeDvAt(spark, df, path, keyCol, deleteCol, _, _))
 
   /** [[mergeOrRebase]] with the base version fixed by the caller (the
     * version this writer READ) — the testable race surface. */
@@ -845,21 +875,21 @@ object SnapshotLog {
                                        deleteCol: String, baseV: Int,
                                        maxRebases: Int = 5): Int =
     rebaseLoop(spark, df, path, keyCol, baseV, maxRebases,
-      v => mergeAt(spark, df, path, keyCol, deleteCol, v))
+      mergeAt(spark, df, path, keyCol, deleteCol, _, _))
 
   /** The shared optimistic-concurrency retry: commit via `attempt` at
-    * base+1, and on a lost race rebase iff every interleaved commit's
-    * touched ranges are disjoint from this write set's [lo, hi]. */
+    * base+1 with this write set's [lo, hi], and on a lost race rebase
+    * iff every interleaved commit's touched ranges are disjoint from
+    * it. */
   private def rebaseLoop(spark: SparkSession, df: DataFrame, path: String,
                          keyCol: String, baseV: Int, maxRebases: Int,
-                         attempt: Int => Int): Int = {
-    val Array(lo, hi) = df.agg(min(col(keyCol)), max(col(keyCol)))
-      .collect().head.toSeq.map(x => x.asInstanceOf[Long]).toArray
+                         attempt: (Int, (Long, Long)) => Int): Int = {
+    val (lo, hi) = keyRange(df, keyCol)
     var base = baseV
     var rebases = 0
     var committed = -1
     while (committed < 0) {
-      try committed = attempt(base + 1)
+      try committed = attempt(base + 1, (lo, hi))
       catch {
         case e: ConcurrentCommitException =>
           val now = latestVersion(path).getOrElse(throw e)
@@ -964,7 +994,6 @@ object SnapshotLog {
     // compaction is the verb that PURGES tombstones back into data
     if (small.length <= 1 && !small.exists(dvListOf(_).nonEmpty))
       return v0
-    if (small.isEmpty) return v0
     val v = v0 + 1
     // readRows applies any deletion vectors: the fold purges them —
     // the folded segment lists no dvs and the tombstone dirs orphan.
@@ -972,11 +1001,8 @@ object SnapshotLog {
     // field-id re-add — without it the rewrite would silently DROP
     // every column living only in newer segments (r18 deep-fuzz find)
     val merged = readRows(spark, small.toSeq, mergeSchema = true).get
-    // point-lookup bloom sizing: the fold's live rows, floored so tiny
-    // tables still get a usable filter and capped so a sidecar (and the
-    // driver pass that loads it per candidate) stays MBs-bounded
-    val expectedKeys = math.max(1024L,
-      math.min(small.map(liveRowsOf).sum, MaxBloomItems))
+    // point-lookup bloom sizing: the fold's live rows
+    val expectedKeys = bloomItems(small.map(liveRowsOf).sum)
     val newSeg: Seq[(String, Long, Long, Long, String)] =
       if (slices == 1)
         writeSegment(spark, merged, path, v, 0, keyP,
@@ -990,46 +1016,16 @@ object SnapshotLog {
         val lo = small.map(_.getAs[Long]("min_key")).min
         val hi = small.map(_.getAs[Long]("max_key")).max
         val width = (hi - lo) / slices + 1
-        val tmp = new Path(logDir(path),
-          s".compact-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        val fs = fsOf(tmp)
         // same slice membership as the old per-slice filter loop —
         // slice(key) = (key - lo) div width over key in [lo, hi] — so
-        // the committed manifests are bit-identical to the loop's
-        merged
-          .withColumn("_snap_slice", expr(
-            s"CAST((CAST($keyP AS BIGINT) - ${lo}L) div ${width}L AS INT)"))
-          .repartition(col("_snap_slice"))
-          .write.partitionBy("_snap_slice").parquet(tmp.toString)
-        // per-slice expected items: 2x the uniform share absorbs skew
+        // the committed manifests are bit-identical to the loop's.
+        // Per-slice bloom items: 2x the uniform share absorbs skew
         // without forfeiting the size cap (a fixed constant because the
         // bloom aggregate is sized once per aggregation, not per group)
-        val perSlice = math.max(1024L,
-          math.min(2L * expectedKeys / slices, MaxBloomItems))
-        val stats = spark.read.parquet(tmp.toString)
-          .groupBy(col("_snap_slice"))
-          .agg(count(lit(1)), min(col(keyP)), max(col(keyP)),
-            org.apache.spark.sql.graftbridge.SparkBridge
-              .bloomFilterAgg(xxhash64(col(keyP).cast("long")),
-                perSlice))
-          .collect()
-          .map(r => r.getInt(0) ->
-            (r.getLong(1), r.getAs[Long](2), r.getAs[Long](3),
-              r.getAs[Array[Byte]](4)))
-          .toMap
-        val out = (0 until slices).flatMap { i =>
-          stats.get(i).filter(_._1 > 0L).map { case (n, mn, mx, bb) =>
-            val dir = f"$path/data/c$v%05d-$i-" +
-              java.util.UUID.randomUUID().toString.take(8)
-            fs.mkdirs(new Path(path, "data"))
-            if (!fs.rename(new Path(tmp, s"_snap_slice=$i"), new Path(dir)))
-              sys.error(s"compaction could not move slice $i to $dir")
-            (dir, n, mn, mx,
-              Option(bb).map(writeBloomSidecar(path, v, i, _)).orNull)
-          }
-        }
-        fs.delete(tmp, true)
-        out
+        writeSlices(merged.withColumn("_snap_slice", expr(
+            s"CAST((CAST($keyP AS BIGINT) - ${lo}L) div ${width}L AS INT)")),
+          path, v, "c", keyP, 2L * expectedKeys / slices)
+          .map(s => (s.seg, s.n, s.mn, s.mx, s.bloom))
       }
     // by-reference segments keep their manifest rows VERBATIM — their
     // per-column stats map AND their deletion-vector list both stay
@@ -1095,7 +1091,6 @@ object SnapshotLog {
     val statsP = statsCols.map(physicalName(cmP, cmD, _))
     val segs = manifest(spark, path, v0).collect()
     if (segs.length <= 1 && !segs.exists(dvListOf(_).nonEmpty)) return v0
-    if (segs.isEmpty) return v0
     val v = v0 + 1
     // readRows applies any deletion vectors: the rewrite purges them.
     // mergeSchema: same straddle hazard as [[compact]] — a z-order
@@ -1120,56 +1115,23 @@ object SnapshotLog {
       .collect().head
     val (zMin, zMax) = (zb.getLong(0), zb.getLong(1))
     val width = (zMax - zMin) / slices + 1L
-    val tmp = new Path(logDir(path),
-      s".zorder-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val fs = fsOf(tmp)
-    withZ
-      .withColumn("_snap_slice",
-        expr(s"CAST((_snap_z - ${zMin}L) div ${width}L AS INT)"))
-      .drop("_snap_z")
-      .repartition(col("_snap_slice"))
-      .write.partitionBy("_snap_slice").parquet(tmp.toString)
-    // per-slice stats in ONE aggregation grouped by the slice id Spark
-    // rediscovers from the partition directory names — not a read job
-    // per slice (at 100s of slices the sequential-jobs version IS the
-    // compaction's cost). The SECONDARY columns (yCol plus any caller
-    // statsCols) land in the manifest's per-column `stats` map —
-    // adding a stats column is one more agg pair here, never a new
-    // manifest shape fork downstream.
+    // the SECONDARY columns (yCol plus any caller statsCols) land in
+    // the manifest's per-column `stats` map — adding a stats column is
+    // one more agg pair here, never a new manifest shape fork downstream
     val secondary = (yP +: statsP).distinct.filterNot(_ == xP)
-    val perSlice = math.max(1024L, math.min(
-      2L * segs.map(liveRowsOf).sum / slices, MaxBloomItems))
-    val aggCols = Seq(count(lit(1)), min(xL), max(xL)) ++
+    val rows = writeSlices(withZ
+        .withColumn("_snap_slice",
+          expr(s"CAST((_snap_z - ${zMin}L) div ${width}L AS INT)"))
+        .drop("_snap_z"),
+      path, v, "c", xP, 2L * segs.map(liveRowsOf).sum / slices,
       secondary.flatMap(c =>
-        Seq(min(col(c).cast("long")), max(col(c).cast("long")))) :+
-      org.apache.spark.sql.graftbridge.SparkBridge
-        .bloomFilterAgg(xxhash64(col(xP).cast("long")), perSlice)
-    val stats = spark.read.parquet(tmp.toString)
-      .groupBy(col("_snap_slice"))
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-      .map(r => r.getInt(0) -> r)
-      .toMap
-    val rows: Seq[org.apache.spark.sql.Row] =
-      (0 until slices).flatMap { i =>
-        stats.get(i).filter(_.getLong(1) > 0L).map { r =>
-          val dir = f"$path/data/c$v%05d-$i-" +
-            java.util.UUID.randomUUID().toString.take(8)
-          fs.mkdirs(new Path(path, "data"))
-          if (!fs.rename(new Path(tmp, s"_snap_slice=$i"), new Path(dir)))
-            sys.error(s"zorder compaction could not move slice $i to $dir")
-          val sMap = secondary.zipWithIndex.map { case (c, j) =>
-            c -> org.apache.spark.sql.Row(r.getLong(4 + 2 * j),
-              r.getLong(5 + 2 * j))
-          }.toMap
-          val bloom = Option(
-            r.getAs[Array[Byte]](4 + 2 * secondary.length))
-            .map(writeBloomSidecar(path, v, i, _)).orNull
-          org.apache.spark.sql.Row(dir, r.getLong(1), r.getLong(2),
-            r.getLong(3), sMap, bloom)
-        }
+        Seq(min(col(c).cast("long")), max(col(c).cast("long")))))
+      .map { s =>
+        val sMap = secondary.zipWithIndex.map { case (c, j) =>
+          c -> org.apache.spark.sql.Row(s.extra(2 * j), s.extra(2 * j + 1))
+        }.toMap
+        org.apache.spark.sql.Row(s.seg, s.n, s.mn, s.mx, sMap, s.bloom)
       }
-    fs.delete(tmp, true)
     import scala.jdk.CollectionConverters._
     commit(spark.createDataFrame(new java.util.ArrayList(rows.asJava),
       manifestStatsSchema), path, v, rewriteOnly = true)
@@ -1219,68 +1181,101 @@ object SnapshotLog {
     }
     if (targets.isEmpty) return v0
     val v = v0 + 1
-    val tmp = new Path(logDir(path),
-      s".purge-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val fs = fsOf(tmp)
     val tagged = targets.zipWithIndex.map { case (r, i) =>
-      readRows(spark, Seq(r)).get.withColumn("_snap_tgt", lit(i))
+      readRows(spark, Seq(r)).get.withColumn("_snap_slice", lit(i))
       // allowMissingColumns: targets may straddle an additive schema
       // evolution (some segments rewritten wide, others still narrow,
       // both over the DV-density threshold) — narrow ones null-fill
       // the evolved columns, matching merge()'s mergeSchema survivor
       // read, instead of failing the purge (r16 ADVICE)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
-    tagged
-      .repartition(col("_snap_tgt"))
-      .write.partitionBy("_snap_tgt").parquet(tmp.toString)
-    // explicit schema: when EVERY target purges to zero live rows the
-    // write emits no data files, and schema inference on the empty tmp
-    // would throw; the stats still come from the written bytes
-    val perTarget = math.max(1024L,
-      math.min(targets.map(liveRowsOf).max, MaxBloomItems))
-    val stats = spark.read.schema(tagged.schema).parquet(tmp.toString)
-      .groupBy(col("_snap_tgt"))
-      .agg(count(lit(1)), min(col(keyP).cast("long")),
-        max(col(keyP).cast("long")),
-        org.apache.spark.sql.graftbridge.SparkBridge
-          .bloomFilterAgg(xxhash64(col(keyP).cast("long")), perTarget))
-      .collect()
-      .map(r => r.getInt(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getAs[Array[Byte]](4)))
-      .toMap
-    val rewritten = targets.zipWithIndex.flatMap { case (r, i) =>
-      stats.get(i).filter(_._1 > 0L).map { case (n, mn, mx, bb) =>
-        val dir = f"$path/data/p$v%05d-$i-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        fs.mkdirs(new Path(path, "data"))
-        if (!fs.rename(new Path(tmp, s"_snap_tgt=$i"), new Path(dir)))
-          sys.error(s"purge could not move target $i to $dir")
+    // a bloom sidecar only where the manifest shape has a bloom column
+    val hasBloom = m.columns.contains("bloom")
+    val rewritten = writeSlices(tagged, path, v, "p", keyP,
+        targets.map(liveRowsOf).max, sidecars = hasBloom)
+      .map { s =>
+        val r = targets(s.idx)
         // row surgery on the TARGET's own manifest row: seg/row-count/
         // key bounds refresh, dvs and dv_rows clear, the key bloom
         // refreshed over the live rows (when the manifest shape has
         // one), and every other column — the stats map above all —
         // carries verbatim, so the shape never forks here
         val vals = r.toSeq.toArray
-        vals(r.fieldIndex("seg")) = dir
-        vals(r.fieldIndex("n_rows")) = n
-        vals(r.fieldIndex("min_key")) = mn
-        vals(r.fieldIndex("max_key")) = mx
+        vals(r.fieldIndex("seg")) = s.seg
+        vals(r.fieldIndex("n_rows")) = s.n
+        vals(r.fieldIndex("min_key")) = s.mn
+        vals(r.fieldIndex("max_key")) = s.mx
         if (r.schema.fieldNames.contains("dvs"))
           vals(r.fieldIndex("dvs")) = null
         if (r.schema.fieldNames.contains("dv_rows"))
           vals(r.fieldIndex("dv_rows")) = null
-        if (r.schema.fieldNames.contains("bloom"))
-          vals(r.fieldIndex("bloom")) = Option(bb)
-            .map(writeBloomSidecar(path, v, i, _)).orNull
+        if (hasBloom) vals(r.fieldIndex("bloom")) = s.bloom
         org.apache.spark.sql.Row.fromSeq(vals.toIndexedSeq)
       }
-    }
-    fs.delete(tmp, true)
     import scala.jdk.CollectionConverters._
     commit(spark.createDataFrame(
       new java.util.ArrayList((carried.toSeq ++ rewritten).asJava),
       m.schema), path, v, rewriteOnly = true)
+  }
+
+  /** One segment [[writeSlices]] wrote: slice id, segment dir, stats
+    * (row count, key min/max, the caller's `extra` aggregates in order)
+    * and the key-bloom sidecar path (null when none was written). */
+  private case class Slice(idx: Int, seg: String, n: Long, mn: Long,
+                           mx: Long, extra: Seq[Long], bloom: String)
+
+  /** Bloom items for an expected key count: floored so tiny segments
+    * still get a usable filter, capped at [[MaxBloomItems]] so a
+    * sidecar (and the driver pass that loads it) stays MBs-bounded. */
+  private def bloomItems(n: Long): Long =
+    math.max(1024L, math.min(n, MaxBloomItems))
+
+  /** The one SLICED segment write: `tagged` carries an int slice id in
+    * `_snap_slice`, and every non-empty slice becomes one segment
+    * `data/<prefix>vNNNNN-<slice>-<uuid>` of version `v` — ONE
+    * partitioned write (the rows are shuffled once on the slice id into
+    * an attempt-unique temp dir under `_log`), per-slice stats from ONE
+    * aggregation grouped by the slice id (row count, key min/max, the
+    * caller's `extra` aggregates, a key bloom of `items` expected keys,
+    * [[bloomItems]]-clamped) — never a re-scan or a read job per slice —
+    * then each slice dir renamed into the segment namespace, its bloom
+    * sidecar written when `sidecars`, and the temp dir dropped. The temp
+    * dir reads back under `tagged`'s schema: when every slice is empty
+    * the write emits no data file, and schema inference on it would
+    * throw. Returns the slices that received rows, by slice id. */
+  private def writeSlices(tagged: DataFrame, path: String, v: Int,
+                          prefix: String, keyP: String, items: Long,
+                          extra: Seq[Column] = Nil,
+                          sidecars: Boolean = true): Seq[Slice] = {
+    val tmp = new Path(logDir(path),
+      s".slices-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    val fs = fsOf(tmp)
+    tagged.repartition(col("_snap_slice"))
+      .write.partitionBy("_snap_slice").parquet(tmp.toString)
+    val key = col(keyP).cast("long")
+    val aggs = Seq(count(lit(1)), min(key), max(key)) ++ extra :+
+      org.apache.spark.sql.graftbridge.SparkBridge
+        .bloomFilterAgg(xxhash64(key), bloomItems(items))
+    val stats = tagged.sparkSession.read.schema(tagged.schema)
+      .parquet(tmp.toString)
+      .groupBy(col("_snap_slice"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq
+      .sortBy(_.getInt(0))
+    fs.mkdirs(new Path(path, "data"))
+    val out = stats.map { r =>
+      val i = r.getInt(0)
+      val dir = f"$path/data/$prefix$v%05d-$i-" +
+        java.util.UUID.randomUUID().toString.take(8)
+      if (!fs.rename(new Path(tmp, s"_snap_slice=$i"), new Path(dir)))
+        sys.error(s"could not move slice $i to $dir")
+      val bloom = Option(r.getAs[Array[Byte]](4 + extra.length))
+        .filter(_ => sidecars).map(writeBloomSidecar(path, v, i, _)).orNull
+      Slice(i, dir, r.getLong(1), r.getLong(2), r.getLong(3),
+        (4 until 4 + extra.length).map(r.getLong), bloom)
+    }
+    fs.delete(tmp, true)
+    out
   }
 
   /** Manifest schema when per-column secondary stats are present: the
@@ -1381,11 +1376,10 @@ object SnapshotLog {
     * deletion vectors applied. Segments with no tombstones go through
     * the plain multi-directory parquet scan (bit-identical plan to the
     * pre-DV read path — DV-free tables pay nothing); tombstoned
-    * segments are read in ONE multi-directory scan (the owning segment
-    * recovered from each row's file path by basename — never a union
-    * node per segment) and cleaned by ONE broadcast anti join against
-    * the union of their attached tombstone files on
-    * `(_snap_seg, key)` — a tombstone's rows target exactly
+    * segments go through [[scanLive]]: ONE multi-directory scan
+    * cleaned by ONE broadcast anti join against the union of their
+    * attached tombstone files on `(_snap_seg, key)` — a tombstone's
+    * rows target exactly
     * one segment, so entries for segments outside this read (possible
     * after a COW rewrite or restore) match nothing by construction.
     *
@@ -1411,44 +1405,8 @@ object SnapshotLog {
       else Some(readPlain(plain.map(_.getAs[String]("seg"))))
     val dvdDf =
       if (dvd.isEmpty) None
-      else {
-        val segsD = dvd.map(_.getAs[String]("seg"))
-        // ONE multi-directory scan for every tombstoned segment, the
-        // owning segment recovered from each row's file path (segment
-        // dir basenames are version+attempt unique) and translated
-        // back to the manifest's seg string for the tombstone join —
-        // a union of per-segment tagged scans costs a plan node and a
-        // codegen break per segment, and at a 100 TB segment count
-        // that union IS the read. Basename collision (take(8) uuid)
-        // falls back to the per-segment tagging, correct always.
-        val byName = segsD.map(s => new Path(s).getName -> s).toMap
-        val dvPaths = dvd.flatMap(dvListOf).distinct
-        val tombs0 = spark.read.parquet(dvPaths: _*)
-        val kc = tombs0.columns.filter(_ != "_snap_seg").head
-        val (tagged, tombs) =
-          if (byName.size == segsD.length) {
-            // the join key is the DIR BASENAME: derived on the big side
-            // with two substring_index calls per row (no regex, no
-            // full-path string keys) and on the tombstone side — dv
-            // rows store the manifest's seg string — by the same
-            // basename cut, delta-sized work
-            val base = substring_index(
-              substring_index(input_file_name(), "/", -2), "/", 1)
-            (readPlain(segsD).withColumn("_snap_seg", base),
-              tombs0.withColumn("_snap_seg",
-                substring_index(col("_snap_seg"), "/", -1)))
-          } else (dvd.map { r =>
-            spark.read.parquet(r.getAs[String]("seg"))
-              .withColumn("_snap_seg", lit(r.getAs[String]("seg")))
-          }.reduce((a, b) =>
-            // allowMissingColumns unconditionally: the segments are one
-            // logical table whose widths may straddle an additive schema
-            // evolution; a default read must null-fill like the single
-            // multi-dir scan did, never throw (r16 ADVICE)
-            a.unionByName(b, allowMissingColumns = true)), tombs0)
-        Some(tagged.join(broadcast(tombs), Seq("_snap_seg", kc),
-          "left_anti").drop("_snap_seg"))
-      }
+      else Some(scanLive(spark, dvd.map(_.getAs[String]("seg")),
+        dvd.flatMap(dvListOf).distinct, readPlain)._1.drop("_snap_seg"))
     (plainDf, dvdDf) match {
       case (Some(p), Some(d)) =>
         // allowMissingColumns unconditionally: the plain/dvd split can
@@ -1460,6 +1418,51 @@ object SnapshotLog {
         Some(p.unionByName(d, allowMissingColumns = true))
       case (p, d) => p.orElse(d)
     }
+  }
+
+  /** The rows of segment dirs `segs`, read by `scan`, each tagged with
+    * its owning segment in `_snap_seg`, minus the rows the tombstone
+    * dirs `dvPaths` suppress (ONE broadcast anti join on
+    * `(_snap_seg, key)`). ONE multi-directory scan recovers the owning
+    * segment from each row's file path by dir BASENAME (version+attempt
+    * unique; two substring_index calls per row, no regex, no full-path
+    * string keys) and cuts the tombstones' seg strings the same way —
+    * a union of per-segment tagged scans costs a plan node and a
+    * codegen break per segment, and at a 100 TB segment count that
+    * union IS the read. A basename collision (take(8) uuid) falls back
+    * to that union, tagged with the full seg string, correct always.
+    * Also returns the column that maps `_snap_seg` back to the
+    * manifest's seg string. */
+  private def scanLive(spark: SparkSession, segs: Seq[String],
+                       dvPaths: Seq[String],
+                       scan: Seq[String] => DataFrame): (DataFrame, Column) = {
+    val byName = segs.map(s => new Path(s).getName -> s).toMap
+    val oneScan = byName.size == segs.length
+    val tagged =
+      if (oneScan) scan(segs).withColumn("_snap_seg", substring_index(
+        substring_index(input_file_name(), "/", -2), "/", 1))
+      else segs.map(s => scan(Seq(s)).withColumn("_snap_seg", lit(s)))
+        // allowMissingColumns: the segments are one logical table whose
+        // widths may straddle an additive schema evolution; a default
+        // read must null-fill like the single multi-dir scan does, never
+        // throw (r16 ADVICE)
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+    val live =
+      if (dvPaths.isEmpty) tagged
+      else {
+        val tombs = spark.read.parquet(dvPaths: _*)
+        val kc = tombs.columns.filter(_ != "_snap_seg").head
+        tagged.join(broadcast(
+          if (!oneScan) tombs
+          else tombs.withColumn("_snap_seg",
+            substring_index(col("_snap_seg"), "/", -1))),
+          Seq("_snap_seg", kc), "left_anti")
+      }
+    val segOf =
+      if (!oneScan) col("_snap_seg")
+      else element_at(map(byName.toSeq.flatMap { case (n, s) =>
+        Seq(lit(n), lit(s)) }: _*), col("_snap_seg"))
+    (live, segOf)
   }
 
   /** MERGE-ON-READ merge — [[merge]]'s deletion-vector twin: the same
@@ -1487,78 +1490,47 @@ object SnapshotLog {
     * travel before the merge reads the unsuppressed rows. */
   def mergeDv(spark: SparkSession, df: DataFrame, path: String,
               keyCol: String, deleteCol: String,
-              txn: Option[(String, Int)] = None): Int =
-    mergeDvAt(spark, df, path, keyCol, deleteCol,
-      latestVersion(path).getOrElse(
-        sys.error(s"mergeDv into non-existent table $path")) + 1, txn)
+              txn: Option[(String, Int)] = None): Int = {
+    val v = latestVersion(path).getOrElse(
+      sys.error(s"mergeDv into non-existent table $path")) + 1
+    mergeDvAt(spark, df, path, keyCol, deleteCol, v, keyRange(df, keyCol), txn)
+  }
 
-  /** [[mergeDv]] with the target version fixed by the caller — the
-    * testable race surface, [[mergeAt]]'s twin. */
+  /** [[mergeDv]] with the target version and key range fixed by the
+    * caller — the testable race surface, [[mergeAt]]'s twin. */
   private[graft] def mergeDvAt(spark: SparkSession, df: DataFrame,
                                path: String, keyCol: String,
                                deleteCol: String, v: Int,
+                               range: (Long, Long),
                                txn: Option[(String, Int)] = None): Int = {
-    val Array(lo, hi) = df.agg(min(col(keyCol)), max(col(keyCol)))
-      .collect().head.toSeq.map(x => x.asInstanceOf[Long]).toArray
-    // callers speak the LOGICAL schema; segments and tombstone files
-    // store the physical one (re-adds allocate fresh field-id physicals)
-    val (cmPairs, cmDropped, cmArg) = writeMapping(df, path, v - 1)
-    val keyP = physicalName(cmPairs, cmDropped, keyCol)
-    val m = manifest(spark, path, v - 1)
     // canonical manifest shape: dvs/dv_rows present (null where absent)
     // so driver-side row surgery below works on one fixed schema
-    val mc0 = if (m.columns.contains("dvs")) m
-      else m.withColumn("dvs",
-        lit(null).cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType)))
-    val mc = if (mc0.columns.contains("dv_rows")) mc0
-      else mc0.withColumn("dv_rows", lit(null).cast("long"))
-    val rows = mc.collect().filter(_.getAs[Long]("n_rows") > 0)
-    val affected = rows.filter { r =>
-      r.getAs[Long]("max_key") >= lo && r.getAs[Long]("min_key") <= hi
-    }
-    // which incoming keys are PRESENT per affected segment — the
-    // column-pruned presence scan (keyCol only), prior DVs applied
+    val MergeBase(cmPairs, cmDropped, cmArg, keyP, mc, rows, affected, _) =
+      mergeBase(df, path, keyCol, v, range, { m =>
+        val mc0 = if (m.columns.contains("dvs")) m
+          else m.withColumn("dvs",
+            lit(null).cast(org.apache.spark.sql.types.ArrayType(
+              org.apache.spark.sql.types.StringType)))
+        if (mc0.columns.contains("dv_rows")) mc0
+        else mc0.withColumn("dv_rows", lit(null).cast("long"))
+      })
+    // which incoming keys are PRESENT per affected segment — ONE
+    // column-pruned (keyCol only) presence scan over every affected
+    // segment, prior DVs applied; the delta-sized tombstone output
+    // carries the manifest's seg strings
     val dvDir = f"$path/dv/d$v%05d-" +
       java.util.UUID.randomUUID().toString.take(8)
     val counts: Map[String, Long] =
       if (affected.isEmpty) Map.empty
       else {
-        // ONE column-pruned multi-directory presence scan over every
-        // affected segment (a union of per-segment tagged reads costs
-        // a plan node per segment — at a 100 TB segment count the
-        // union IS the scan); rows carry the dir BASENAME and the
-        // delta-sized tombstone output translates back to the
-        // manifest's seg strings at the end
-        val affSegs = affected.toSeq.map(_.getAs[String]("seg"))
-        val byName = affSegs.map(s => new Path(s).getName -> s).toMap
-        val oneScan = byName.size == affSegs.length
-        val tagged =
-          if (oneScan)
-            spark.read.parquet(affSegs: _*).select(col(keyP))
-              .withColumn("_snap_seg", substring_index(
-                substring_index(input_file_name(), "/", -2), "/", 1))
-          else affected.toSeq.map { r =>
-            spark.read.parquet(r.getAs[String]("seg")).select(col(keyP))
-              .withColumn("_snap_seg", lit(r.getAs[String]("seg")))
-          }.reduce(_.unionByName(_))
-        val priorDvs = affected.toSeq.flatMap(dvListOf).distinct
-        val live =
-          if (priorDvs.isEmpty) tagged
-          else {
-            val prior0 = spark.read.parquet(priorDvs: _*)
-            val prior = if (oneScan) prior0.withColumn("_snap_seg",
-              substring_index(col("_snap_seg"), "/", -1)) else prior0
-            tagged.join(broadcast(prior),
-              Seq("_snap_seg", keyP), "left_anti")
-          }
-        val nameToSeg = map(byName.toSeq.flatMap { case (n, s) =>
-          Seq(lit(n), lit(s)) }: _*)
+        val (live, segOf) = scanLive(spark,
+          affected.map(_.getAs[String]("seg")),
+          affected.flatMap(dvListOf).distinct,
+          segs => spark.read.parquet(segs: _*).select(col(keyP)))
         val tomb = live.join(
           broadcast(df.select(col(keyCol).as(keyP)).distinct()),
           Seq(keyP), "left_semi")
-          .select((if (oneScan) element_at(nameToSeg, col("_snap_seg"))
-            else col("_snap_seg")).as("_snap_seg"), col(keyP))
+          .select(segOf.as("_snap_seg"), col(keyP))
         tomb.write.mode("errorifexists").parquet(dvDir)
         val got = spark.read.parquet(dvDir)
           .groupBy(col("_snap_seg")).agg(count(lit(1)).as("n"))
@@ -1566,7 +1538,7 @@ object SnapshotLog {
         if (got.isEmpty) fsOf(new Path(dvDir)).delete(new Path(dvDir), true)
         got
       }
-    val carried = rows.toSeq.map { r =>
+    val carried = rows.map { r =>
       counts.get(r.getAs[String]("seg")) match {
         case None => r
         case Some(n) =>
@@ -1609,34 +1581,53 @@ object SnapshotLog {
   def readProbe(spark: SparkSession, path: String, keyCol: String,
                 keyLo: Long, keyHi: Long,
                 probes: Seq[(String, Long, Long)],
-                version: Option[Int] = None): (DataFrame, Int, Int) = {
+                version: Option[Int] = None): (DataFrame, Int, Int) =
+    readPruned(spark, path, version) { phys =>
+      val key = phys(keyCol)
+      // probe columns and stats-map entries live in physical names too
+      val probesP = probes.map { case (c, lo, hi) => (phys(c), lo, hi) }
+      val keep = (r: org.apache.spark.sql.Row) =>
+        r.getAs[Long]("max_key") >= keyLo &&
+          r.getAs[Long]("min_key") <= keyHi &&
+          probesP.forall { case (c, lo, hi) =>
+            statsRange(r, c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+          }
+      (keep, probesP.foldLeft(col(key) >= keyLo && col(key) <= keyHi) {
+        case (p, (c, lo, hi)) => p && col(c) >= lo && col(c) <= hi
+      })
+    }
+
+  /** The one stats-pruned read path: resolve `version` (default latest)
+    * and its column mapping, let `prune` — given the logical-to-physical
+    * name map — supply the manifest-row keep test and the residual
+    * predicate, scan the kept segments (deletion vectors applied) with
+    * the residual pushed into the scan, and present the result under the
+    * version's logical names. An empty hit set reads as the anchored
+    * empty frame. mergeSchema: kept segments may straddle an additive
+    * evolution or a field-id re-add, and a pruned read must still
+    * surface the columns newer segments added. Returns (rows, segments
+    * scanned, segments total). */
+  private def readPruned(spark: SparkSession, path: String,
+                         version: Option[Int])(
+      prune: (String => String) =>
+        (org.apache.spark.sql.Row => Boolean, Column))
+      : (DataFrame, Int, Int) = {
     val v = version.orElse(latestVersion(path))
       .getOrElse(sys.error(s"no committed version at $path"))
     val (pairs, dropped) = columnMapping(path, v)
-    val key = physicalName(pairs, dropped, keyCol)
-    // probe columns and stats-map entries live in physical names too
-    val probesP = probes.map { case (c, lo, hi) =>
-      (physicalName(pairs, dropped, c), lo, hi) }
-    val segs = manifest(spark, path, v).collect()
-    val hit = segs.filter { r =>
-      r.getAs[Long]("max_key") >= keyLo &&
-        r.getAs[Long]("min_key") <= keyHi &&
-        probesP.forall { case (c, lo, hi) =>
-          statsRange(r, c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-        }
-    }
-    val pred = probesP.foldLeft(col(key) >= keyLo && col(key) <= keyHi) {
-      case (p, (c, lo, hi)) => p && col(c) >= lo && col(c) <= hi
-    }
-    // mergeSchema: hit segments may straddle an evolution/re-add; the
-    // pruned read must still surface columns newer segments added
-    val rows = readRows(spark, hit.toSeq, mergeSchema = true)
-      .map(_.filter(pred)).getOrElse(
-      spark.read.parquet(segs.headOption.map(_.getAs[String]("seg"))
-        .orElse(anchorSeg(spark, path, v)).getOrElse(sys.error(
-          s"readProbe at $path: no surviving version lists a segment " +
-            "to anchor the table schema"))).limit(0))
+    val (keep, residual) = prune(physicalName(pairs, dropped, _))
+    val segs = manifest(spark, path, v).collect().toSeq
+    val hit = segs.filter(keep)
+    val rows = readRows(spark, hit, mergeSchema = true)
+      .map(_.filter(residual)).getOrElse(emptyFrame(spark, path, v, segs))
     (applyColMap(rows, pairs, dropped), hit.length, segs.length)
+  }
+
+  /** The key bloom sidecar at `p`. */
+  private def loadBloom(p: String): org.apache.spark.util.sketch.BloomFilter = {
+    val in = fsOf(new Path(p)).open(new Path(p))
+    try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
+    finally in.close()
   }
 
   /** BLOOM-PRUNED POINT LOOKUP — `key = k` data skipping past what
@@ -1659,30 +1650,14 @@ object SnapshotLog {
   def readPoint(spark: SparkSession, path: String, keyCol: String,
                 key: Long,
                 version: Option[Int] = None): (DataFrame, Int, Int) = {
-    val v = version.orElse(latestVersion(path))
-      .getOrElse(sys.error(s"no committed version at $path"))
-    val (pairs, dropped) = columnMapping(path, v)
-    val keyP = physicalName(pairs, dropped, keyCol)
-    val segs = manifest(spark, path, v).collect()
     val h = org.apache.spark.sql.catalyst.expressions.XXH64
       .hashLong(key, 42L) // the seed of the xxhash64(...) function
-    val hit = segs.filter { r =>
-      r.getAs[Long]("max_key") >= key && r.getAs[Long]("min_key") <= key &&
-        bloomPathOf(r).forall { p =>
-          val in = fsOf(new Path(p)).open(new Path(p))
-          try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-            .mightContainLong(h)
-          finally in.close()
-        }
+    readPruned(spark, path, version) { phys =>
+      ((r: org.apache.spark.sql.Row) =>
+        r.getAs[Long]("max_key") >= key && r.getAs[Long]("min_key") <= key &&
+          bloomPathOf(r).forall(loadBloom(_).mightContainLong(h)),
+        col(phys(keyCol)) === key)
     }
-    // mergeSchema: same straddle contract as [[readProbe]]
-    val rows = readRows(spark, hit.toSeq, mergeSchema = true)
-      .map(_.filter(col(keyP) === key)).getOrElse(
-        spark.read.parquet(segs.headOption.map(_.getAs[String]("seg"))
-          .orElse(anchorSeg(spark, path, v)).getOrElse(sys.error(
-            s"readPoint at $path: no surviving version lists a segment " +
-              "to anchor the table schema"))).limit(0))
-    (applyColMap(rows, pairs, dropped), hit.length, segs.length)
   }
 
   /** BATCHED point lookup — [[readPoint]] for an id list (the
@@ -1699,34 +1674,19 @@ object SnapshotLog {
                  keys: Seq[Long],
                  version: Option[Int] = None): (DataFrame, Int, Int) = {
     require(keys.nonEmpty, "readPoints needs at least one key")
-    val v = version.orElse(latestVersion(path))
-      .getOrElse(sys.error(s"no committed version at $path"))
-    val (pairs, dropped) = columnMapping(path, v)
-    val keyP = physicalName(pairs, dropped, keyCol)
-    val segs = manifest(spark, path, v).collect()
     val hashes = keys.map(k => k ->
       org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(k, 42L))
     val blooms = scala.collection.mutable.Map
       .empty[String, org.apache.spark.util.sketch.BloomFilter]
-    def bloomAt(p: String) = blooms.getOrElseUpdate(p, {
-      val in = fsOf(new Path(p)).open(new Path(p))
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      finally in.close()
-    })
-    val hit = segs.filter { r =>
-      val (lo, hi) = (r.getAs[Long]("min_key"), r.getAs[Long]("max_key"))
-      hashes.exists { case (k, h) =>
-        lo <= k && k <= hi &&
-          bloomPathOf(r).forall(p => bloomAt(p).mightContainLong(h))
-      }
+    readPruned(spark, path, version) { phys =>
+      ((r: org.apache.spark.sql.Row) => {
+        val (lo, hi) = (r.getAs[Long]("min_key"), r.getAs[Long]("max_key"))
+        hashes.exists { case (k, h) =>
+          lo <= k && k <= hi && bloomPathOf(r).forall(p =>
+            blooms.getOrElseUpdate(p, loadBloom(p)).mightContainLong(h))
+        }
+      }, col(phys(keyCol)).isin(keys: _*))
     }
-    val rows = readRows(spark, hit.toSeq)
-      .map(_.filter(col(keyP).isin(keys: _*))).getOrElse(
-        spark.read.parquet(segs.headOption.map(_.getAs[String]("seg"))
-          .orElse(anchorSeg(spark, path, v)).getOrElse(sys.error(
-            s"readPoints at $path: no surviving version lists a segment " +
-              "to anchor the table schema"))).limit(0))
-    (applyColMap(rows, pairs, dropped), hit.length, segs.length)
   }
 
   private def stageFile(path: String, name: String) = {
@@ -1899,20 +1859,26 @@ object SnapshotLog {
   def manifestExists(path: String, v: Int): Boolean =
     fsOf(new Path(path)).exists(new Path(manifestDir(path, v)))
 
-  /** A segment path usable as a SCHEMA ANCHOR for empty results: the
-    * referenced version's own first segment when it has one, else the
-    * nearest surviving older version's. A merge that deletes every row
-    * legitimately commits a SEGMENT-LESS manifest (the empty
-    * replacement segment is elided), so empty-result paths must not
-    * assume `segs.head` exists. None only when no surviving version
-    * lists any segment at all. */
-  private def anchorSeg(spark: SparkSession, path: String,
-                        v: Int): Option[String] =
-    (v to 0 by -1).iterator
-      .filter(manifestExists(path, _))
-      .map(u => manifest(spark, path, u).select(col("seg"))
-        .limit(1).collect().headOption.map(_.getString(0)))
-      .collectFirst { case Some(s) => s }
+  /** The zero-row frame under the table's schema, for a read with no
+    * segment to scan. The SCHEMA ANCHOR is the first of the manifest
+    * rows `rows` the caller already holds, else the first segment of
+    * the nearest surviving version at or below `v`: a merge that
+    * deletes every row legitimately commits a SEGMENT-LESS manifest
+    * (the empty replacement segment is elided), so empty-result paths
+    * must not assume `segs.head` exists. Fails only when no surviving
+    * version lists any segment at all. */
+  private def emptyFrame(spark: SparkSession, path: String, v: Int,
+                         rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
+    val anchor = rows.headOption.map(_.getAs[String]("seg")).orElse(
+      (v to 0 by -1).iterator
+        .filter(manifestExists(path, _))
+        .map(u => manifest(spark, path, u).select(col("seg"))
+          .limit(1).collect().headOption.map(_.getString(0)))
+        .collectFirst { case Some(s) => s })
+    spark.read.parquet(anchor.getOrElse(sys.error(
+      s"read of $path at v$v: no surviving version lists a segment to " +
+        "anchor the table schema"))).limit(0)
+  }
 
   def pinnedVersions(path: String): Set[Int] = {
     val d = pinsDir(path)
@@ -2058,15 +2024,6 @@ object SnapshotLog {
     val toIds = to.map(ident).toSet; val fromIds = from.map(ident).toSet
     val onlyFrom = from.filterNot(r => toIds(ident(r)))
     val onlyTo = to.filterNot(r => fromIds(ident(r)))
-    // schema anchor for an empty side: either endpoint's first segment,
-    // falling back through history when BOTH endpoints are segment-less
-    // (delete-everything merges elide the empty replacement segment)
-    lazy val anchor = (from ++ to).headOption
-      .map(_.getAs[String]("seg"))
-      .orElse(anchorSeg(spark, path, vTo))
-      .getOrElse(sys.error(
-        s"diff($vFrom..$vTo) at $path: no surviving version lists a " +
-          "segment to anchor the table schema"))
     // BOTH sides present under vTo's column mapping: a diff is about
     // ROWS, the mapping is presentation — so a rename-only commit diffs
     // EMPTY (payload structs compare equal under one naming), and the
@@ -2074,9 +2031,12 @@ object SnapshotLog {
     val (cmPairs, cmDropped) = columnMapping(path, vTo)
     def frame(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
       // mergeSchema: a side's own segments can straddle an additive
-      // evolution; row volume is COW-bounded (changed segments only)
-      applyColMap(readRows(spark, rows, mergeSchema = true).getOrElse(
-        spark.read.parquet(anchor).limit(0)), cmPairs, cmDropped)
+      // evolution; row volume is COW-bounded (changed segments only).
+      // An empty side anchors on either endpoint's first segment, else
+      // through history (both endpoints can be segment-less)
+      applyColMap(readRows(spark, rows, mergeSchema = true)
+        .getOrElse(emptyFrame(spark, path, vTo, from ++ to)),
+        cmPairs, cmDropped)
     val fOld = frame(onlyFrom)
     val fNew = frame(onlyTo)
     // the two SIDES can also differ physically (a merge written after
@@ -2120,19 +2080,6 @@ object SnapshotLog {
     val fs = fsOf(f)
     if (!fs.exists(f)) None
     else scala.util.Try(readSmall(fs, f).trim.toInt).toOption
-  }
-
-  private def writeCursor(path: String, name: String, v: Int): Unit = {
-    val f = cursorFile(path, name)
-    val fs = fsOf(f)
-    val tmp = new Path(logDir(path),
-      s".cursor-$name-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = FileContext.getFileContext(fs.makeQualified(f).toUri, hadoopConf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(f),
-      Options.Rename.OVERWRITE)
   }
 
   /** CHANGE-FEED FOLLOWER — the Delta `readStream` shape over this
@@ -2186,7 +2133,7 @@ object SnapshotLog {
         fn(diff(spark, path, v - 1, v, keyCol), v)
         delivered += 1
       }
-      writeCursor(path, name, v)
+      writeSmall(cursorFile(path, name), v.toString)
       v += 1
     }
     delivered
@@ -2227,23 +2174,8 @@ object SnapshotLog {
     * pruning regression is observable, not silent. */
   def readRange(spark: SparkSession, path: String, keyCol: String,
                 lo: Long, hi: Long,
-                version: Option[Int] = None): (DataFrame, Int, Int) = {
-    val v = version.orElse(latestVersion(path))
-      .getOrElse(sys.error(s"no committed version at $path"))
-    val (pairs, dropped) = columnMapping(path, v)
-    val key = physicalName(pairs, dropped, keyCol)
-    val segs = manifest(spark, path, v).collect()
-    val hit = segs.filter(r =>
-      r.getAs[Long]("max_key") >= lo && r.getAs[Long]("min_key") <= hi)
-    // mergeSchema: same straddle contract as [[readProbe]]
-    val rows = readRows(spark, hit.toSeq, mergeSchema = true)
-      .map(_.filter(col(key) >= lo && col(key) <= hi)).getOrElse(
-        spark.read.parquet(segs.headOption.map(_.getAs[String]("seg"))
-          .orElse(anchorSeg(spark, path, v)).getOrElse(sys.error(
-            s"readRange at $path: no surviving version lists a segment " +
-              "to anchor the table schema"))).limit(0))
-    (applyColMap(rows, pairs, dropped), hit.length, segs.length)
-  }
+                version: Option[Int] = None): (DataFrame, Int, Int) =
+    readProbe(spark, path, keyCol, lo, hi, Nil, version)
 
   /** Version history: one row per committed version still on disk
     * (a [[gc]]-expired version drops out of the history, as it should —

@@ -290,6 +290,27 @@ class DeletionVectorSpec extends AnyFunSuite {
         .filter(col("k") <= 511L && col("y") <= 511L).count())
   }
 
+  test("compact of a fully tombstoned table commits an empty version at any slice count") {
+    import spark.implicits._
+    val rows = (0L until 20L).map(k => (k, s"p$k"))
+    for (slices <- Seq(1, 2)) {
+      val path = tmpDir(s"all_dead_$slices")
+      SnapshotLog.create(spark, rows.take(10).toDF("k", "p"), path, "k")
+      SnapshotLog.append(spark, rows.drop(10).toDF("k", "p"), path, "k")
+      SnapshotLog.mergeDv(spark,
+        rows.map { case (k, p) => (k, p, true) }.toDF("k", "p", "del"),
+        path, "k", "del")
+      assert(SnapshotLog.read(spark, path).count() == 0)
+      val v = SnapshotLog.compact(spark, path, "k", slices = slices)
+      assert(v == 3, s"slices=$slices")
+      assert(SnapshotLog.manifest(spark, path, v).count() == 0,
+        s"slices=$slices left segments in the manifest")
+      val after = SnapshotLog.read(spark, path)
+      assert(after.columns.toSeq == Seq("k", "p") && after.count() == 0,
+        s"slices=$slices")
+    }
+  }
+
   test("followDiff admission control: maxVersions bounds each poll; cursor makes partial progress durable") {
     import spark.implicits._
     val path = tmpDir("admission")

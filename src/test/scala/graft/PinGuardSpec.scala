@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import SourceScan._
 
 /** Source guard: pinning goes through [[graft.functions.Pins]] only.
   * Outside `Pins.scala` and `SparkBridge.scala`, `src/main/scala` may not
@@ -12,48 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * blocks are not a cache entry). Comments do not count. */
 class PinGuardSpec extends AnyFunSuite {
   private val allowed = Set("Pins.scala", "SparkBridge.scala")
-
-  /** Source text with comments blanked (string literals kept). */
-  private[graft] def stripComments(src: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < src.length) {
-      val c = src.charAt(i)
-      if (inStr) {
-        out += c
-        if (c == '\\' && i + 1 < src.length) { out += src.charAt(i + 1); i += 1 }
-        else if (c == '"') inStr = false
-        i += 1
-      } else if (src.startsWith("//", i)) {
-        while (i < src.length && src.charAt(i) != '\n') i += 1
-      } else if (src.startsWith("/*", i)) {
-        val end = src.indexOf("*/", i + 2)
-        val stop = if (end < 0) src.length else end + 2
-        out ++= src.substring(i, stop).filter(_ == '\n')
-        i = stop
-      } else {
-        if (c == '"') inStr = true
-        out += c
-        i += 1
-      }
-    }
-    out.toString
-  }
-
-  private def mainSources: Seq[(Path, String)] =
-    Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => p -> stripComments(new String(Files.readAllBytes(p), "UTF-8")))
-      .toSeq
-
-  /** Lines of `files` (comments blanked) that contain any of `calls`. */
-  private def hits(files: Seq[(Path, String)], calls: String*): Seq[String] =
-    for {
-      (p, code) <- files
-      (line, n) <- code.split("\n", -1).toSeq.zipWithIndex
-      if calls.exists(line.contains)
-    } yield s"$p:${n + 1}: ${line.trim}"
 
   test("no hand-rolled localCheckpoint pins or releases outside Pins") {
     val found =

@@ -171,6 +171,25 @@ class SchemaMapSpec extends AnyFunSuite {
       "history null-fills the re-add; the identity column's values are untouched")
   }
 
+  test("readPoints surfaces a column only newer segments carry, as readPoint does") {
+    import spark.implicits._
+    val path = tmpDir("points_straddle")
+    SnapshotLog.create(spark,
+      (0L until 10L).map(k => (k, s"p$k")).toDF("k", "p"), path, "k")
+    SnapshotLog.append(spark,
+      (100L until 110L).map(k => (k, s"p$k", k * 3)).toDF("k", "p", "q"),
+      path, "k")
+    assert(SnapshotLog.readPoint(spark, path, "k", 105L)._1.columns.toSeq ==
+      Seq("k", "p", "q"))
+    val (rows, scanned, _) =
+      SnapshotLog.readPoints(spark, path, "k", Seq(3L, 105L))
+    assert(scanned == 2)
+    assert(rows.columns.toSeq == Seq("k", "p", "q"))
+    assert(rows.collect().map(r =>
+      r.getAs[Long]("k") -> Option(r.get(r.fieldIndex("q")))).toMap ==
+      Map(3L -> None, 105L -> Some(315L)))
+  }
+
   test("append rebase guard surfaces a rename/drop committed between retry attempts") {
     import spark.implicits._
     val path = tmpDir("rebase_guard")
