@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /** Column <-> catalyst Expression bridge. `ExpressionUtils` is
   * `private[sql]` in Spark 4, so graft's native expressions reach it from
@@ -94,4 +95,9 @@ object SparkBridge {
   /** Probe half of the runtime bloom filter pair. */
   def mightContain(bloom: Column, hashCol: Column): Column =
     column(BloomFilterMightContain(expression(bloom), expression(hashCol)))
+
+  /** `s` with every field, array element and map value nullable — the
+    * schema `spark.read` gives a file source (`asNullable` is
+    * `private[spark]`). */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -3,8 +3,17 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext,
   FileSystem, Options, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SparkBridge
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Thrown by a commit that lost the version race: another writer
   * committed the same version number first. The loser's segments are
@@ -62,12 +71,16 @@ final class ConcurrentCommitException(msg: String)
   * namespace are fine).
   *
   * Scale posture: a manifest is segment-count-sized (it lists
-  * directories, never rows) and is the ONLY thing the driver ever
-  * collects; upsert prunes by the manifest's key-range stats so only
-  * segments whose [min,max] overlaps the incoming keys are rewritten —
-  * untouched segments are carried forward BY REFERENCE into the new
-  * manifest (copy-on-write at segment granularity, spec-proven); the
-  * rewrite itself is one anti join + one union, both key-partitioned.
+  * directories, never rows), so the driver decodes it directly
+  * ([[manifestRows]]) — a manifest read runs no Spark job, and the
+  * per-verb metadata floor is file I/O, not job scheduling. Only
+  * [[history]] scans manifests with Spark: one job over every
+  * surviving version. Upsert prunes by the manifest's key-range stats
+  * so only segments whose [min,max] overlaps the incoming keys are
+  * rewritten — untouched segments are carried forward BY REFERENCE
+  * into the new manifest (copy-on-write at segment granularity,
+  * spec-proven); the rewrite itself is one anti join + one union, both
+  * key-partitioned.
   *
   * Three private helpers carry the mechanics the verbs share:
   * [[writeSlices]] is the one partitioned write that cuts a tagged
@@ -167,9 +180,90 @@ object SnapshotLog {
     }
   }
 
-  /** Manifest frame of `version`: (seg, n_rows, min_key, max_key). */
+  /** Manifest frame of `version`: one row per live segment — `seg`,
+    * `n_rows`, `min_key`, `max_key`, plus the optional columns the
+    * verbs add (`dvs`/`dv_rows` after [[mergeDv]], `bloom` after
+    * [[compact]], the per-column `stats` map after [[compactZOrder]]).
+    * A local frame over [[manifestRows]]: collecting, filtering or
+    * projecting it runs no Spark job. */
   def manifest(spark: SparkSession, path: String, version: Int): DataFrame =
-    spark.read.parquet(manifestDir(path, version))
+    localFrame(spark, manifestRows(path, version))
+
+  /** The decoded manifest of version `v` ([[manifestRows]]). */
+  private[graft] def manifestRows(path: String, v: Int): (StructType, Seq[Row]) =
+    manifestRows(new Path(manifestDir(path, v)))
+
+  /** The manifest directory `dir` (a version's or a stage's) decoded on
+    * the driver, with no Spark job: the part files — names starting
+    * with `_` or `.` are skipped, the same files Spark's listing skips
+    * (`_colmap`, `_txn-*`, `_rewriteonly`, `_SUCCESS`, checksums) — read
+    * with parquet-hadoop under the Spark schema their footer records,
+    * made nullable. Schema and rows equal what
+    * `spark.read.parquet(dir)` gives, value for value, and a
+    * segment-less manifest keeps its schema (its one part file has a
+    * footer and no rows). Committed manifests are immutable, so every
+    * read simply decodes the file. */
+  private[graft] def manifestRows(dir: Path): (StructType, Seq[Row]) = {
+    val parts = fsOf(dir).listStatus(dir).toSeq.map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName)
+    require(parts.nonEmpty, s"manifest $dir has no part file")
+    val decoded = parts.map { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hadoopConf))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        val schema = SparkBridge.asNullable(DataType.fromJson(
+          meta.getKeyValueMetaData.get(SparkRowMetadata)).asInstanceOf[StructType])
+        val io = new ColumnIOFactory().getColumnIO(meta.getSchema)
+        val rows = Iterator.continually(reader.readNextRowGroup())
+          .takeWhile(_ != null)
+          .flatMap { pages =>
+            val records = io.getRecordReader(pages,
+              new GroupRecordConverter(meta.getSchema))
+            Iterator.fill(pages.getRowCount.toInt)(
+              decodeRow(records.read(), schema))
+          }.toVector
+        (schema, rows)
+      } finally reader.close()
+    }
+    (decoded.head._1, decoded.flatMap(_._2))
+  }
+
+  /** Footer key under which Spark records a file's row schema. */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** One parquet record as the row Spark's reader would return: nested
+    * structs are rows, lists are Seqs (Spark's 3-level list layout),
+    * maps are Maps (`key_value` groups), an absent field is null. */
+  private def decodeRow(g: Group, schema: StructType): Row =
+    new GenericRowWithSchema(schema.fields.map(f =>
+      decodeField(g, g.getType.getFieldIndex(f.name), f.dataType)), schema)
+
+  private def decodeField(g: Group, i: Int, t: DataType): Any =
+    if (g.getFieldRepetitionCount(i) == 0) null
+    else t match {
+      case StringType => g.getString(i, 0)
+      case LongType => g.getLong(i, 0)
+      case IntegerType => g.getInteger(i, 0)
+      case s: StructType => decodeRow(g.getGroup(i, 0), s)
+      case ArrayType(e, _) =>
+        val list = g.getGroup(i, 0)
+        (0 until list.getFieldRepetitionCount(0))
+          .map(j => decodeField(list.getGroup(0, j), 0, e))
+      case MapType(k, v, _) =>
+        val kvs = g.getGroup(i, 0)
+        (0 until kvs.getFieldRepetitionCount(0)).map { j =>
+          val kv = kvs.getGroup(0, j)
+          decodeField(kv, 0, k) -> decodeField(kv, 1, v)
+        }.toMap
+      case other => sys.error(s"manifest column type $other is not decodable")
+    }
+
+  /** A local frame over decoded manifest rows: actions on it (and on
+    * projections and filters of it) run no Spark job. */
+  private def localFrame(spark: SparkSession,
+                         m: (StructType, Seq[Row])): DataFrame =
+    spark.createDataFrame(m._2.asJava, m._1)
 
   /** Whether version `v` was committed as REWRITE-ONLY (Delta's
     * dataChange=false): a compaction — identical logical rows, new
@@ -474,7 +568,7 @@ object SnapshotLog {
            mergeSchema: Boolean = false): DataFrame = {
     val v = version.orElse(latestVersion(path))
       .getOrElse(sys.error(s"no committed version at $path"))
-    val rows = manifest(spark, path, v).collect().toSeq
+    val rows = manifestRows(path, v)._2
     // readRows applies any deletion vectors ([[mergeDv]]); a DV-free
     // manifest goes through the plain multi-directory scan unchanged
     val phys = readRows(spark, rows, mergeSchema)
@@ -808,10 +902,9 @@ object SnapshotLog {
     * stats of the symmetric difference between its manifest and its
     * parent's segment lists — the same copy-on-write invariant
     * [[diff]] exploits. Segment-count-sized driver work. */
-  private def touchedRanges(spark: SparkSession, path: String,
-                            w: Int): Seq[(Long, Long)] = {
-    val prev = manifest(spark, path, w - 1).collect()
-    val cur = manifest(spark, path, w).collect()
+  private def touchedRanges(path: String, w: Int): Seq[(Long, Long)] = {
+    val prev = manifestRows(path, w - 1)._2
+    val cur = manifestRows(path, w)._2
     // identity is (segment, deletion vectors) — a [[mergeDv]] commit
     // changes a segment's dvs without changing its path, and the keys
     // it suppressed count as touched (conservatively, via the
@@ -895,7 +988,7 @@ object SnapshotLog {
           val now = latestVersion(path).getOrElse(throw e)
           val conflict = (base + 1 to now).exists { w =>
             !manifestExists(path, w) || !manifestExists(path, w - 1) ||
-              touchedRanges(spark, path, w).exists { case (mn, mx) =>
+              touchedRanges(path, w).exists { case (mn, mx) =>
                 mx >= lo && mn <= hi }
           }
           if (conflict) throw new ConcurrentCommitException(
@@ -987,8 +1080,7 @@ object SnapshotLog {
     // segment rewrites work in PHYSICAL names (readRows output)
     val (cmPairs0, cmDropped0) = columnMapping(path, v0)
     val keyP = physicalName(cmPairs0, cmDropped0, keyCol)
-    val mDf = manifest(spark, path, v0)
-    val segs = mDf.collect()
+    val (mSchema, segs) = manifestRows(path, v0)
     val (small, big) = segs.partition(_.getAs[Long]("n_rows") < minRows)
     // a lone segment still folds when it carries deletion vectors —
     // compaction is the verb that PURGES tombstones back into data
@@ -1003,13 +1095,15 @@ object SnapshotLog {
     val merged = readRows(spark, small.toSeq, mergeSchema = true).get
     // point-lookup bloom sizing: the fold's live rows
     val expectedKeys = bloomItems(small.map(liveRowsOf).sum)
-    val newSeg: Seq[(String, Long, Long, Long, String)] =
+    // key stats are boxed: a segment of null keys has null min/max
+    val newSeg: Seq[(String, Long, java.lang.Long, java.lang.Long, String)] =
       if (slices == 1)
         writeSegment(spark, merged, path, v, 0, keyP,
           bloomExpected = Some(expectedKeys)).collect().toSeq
           .filter(_.getAs[Long]("n_rows") > 0)
           .map(r => (r.getAs[String]("seg"), r.getAs[Long]("n_rows"),
-            r.getAs[Long]("min_key"), r.getAs[Long]("max_key"),
+            r.getAs[java.lang.Long]("min_key"),
+            r.getAs[java.lang.Long]("max_key"),
             Option(r.getAs[Array[Byte]]("_bloom"))
               .map(writeBloomSidecar(path, v, 0, _)).orNull))
       else {
@@ -1030,10 +1124,7 @@ object SnapshotLog {
     // by-reference segments keep their manifest rows VERBATIM — their
     // per-column stats map AND their deletion-vector list both stay
     // live (dropping dvs here would RESURRECT tombstoned rows)
-    val bigSegs = big.map(_.getAs[String]("seg")).toSeq
-    val carried =
-      if (bigSegs.isEmpty) mDf.limit(0)
-      else mDf.filter(col("seg").isin(bigSegs: _*))
+    val carried = localFrame(spark, (mSchema, big))
     import spark.implicits._
     commit(carried.unionByName(
       newSeg.toDF("seg", "n_rows", "min_key", "max_key", "bloom"),
@@ -1089,7 +1180,7 @@ object SnapshotLog {
     val xP = physicalName(cmP, cmD, xCol)
     val yP = physicalName(cmP, cmD, yCol)
     val statsP = statsCols.map(physicalName(cmP, cmD, _))
-    val segs = manifest(spark, path, v0).collect()
+    val segs = manifestRows(path, v0)._2
     if (segs.length <= 1 && !segs.exists(dvListOf(_).nonEmpty)) return v0
     val v = v0 + 1
     // readRows applies any deletion vectors: the rewrite purges them.
@@ -1097,14 +1188,17 @@ object SnapshotLog {
     // rewrite must carry evolved/re-added columns, not drop them
     val all = readRows(spark, segs.toSeq, mergeSchema = true).get
     val xL = col(xP).cast("long"); val yL = col(yP).cast("long")
-    val b = all.agg(min(xL), max(xL), min(yL), max(yL)).collect().head
-    if (b.isNullAt(0))
+    val b = all.agg(count(lit(1)), min(xL), max(xL), min(yL), max(yL))
+      .collect().head
+    if (b.getLong(0) == 0L)
       // every row tombstoned: the rewrite is a segment-less manifest
-      return commit(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        manifestStatsSchema), path, v, rewriteOnly = true)
+      return commit(localFrame(spark, (manifestStatsSchema, Nil)), path, v,
+        rewriteOnly = true)
+    // a null coordinate leaves its row's z null, and [[writeSlices]]
+    // files a null slice id under slice 0; an all-null axis bins from 0
+    def bound(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
     val (xMin, xMax, yMin, yMax) =
-      (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
+      (bound(b, 1), bound(b, 2), bound(b, 3), bound(b, 4))
     val xW = (xMax - xMin) / 65536L + 1L
     val yW = (yMax - yMin) / 65536L + 1L
     val z = SpatialLayout.zValue16(
@@ -1113,7 +1207,7 @@ object SnapshotLog {
     val withZ = all.withColumn("_snap_z", z)
     val zb = withZ.agg(min(col("_snap_z")), max(col("_snap_z")))
       .collect().head
-    val (zMin, zMax) = (zb.getLong(0), zb.getLong(1))
+    val (zMin, zMax) = (bound(zb, 0), bound(zb, 1))
     val width = (zMax - zMin) / slices + 1L
     // the SECONDARY columns (yCol plus any caller statsCols) land in
     // the manifest's per-column `stats` map — adding a stats column is
@@ -1132,9 +1226,8 @@ object SnapshotLog {
         }.toMap
         org.apache.spark.sql.Row(s.seg, s.n, s.mn, s.mx, sMap, s.bloom)
       }
-    import scala.jdk.CollectionConverters._
-    commit(spark.createDataFrame(new java.util.ArrayList(rows.asJava),
-      manifestStatsSchema), path, v, rewriteOnly = true)
+    commit(localFrame(spark, (manifestStatsSchema, rows)), path, v,
+      rewriteOnly = true)
   }
 
   /** TARGETED TOMBSTONE PURGE — Iceberg's rewrite-position-deletes /
@@ -1173,8 +1266,7 @@ object SnapshotLog {
     // segment rewrites work in PHYSICAL names (readRows output)
     val (cmP, cmD) = columnMapping(path, v0)
     val keyP = physicalName(cmP, cmD, keyCol)
-    val m = manifest(spark, path, v0)
-    val rows = m.collect()
+    val (mSchema, rows) = manifestRows(path, v0)
     val (targets, carried) = rows.partition { r =>
       dvListOf(r).nonEmpty && r.getAs[Long]("n_rows") > 0 &&
         dvRowsOf(r).toDouble >= minDvFrac * r.getAs[Long]("n_rows")
@@ -1190,7 +1282,7 @@ object SnapshotLog {
       // read, instead of failing the purge (r16 ADVICE)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     // a bloom sidecar only where the manifest shape has a bloom column
-    val hasBloom = m.columns.contains("bloom")
+    val hasBloom = mSchema.fieldNames.contains("bloom")
     val rewritten = writeSlices(tagged, path, v, "p", keyP,
         targets.map(liveRowsOf).max, sidecars = hasBloom)
       .map { s =>
@@ -1212,17 +1304,22 @@ object SnapshotLog {
         if (hasBloom) vals(r.fieldIndex("bloom")) = s.bloom
         org.apache.spark.sql.Row.fromSeq(vals.toIndexedSeq)
       }
-    import scala.jdk.CollectionConverters._
-    commit(spark.createDataFrame(
-      new java.util.ArrayList((carried.toSeq ++ rewritten).asJava),
-      m.schema), path, v, rewriteOnly = true)
+    commit(localFrame(spark, (mSchema, carried ++ rewritten)), path, v,
+      rewriteOnly = true)
   }
 
   /** One segment [[writeSlices]] wrote: slice id, segment dir, stats
-    * (row count, key min/max, the caller's `extra` aggregates in order)
-    * and the key-bloom sidecar path (null when none was written). */
-  private case class Slice(idx: Int, seg: String, n: Long, mn: Long,
-                           mx: Long, extra: Seq[Long], bloom: String)
+    * (row count, key min/max, the caller's `extra` aggregates in order;
+    * boxed, null where the slice holds only nulls) and the key-bloom
+    * sidecar path (null when none was written). */
+  private case class Slice(idx: Int, seg: String, n: Long,
+                           mn: java.lang.Long, mx: java.lang.Long,
+                           extra: Seq[java.lang.Long], bloom: String)
+
+  /** Basename prefix of [[writeSlices]]' temp dir under `_log`: not
+    * hidden (a `.`/`_` name makes Spark's read-back warn that all paths
+    * were ignored), and swept by [[gc]] after a crash. */
+  private val SlicesTmp = "slices-tmp-"
 
   /** Bloom items for an expected key count: floored so tiny segments
     * still get a usable filter, capped at [[MaxBloomItems]] so a
@@ -1239,24 +1336,27 @@ object SnapshotLog {
     * caller's `extra` aggregates, a key bloom of `items` expected keys,
     * [[bloomItems]]-clamped) — never a re-scan or a read job per slice —
     * then each slice dir renamed into the segment namespace, its bloom
-    * sidecar written when `sidecars`, and the temp dir dropped. The temp
-    * dir reads back under `tagged`'s schema: when every slice is empty
-    * the write emits no data file, and schema inference on it would
-    * throw. Returns the slices that received rows, by slice id. */
+    * sidecar written when `sidecars`, and the temp dir dropped. A null
+    * slice id (a null key's) files under slice 0. The temp dir reads
+    * back under `tagged`'s schema: when every slice is empty the write
+    * emits no data file, and schema inference on it would throw.
+    * Returns the slices that received rows, by slice id. */
   private def writeSlices(tagged: DataFrame, path: String, v: Int,
                           prefix: String, keyP: String, items: Long,
                           extra: Seq[Column] = Nil,
                           sidecars: Boolean = true): Seq[Slice] = {
     val tmp = new Path(logDir(path),
-      s".slices-tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      SlicesTmp + java.util.UUID.randomUUID().toString.take(8))
     val fs = fsOf(tmp)
-    tagged.repartition(col("_snap_slice"))
+    val sliced = tagged.withColumn("_snap_slice",
+      coalesce(col("_snap_slice"), lit(0)))
+    sliced.repartition(col("_snap_slice"))
       .write.partitionBy("_snap_slice").parquet(tmp.toString)
     val key = col(keyP).cast("long")
     val aggs = Seq(count(lit(1)), min(key), max(key)) ++ extra :+
       org.apache.spark.sql.graftbridge.SparkBridge
         .bloomFilterAgg(xxhash64(key), bloomItems(items))
-    val stats = tagged.sparkSession.read.schema(tagged.schema)
+    val stats = tagged.sparkSession.read.schema(sliced.schema)
       .parquet(tmp.toString)
       .groupBy(col("_snap_slice"))
       .agg(aggs.head, aggs.tail: _*)
@@ -1271,8 +1371,9 @@ object SnapshotLog {
         sys.error(s"could not move slice $i to $dir")
       val bloom = Option(r.getAs[Array[Byte]](4 + extra.length))
         .filter(_ => sidecars).map(writeBloomSidecar(path, v, i, _)).orNull
-      Slice(i, dir, r.getLong(1), r.getLong(2), r.getLong(3),
-        (4 until 4 + extra.length).map(r.getLong), bloom)
+      Slice(i, dir, r.getLong(1), r.getAs[java.lang.Long](2),
+        r.getAs[java.lang.Long](3),
+        (4 until 4 + extra.length).map(r.getAs[java.lang.Long]), bloom)
     }
     fs.delete(tmp, true)
     out
@@ -1306,6 +1407,8 @@ object SnapshotLog {
     val i = r.fieldIndex("stats")
     if (r.isNullAt(i)) return None
     r.getMap[String, org.apache.spark.sql.Row](i).get(c)
+      // a slice of nulls records null bounds: no range to prune on
+      .filter(s => !s.isNullAt(0) && !s.isNullAt(1))
       .map(s => (s.getLong(0), s.getLong(1)))
   }
 
@@ -1552,10 +1655,8 @@ object SnapshotLog {
       cmPairs, cmDropped)
     val newSeg = writeSegment(spark, inserts, path, v, 0, keyP)
       .filter(col("n_rows") > 0)
-    import scala.jdk.CollectionConverters._
-    val carriedDf = spark.createDataFrame(
-      new java.util.ArrayList(carried.asJava), mc.schema)
-    commit(carriedDf.unionByName(newSeg, allowMissingColumns = true),
+    commit(localFrame(spark, (mc.schema, carried))
+      .unionByName(newSeg, allowMissingColumns = true),
       path, v, txn = txn, colMap = cmArg)
   }
 
@@ -1616,7 +1717,7 @@ object SnapshotLog {
       .getOrElse(sys.error(s"no committed version at $path"))
     val (pairs, dropped) = columnMapping(path, v)
     val (keep, residual) = prune(physicalName(pairs, dropped, _))
-    val segs = manifest(spark, path, v).collect().toSeq
+    val segs = manifestRows(path, v)._2
     val hit = segs.filter(keep)
     val rows = readRows(spark, hit, mergeSchema = true)
       .map(_.filter(residual)).getOrElse(emptyFrame(spark, path, v, segs))
@@ -1742,8 +1843,8 @@ object SnapshotLog {
     * delta — the frame the audit queries run against. */
   def readStaged(spark: SparkSession, path: String,
                  name: String): DataFrame = {
-    val staged = spark.read.parquet(stageFile(path, name).toString)
-      .select(col("seg")).collect().map(_.getString(0))
+    val staged = manifestRows(stageFile(path, name))._2
+      .map(_.getAs[String]("seg"))
     val base = read(spark, path)
     if (staged.isEmpty) base
     else {
@@ -1765,7 +1866,7 @@ object SnapshotLog {
     val v = latestVersion(path).getOrElse(
       sys.error(s"publish onto non-existent table $path"))
     val f = stageFile(path, name)
-    val staged = spark.read.parquet(f.toString)
+    val staged = localFrame(spark, manifestRows(f))
     // allowMissingColumns: a publish onto a [[compactZOrder]]ed table
     // unions the stats-less staged manifest into a stats-mapped latest
     // — the staged segments' stats map reads as null (readers
@@ -1872,8 +1973,8 @@ object SnapshotLog {
     val anchor = rows.headOption.map(_.getAs[String]("seg")).orElse(
       (v to 0 by -1).iterator
         .filter(manifestExists(path, _))
-        .map(u => manifest(spark, path, u).select(col("seg"))
-          .limit(1).collect().headOption.map(_.getString(0)))
+        .map(u => manifestRows(path, u)._2.headOption
+          .map(_.getAs[String]("seg")))
         .collectFirst { case Some(s) => s })
     spark.read.parquet(anchor.getOrElse(sys.error(
       s"read of $path at v$v: no surviving version lists a segment to " +
@@ -1905,47 +2006,45 @@ object SnapshotLog {
     * anything no on-disk manifest lists is reclaimed. GC must not run
     * concurrently with a writer (an in-flight segment or temp manifest
     * is unreferenced until its commit) — the single-maintainer
-    * discipline every lakehouse GC documents. Returns the expired
-    * version numbers. */
+    * discipline every lakehouse GC documents. Each surviving manifest
+    * is decoded once, on the driver. Returns the expired version
+    * numbers. */
   def gc(spark: SparkSession, path: String, retainLast: Int): Seq[Int] = {
     require(retainLast >= 1, "must retain at least the latest version")
     val latest = latestVersion(path).getOrElse(
       sys.error(s"gc of non-existent table $path"))
     val fs = fsOf(new Path(path))
-    def mExists(v: Int): Boolean = fs.exists(new Path(manifestDir(path, v)))
     val retained = (0 to latest)
       .filter(v => v > latest - retainLast).toSet ++ pinnedVersions(path)
-    val expired = (0 to latest).filterNot(retained).filter(mExists)
-    def segsOf(v: Int): Set[String] = manifest(spark, path, v)
-      .select(col("seg")).collect().map(_.getString(0)).toSet
-    val keep = retained.filter(mExists).flatMap(segsOf)
+    val rowsOf = (0 to latest).filter(manifestExists(path, _))
+      .map(v => v -> manifestRows(path, v)._2).toMap
+    val (kept, expiredRows) = rowsOf.partition { case (v, _) => retained(v) }
+    val expired = expiredRows.keys.toSeq.sorted
+    def segsOf(rows: Iterable[Seq[Row]]): Set[String] =
+      rows.flatten.map(_.getAs[String]("seg")).toSet
+    val keep = segsOf(kept.values)
     // ownership is root-scoped: segments referenced from OUTSIDE this
     // table's data directory (a shallow [[cloneTable]]'s by-path
     // references into its source) are the SOURCE's to reclaim — this
     // table's gc must never delete another table's files
     val ownPrefix = fs.makeQualified(new Path(path, "data")).toString + "/"
-    val orphans = (expired.flatMap(segsOf).toSet -- keep)
+    val orphans = (segsOf(expiredRows.values) -- keep)
       .filter(s => fs.makeQualified(new Path(s)).toString
         .startsWith(ownPrefix))
     orphans.foreach(s => fs.delete(new Path(s), true))
     expired.foreach(v => fs.delete(new Path(manifestDir(path, v)), true))
     // unreferenced-segment sweep: reclaim crashed writeSegment attempts
-    // — data dirs no surviving manifest lists (expired manifests are
-    // already gone, so "on-disk manifests" == the retained set). OPEN
-    // stages count as references: a staged-but-unpublished batch is
-    // live until published or abandoned.
+    // — data dirs no surviving (retained) manifest lists. OPEN stages
+    // count as references: a staged-but-unpublished batch is live
+    // until published or abandoned.
     val dataDir = new Path(path, "data")
     if (fs.exists(dataDir)) {
       val ld0 = new Path(logDir(path))
       val stagedSegs = fs.listStatus(ld0).toSeq
         .filter(_.getPath.getName.startsWith("stage-"))
-        .flatMap { st =>
-          spark.read.parquet(st.getPath.toString)
-            .select(col("seg")).collect().map(_.getString(0))
-        }
-      val referenced = ((0 to latest).filter(mExists).flatMap(segsOf) ++
-          stagedSegs)
-        .map(s => fs.makeQualified(new Path(s))).toSet
+        .flatMap(st => manifestRows(st.getPath)._2.map(_.getAs[String]("seg")))
+      val referenced = (keep ++ stagedSegs)
+        .map(s => fs.makeQualified(new Path(s)))
       fs.listStatus(dataDir).toSeq
         .filterNot(st => referenced.contains(fs.makeQualified(st.getPath)))
         .foreach(st => fs.delete(st.getPath, true))
@@ -1958,8 +2057,7 @@ object SnapshotLog {
     // source are the source's to reclaim (and its pin protects them).
     val dvRoot = new Path(path, "dv")
     if (fs.exists(dvRoot)) {
-      val refDvs = (0 to latest).filter(mExists)
-        .flatMap(v => manifest(spark, path, v).collect().flatMap(dvListOf))
+      val refDvs = kept.values.flatten.flatMap(dvListOf)
         .map(s => fs.makeQualified(new Path(s))).toSet
       fs.listStatus(dvRoot).toSeq
         .filterNot(st => refDvs.contains(fs.makeQualified(st.getPath)))
@@ -1970,20 +2068,22 @@ object SnapshotLog {
     // references it (segment rewrites and version expiry orphan them)
     val bloomRoot = new Path(path, "bloom")
     if (fs.exists(bloomRoot)) {
-      val refBlooms = (0 to latest).filter(mExists)
-        .flatMap(v => manifest(spark, path, v).collect()
-          .flatMap(bloomPathOf))
+      val refBlooms = kept.values.flatten.flatMap(bloomPathOf)
         .map(s => fs.makeQualified(new Path(s))).toSet
       fs.listStatus(bloomRoot).toSeq
         .filterNot(st => refBlooms.contains(fs.makeQualified(st.getPath)))
         .foreach(st => fs.delete(st.getPath, true))
     }
-    // crashed commit/hint temp dirs (hidden `.`-prefixed names inside
-    // _log — losers delete their own, this catches hard crashes)
+    // crashed temp dirs inside _log — commit/hint temps (hidden
+    // `.`-prefixed names) and [[writeSlices]]' — losers delete their
+    // own, this catches hard crashes
     val ld = new Path(logDir(path))
     if (fs.exists(ld)) {
       fs.listStatus(ld).toSeq
-        .filter(st => st.getPath.getName.startsWith("."))
+        .filter { st =>
+          val n = st.getPath.getName
+          n.startsWith(".") || n.startsWith(SlicesTmp)
+        }
         .foreach(st => fs.delete(st.getPath, true))
     }
     expired
@@ -2009,9 +2109,8 @@ object SnapshotLog {
   def diff(spark: SparkSession, path: String, vFrom: Int, vTo: Int,
            keyCol: String): DataFrame = {
     require(vFrom < vTo, s"diff requires vFrom < vTo, got $vFrom..$vTo")
-    def rowsOf(v: Int): Seq[org.apache.spark.sql.Row] =
-      manifest(spark, path, v).collect().toSeq
-    val from = rowsOf(vFrom); val to = rowsOf(vTo)
+    val from = manifestRows(path, vFrom)._2
+    val to = manifestRows(path, vTo)._2
     // the copy-on-write sharing unit is (segment, deletion vectors): a
     // [[mergeDv]] changes a segment's dvs list WITHOUT changing its
     // path, and its suppressed rows must surface as deletes — so the
