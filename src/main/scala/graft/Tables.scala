@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.ParquetFooter
 
 /** Parquet table loaders for the driver-generated TPC-H-ish testdata.
   *
@@ -8,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (ram-analysis/app/index.js:200-339) which pulls origins, POIs, admin
   * areas and file metadata from Postgres; here every entity is a parquet
   * table and Catalyst handles projection/filter pushdown into the scan.
+  * Like the reference's queries, a load knows its schema before it runs:
+  * [[ParquetFooter]] reads it from the file's footer on the driver.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -15,7 +18,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    ParquetFooter.read(spark, Seq(s"$sfDir/$name.parquet"))
 
   /** Scale-adaptive scan fan-out (optimization guide §2.5, input skew:
     * "one huge unsplittable file — repartition immediately after the

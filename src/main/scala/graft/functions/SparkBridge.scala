@@ -2,8 +2,8 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.util.CallSite
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.util.{CallSite, HadoopFSUtils}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ScalarSubquery}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -100,4 +100,14 @@ object SparkBridge {
     * schema `spark.read` gives a file source (`asNullable` is
     * `private[spark]`). */
   def asNullable(s: StructType): StructType = s.asNullable
+
+  /** `a` merged with `b` as a `mergeSchema` read merges two files'
+    * schemas (`merge` is `private[sql]`). */
+  def mergeSchemas(spark: SparkSession, a: StructType, b: StructType): StructType =
+    a.merge(b, spark.sessionState.conf.caseSensitiveAnalysis)
+
+  /** Whether a file source's listing skips the file or directory named
+    * `name` (`_`/`.` names other than parquet summaries, `._COPYING_`). */
+  def hiddenPathName(name: String): Boolean =
+    HadoopFSUtils.shouldFilterOutPathName(name)
 }

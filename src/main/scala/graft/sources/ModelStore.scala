@@ -152,6 +152,6 @@ object ModelStore {
         }
       }
     }
-    spark.read.parquet(path)
+    ParquetFooter.read(spark, Seq(path))
   }
 }

@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Sharded training-corpus materialization — the final write step of a
   * data pipeline: the curated corpus lands as N deterministic
@@ -61,13 +63,15 @@ object ShardSink {
   /** Read a shard set back and VERIFY it against its manifest: recount
     * every shard from the data and anti-join against the stored
     * manifest — any lost/duplicated/bit-flipped doc surfaces as a
-    * mismatched row. Returns the per-shard verdict frame. */
+    * mismatched row. The manifest (one row per shard) is decoded on the
+    * driver into a local frame. Returns the per-shard verdict frame. */
   def verifyShards(spark: SparkSession, path: String): DataFrame = {
-    val stored = spark.read.parquet(s"$path/_manifest")
+    val (schema, rows) = ParquetFooter.rows(spark, new Path(s"$path/_manifest"))
+    val stored = spark.createDataFrame(rows.asJava, schema)
       .withColumnRenamed("n_docs", "m_docs")
       .withColumnRenamed("n_tokens", "m_tokens")
       .withColumnRenamed("checksum", "m_checksum")
-    val recomputed = spark.read.parquet(path)
+    val recomputed = ParquetFooter.read(spark, Seq(path))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("text"), " "))).as("n_tokens"),

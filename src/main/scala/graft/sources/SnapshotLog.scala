@@ -3,13 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext,
   FileSystem, Options, Path}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SparkBridge
 import org.apache.spark.sql.types._
@@ -72,8 +66,10 @@ final class ConcurrentCommitException(msg: String)
   *
   * Scale posture: a manifest is segment-count-sized (it lists
   * directories, never rows), so the driver decodes it directly
-  * ([[manifestRows]]) — a manifest read runs no Spark job, and the
-  * per-verb metadata floor is file I/O, not job scheduling. Only
+  * ([[manifestRows]]) — a manifest read runs no Spark job — and every
+  * segment, tombstone and stage read learns its schema through
+  * [[ParquetFooter]] (the frame just written, else driver-read footers),
+  * so the per-verb metadata floor is file I/O, not job scheduling. Only
   * [[history]] scans manifests with Spark: one job over every
   * surviving version. Upsert prunes by the manifest's key-range stats
   * so only segments whose [min,max] overlaps the incoming keys are
@@ -187,77 +183,16 @@ object SnapshotLog {
     * A local frame over [[manifestRows]]: collecting, filtering or
     * projecting it runs no Spark job. */
   def manifest(spark: SparkSession, path: String, version: Int): DataFrame =
-    localFrame(spark, manifestRows(path, version))
+    localFrame(spark, manifestRows(spark, path, version))
 
-  /** The decoded manifest of version `v` ([[manifestRows]]). */
-  private[graft] def manifestRows(path: String, v: Int): (StructType, Seq[Row]) =
-    manifestRows(new Path(manifestDir(path, v)))
-
-  /** The manifest directory `dir` (a version's or a stage's) decoded on
-    * the driver, with no Spark job: the part files — names starting
-    * with `_` or `.` are skipped, the same files Spark's listing skips
-    * (`_colmap`, `_txn-*`, `_rewriteonly`, `_SUCCESS`, checksums) — read
-    * with parquet-hadoop under the Spark schema their footer records,
-    * made nullable. Schema and rows equal what
-    * `spark.read.parquet(dir)` gives, value for value, and a
-    * segment-less manifest keeps its schema (its one part file has a
-    * footer and no rows). Committed manifests are immutable, so every
-    * read simply decodes the file. */
-  private[graft] def manifestRows(dir: Path): (StructType, Seq[Row]) = {
-    val parts = fsOf(dir).listStatus(dir).toSeq.map(_.getPath)
-      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-      .sortBy(_.getName)
-    require(parts.nonEmpty, s"manifest $dir has no part file")
-    val decoded = parts.map { p =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hadoopConf))
-      try {
-        val meta = reader.getFooter.getFileMetaData
-        val schema = SparkBridge.asNullable(DataType.fromJson(
-          meta.getKeyValueMetaData.get(SparkRowMetadata)).asInstanceOf[StructType])
-        val io = new ColumnIOFactory().getColumnIO(meta.getSchema)
-        val rows = Iterator.continually(reader.readNextRowGroup())
-          .takeWhile(_ != null)
-          .flatMap { pages =>
-            val records = io.getRecordReader(pages,
-              new GroupRecordConverter(meta.getSchema))
-            Iterator.fill(pages.getRowCount.toInt)(
-              decodeRow(records.read(), schema))
-          }.toVector
-        (schema, rows)
-      } finally reader.close()
-    }
-    (decoded.head._1, decoded.flatMap(_._2))
-  }
-
-  /** Footer key under which Spark records a file's row schema. */
-  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
-
-  /** One parquet record as the row Spark's reader would return: nested
-    * structs are rows, lists are Seqs (Spark's 3-level list layout),
-    * maps are Maps (`key_value` groups), an absent field is null. */
-  private def decodeRow(g: Group, schema: StructType): Row =
-    new GenericRowWithSchema(schema.fields.map(f =>
-      decodeField(g, g.getType.getFieldIndex(f.name), f.dataType)), schema)
-
-  private def decodeField(g: Group, i: Int, t: DataType): Any =
-    if (g.getFieldRepetitionCount(i) == 0) null
-    else t match {
-      case StringType => g.getString(i, 0)
-      case LongType => g.getLong(i, 0)
-      case IntegerType => g.getInteger(i, 0)
-      case s: StructType => decodeRow(g.getGroup(i, 0), s)
-      case ArrayType(e, _) =>
-        val list = g.getGroup(i, 0)
-        (0 until list.getFieldRepetitionCount(0))
-          .map(j => decodeField(list.getGroup(0, j), 0, e))
-      case MapType(k, v, _) =>
-        val kvs = g.getGroup(i, 0)
-        (0 until kvs.getFieldRepetitionCount(0)).map { j =>
-          val kv = kvs.getGroup(0, j)
-          decodeField(kv, 0, k) -> decodeField(kv, 1, v)
-        }.toMap
-      case other => sys.error(s"manifest column type $other is not decodable")
-    }
+  /** The manifest of version `v` decoded on the driver
+    * ([[ParquetFooter.rows]]): schema and rows equal what
+    * `spark.read.parquet` of the manifest directory gives, and no Spark
+    * job runs. Committed manifests are immutable, so every read simply
+    * decodes the file. */
+  private[graft] def manifestRows(spark: SparkSession, path: String,
+                                  v: Int): (StructType, Seq[Row]) =
+    ParquetFooter.rows(spark, new Path(manifestDir(path, v)))
 
   /** A local frame over decoded manifest rows: actions on it (and on
     * projections and filters of it) run no Spark job. */
@@ -568,7 +503,7 @@ object SnapshotLog {
            mergeSchema: Boolean = false): DataFrame = {
     val v = version.orElse(latestVersion(path))
       .getOrElse(sys.error(s"no committed version at $path"))
-    val rows = manifestRows(path, v)._2
+    val rows = manifestRows(spark, path, v)._2
     // readRows applies any deletion vectors ([[mergeDv]]); a DV-free
     // manifest goes through the plain multi-directory scan unchanged
     val phys = readRows(spark, rows, mergeSchema)
@@ -599,12 +534,12 @@ object SnapshotLog {
     df.write.mode("errorifexists").parquet(dir)
     val aggs = Seq(count(lit(1)).as("n_rows"),
       min(col(keyCol)).as("min_key"), max(col(keyCol)).as("max_key")) ++
-      bloomExpected.map(n => org.apache.spark.sql.graftbridge.SparkBridge
+      bloomExpected.map(n => SparkBridge
         .bloomFilterAgg(xxhash64(col(keyCol).cast("long")), n)
         .as("_bloom"))
     val out = Seq(col("n_rows"), col("min_key"), col("max_key")) ++
       bloomExpected.map(_ => col("_bloom"))
-    spark.read.parquet(dir)
+    ParquetFooter.read(spark, Seq(dir), known = Some(df.schema))
       .agg(aggs.head, aggs.tail: _*)
       .select(lit(dir).as("seg") +: out: _*)
   }
@@ -902,9 +837,10 @@ object SnapshotLog {
     * stats of the symmetric difference between its manifest and its
     * parent's segment lists — the same copy-on-write invariant
     * [[diff]] exploits. Segment-count-sized driver work. */
-  private def touchedRanges(path: String, w: Int): Seq[(Long, Long)] = {
-    val prev = manifestRows(path, w - 1)._2
-    val cur = manifestRows(path, w)._2
+  private def touchedRanges(spark: SparkSession, path: String,
+                            w: Int): Seq[(Long, Long)] = {
+    val prev = manifestRows(spark, path, w - 1)._2
+    val cur = manifestRows(spark, path, w)._2
     // identity is (segment, deletion vectors) — a [[mergeDv]] commit
     // changes a segment's dvs without changing its path, and the keys
     // it suppressed count as touched (conservatively, via the
@@ -988,7 +924,7 @@ object SnapshotLog {
           val now = latestVersion(path).getOrElse(throw e)
           val conflict = (base + 1 to now).exists { w =>
             !manifestExists(path, w) || !manifestExists(path, w - 1) ||
-              touchedRanges(path, w).exists { case (mn, mx) =>
+              touchedRanges(spark, path, w).exists { case (mn, mx) =>
                 mx >= lo && mn <= hi }
           }
           if (conflict) throw new ConcurrentCommitException(
@@ -1080,7 +1016,7 @@ object SnapshotLog {
     // segment rewrites work in PHYSICAL names (readRows output)
     val (cmPairs0, cmDropped0) = columnMapping(path, v0)
     val keyP = physicalName(cmPairs0, cmDropped0, keyCol)
-    val (mSchema, segs) = manifestRows(path, v0)
+    val (mSchema, segs) = manifestRows(spark, path, v0)
     val (small, big) = segs.partition(_.getAs[Long]("n_rows") < minRows)
     // a lone segment still folds when it carries deletion vectors —
     // compaction is the verb that PURGES tombstones back into data
@@ -1180,7 +1116,7 @@ object SnapshotLog {
     val xP = physicalName(cmP, cmD, xCol)
     val yP = physicalName(cmP, cmD, yCol)
     val statsP = statsCols.map(physicalName(cmP, cmD, _))
-    val segs = manifestRows(path, v0)._2
+    val segs = manifestRows(spark, path, v0)._2
     if (segs.length <= 1 && !segs.exists(dvListOf(_).nonEmpty)) return v0
     val v = v0 + 1
     // readRows applies any deletion vectors: the rewrite purges them.
@@ -1266,7 +1202,7 @@ object SnapshotLog {
     // segment rewrites work in PHYSICAL names (readRows output)
     val (cmP, cmD) = columnMapping(path, v0)
     val keyP = physicalName(cmP, cmD, keyCol)
-    val (mSchema, rows) = manifestRows(path, v0)
+    val (mSchema, rows) = manifestRows(spark, path, v0)
     val (targets, carried) = rows.partition { r =>
       dvListOf(r).nonEmpty && r.getAs[Long]("n_rows") > 0 &&
         dvRowsOf(r).toDouble >= minDvFrac * r.getAs[Long]("n_rows")
@@ -1354,10 +1290,9 @@ object SnapshotLog {
       .write.partitionBy("_snap_slice").parquet(tmp.toString)
     val key = col(keyP).cast("long")
     val aggs = Seq(count(lit(1)), min(key), max(key)) ++ extra :+
-      org.apache.spark.sql.graftbridge.SparkBridge
-        .bloomFilterAgg(xxhash64(key), bloomItems(items))
-    val stats = tagged.sparkSession.read.schema(sliced.schema)
-      .parquet(tmp.toString)
+      SparkBridge.bloomFilterAgg(xxhash64(key), bloomItems(items))
+    val stats = ParquetFooter.read(tagged.sparkSession, Seq(tmp.toString),
+        known = Some(sliced.schema))
       .groupBy(col("_snap_slice"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().toSeq
@@ -1500,9 +1435,7 @@ object SnapshotLog {
     if (rows.isEmpty) return None
     val (dvd, plain) = rows.partition(dvListOf(_).nonEmpty)
     def readPlain(segs: Seq[String]): DataFrame =
-      if (mergeSchema)
-        spark.read.option("mergeSchema", "true").parquet(segs: _*)
-      else spark.read.parquet(segs: _*)
+      ParquetFooter.read(spark, segs, mergeSchema)
     val plainDf =
       if (plain.isEmpty) None
       else Some(readPlain(plain.map(_.getAs[String]("seg"))))
@@ -1553,7 +1486,7 @@ object SnapshotLog {
     val live =
       if (dvPaths.isEmpty) tagged
       else {
-        val tombs = spark.read.parquet(dvPaths: _*)
+        val tombs = ParquetFooter.read(spark, dvPaths)
         val kc = tombs.columns.filter(_ != "_snap_seg").head
         tagged.join(broadcast(
           if (!oneScan) tombs
@@ -1629,13 +1562,13 @@ object SnapshotLog {
         val (live, segOf) = scanLive(spark,
           affected.map(_.getAs[String]("seg")),
           affected.flatMap(dvListOf).distinct,
-          segs => spark.read.parquet(segs: _*).select(col(keyP)))
+          segs => ParquetFooter.read(spark, segs).select(col(keyP)))
         val tomb = live.join(
           broadcast(df.select(col(keyCol).as(keyP)).distinct()),
           Seq(keyP), "left_semi")
           .select(segOf.as("_snap_seg"), col(keyP))
         tomb.write.mode("errorifexists").parquet(dvDir)
-        val got = spark.read.parquet(dvDir)
+        val got = ParquetFooter.read(spark, Seq(dvDir), known = Some(tomb.schema))
           .groupBy(col("_snap_seg")).agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         if (got.isEmpty) fsOf(new Path(dvDir)).delete(new Path(dvDir), true)
@@ -1717,7 +1650,7 @@ object SnapshotLog {
       .getOrElse(sys.error(s"no committed version at $path"))
     val (pairs, dropped) = columnMapping(path, v)
     val (keep, residual) = prune(physicalName(pairs, dropped, _))
-    val segs = manifestRows(path, v)._2
+    val segs = manifestRows(spark, path, v)._2
     val hit = segs.filter(keep)
     val rows = readRows(spark, hit, mergeSchema = true)
       .map(_.filter(residual)).getOrElse(emptyFrame(spark, path, v, segs))
@@ -1843,7 +1776,7 @@ object SnapshotLog {
     * delta — the frame the audit queries run against. */
   def readStaged(spark: SparkSession, path: String,
                  name: String): DataFrame = {
-    val staged = manifestRows(stageFile(path, name))._2
+    val staged = ParquetFooter.rows(spark, stageFile(path, name))._2
       .map(_.getAs[String]("seg"))
     val base = read(spark, path)
     if (staged.isEmpty) base
@@ -1852,7 +1785,7 @@ object SnapshotLog {
       val v = latestVersion(path).get
       val (pairs, dropped) = columnMapping(path, v)
       base.unionByName(
-        applyColMap(spark.read.parquet(staged: _*), pairs, dropped))
+        applyColMap(ParquetFooter.read(spark, staged), pairs, dropped))
     }
   }
 
@@ -1866,7 +1799,7 @@ object SnapshotLog {
     val v = latestVersion(path).getOrElse(
       sys.error(s"publish onto non-existent table $path"))
     val f = stageFile(path, name)
-    val staged = localFrame(spark, manifestRows(f))
+    val staged = localFrame(spark, ParquetFooter.rows(spark, f))
     // allowMissingColumns: a publish onto a [[compactZOrder]]ed table
     // unions the stats-less staged manifest into a stats-mapped latest
     // — the staged segments' stats map reads as null (readers
@@ -1966,19 +1899,22 @@ object SnapshotLog {
     * the nearest surviving version at or below `v`: a merge that
     * deletes every row legitimately commits a SEGMENT-LESS manifest
     * (the empty replacement segment is elided), so empty-result paths
-    * must not assume `segs.head` exists. Fails only when no surviving
-    * version lists any segment at all. */
+    * must not assume `segs.head` exists. The anchor's footer gives the
+    * schema (a driver read, no segment scan). Fails only when no
+    * surviving version lists any segment at all. */
   private def emptyFrame(spark: SparkSession, path: String, v: Int,
                          rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
     val anchor = rows.headOption.map(_.getAs[String]("seg")).orElse(
       (v to 0 by -1).iterator
         .filter(manifestExists(path, _))
-        .map(u => manifestRows(path, u)._2.headOption
+        .map(u => manifestRows(spark, path, u)._2.headOption
           .map(_.getAs[String]("seg")))
         .collectFirst { case Some(s) => s })
-    spark.read.parquet(anchor.getOrElse(sys.error(
+    val seg = anchor.getOrElse(sys.error(
       s"read of $path at v$v: no surviving version lists a segment to " +
-        "anchor the table schema"))).limit(0)
+        "anchor the table schema"))
+    localFrame(spark, (ParquetFooter.schema(spark, Seq(seg))
+      .getOrElse(sys.error(s"segment $seg of $path has no parquet file")), Nil))
   }
 
   def pinnedVersions(path: String): Set[Int] = {
@@ -2017,7 +1953,7 @@ object SnapshotLog {
     val retained = (0 to latest)
       .filter(v => v > latest - retainLast).toSet ++ pinnedVersions(path)
     val rowsOf = (0 to latest).filter(manifestExists(path, _))
-      .map(v => v -> manifestRows(path, v)._2).toMap
+      .map(v => v -> manifestRows(spark, path, v)._2).toMap
     val (kept, expiredRows) = rowsOf.partition { case (v, _) => retained(v) }
     val expired = expiredRows.keys.toSeq.sorted
     def segsOf(rows: Iterable[Seq[Row]]): Set[String] =
@@ -2042,7 +1978,8 @@ object SnapshotLog {
       val ld0 = new Path(logDir(path))
       val stagedSegs = fs.listStatus(ld0).toSeq
         .filter(_.getPath.getName.startsWith("stage-"))
-        .flatMap(st => manifestRows(st.getPath)._2.map(_.getAs[String]("seg")))
+        .flatMap(st => ParquetFooter.rows(spark, st.getPath)._2
+          .map(_.getAs[String]("seg")))
       val referenced = (keep ++ stagedSegs)
         .map(s => fs.makeQualified(new Path(s)))
       fs.listStatus(dataDir).toSeq
@@ -2109,8 +2046,8 @@ object SnapshotLog {
   def diff(spark: SparkSession, path: String, vFrom: Int, vTo: Int,
            keyCol: String): DataFrame = {
     require(vFrom < vTo, s"diff requires vFrom < vTo, got $vFrom..$vTo")
-    val from = manifestRows(path, vFrom)._2
-    val to = manifestRows(path, vTo)._2
+    val from = manifestRows(spark, path, vFrom)._2
+    val to = manifestRows(spark, path, vTo)._2
     // the copy-on-write sharing unit is (segment, deletion vectors): a
     // [[mergeDv]] changes a segment's dvs list WITHOUT changing its
     // path, and its suppressed rows must surface as deletes — so the

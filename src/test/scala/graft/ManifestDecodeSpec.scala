@@ -1,11 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.SnapshotLog
+import graft.sources.{ParquetFooter, SnapshotLog}
 
-/** [[SnapshotLog.manifestRows]] decodes a manifest on the driver. The
+/** [[ParquetFooter.rows]] decodes a manifest on the driver. The
   * contract under test: for every manifest shape the verbs write, its
   * schema and rows equal what `spark.read.parquet(dir)` returns, value
   * for value (`dvs` Seqs, the `stats` map, null stats and blooms, a
@@ -28,36 +27,14 @@ class ManifestDecodeSpec extends AnyFunSuite {
     * own read of the directory. */
   private def decodesAsSpark(dir: String): (org.apache.spark.sql.types.StructType,
                                             Seq[org.apache.spark.sql.Row]) = {
-    val (schema, rows) = SnapshotLog.manifestRows(new Path(dir))
+    val (schema, rows) = ParquetFooter.rows(spark, new Path(dir))
     val bySpark = spark.read.parquet(dir)
     assert(schema == bySpark.schema, dir)
     assert(rows == bySpark.collect().toSeq, dir)
     (schema, rows)
   }
 
-  /** Jobs started while `f` runs. Listener delivery is asynchronous, so
-    * the count is polled until it settles. */
-  private def jobsDuring(f: => Unit): Int = {
-    val counter = new AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      var last = -1
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val c = counter.get
-        if (c == last) same += 1 else { same = 0; last = c }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def jobsDuring(f: => Unit): Int = JobLedger.during(spark)(f)._2.length
 
   test("manifestRows equals spark.read.parquet for every manifest shape; gc and a manifest frame's collect start no Spark job") {
     import spark.implicits._

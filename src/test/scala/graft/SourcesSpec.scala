@@ -33,23 +33,26 @@ class SourcesSpec extends AnyFunSuite {
     assert(verdicts.length == nShards)
     assert(verdicts.forall(_.getBoolean(2)), "manifest mismatch")
     assert(verdicts.map(_.getLong(1)).sum == docs.count())
+    // the manifest, decoded on the driver as verifyShards reads it
+    def manifest = graft.sources.ParquetFooter.rows(spark,
+      new org.apache.hadoop.fs.Path(s"$path/_manifest"))
     // determinism: a rewrite yields the byte-identical manifest
-    val m1 = spark.read.parquet(s"$path/_manifest").collect().map(_.toSeq).toSet
+    val m1 = manifest._2.map(_.toSeq).toSet
     ShardSink.writeShards(docs, path, nShards)
-    val m2 = spark.read.parquet(s"$path/_manifest").collect().map(_.toSeq).toSet
+    val m2 = manifest._2.map(_.toSeq).toSet
     assert(m1 == m2, "rerun changed the manifest")
     // hash balance: no shard more than 2x the uniform share
     val counts = verdicts.map(_.getLong(1))
     assert(counts.max <= 2 * docs.count() / nShards,
       s"skewed shards: ${counts.mkString(",")}")
     // tamper detection: a corrupted manifest row must fail verification
-    // (materialize with localCheckpoint first — an overwrite of the
-    // same path a lazy plan still reads would race its own scan)
-    val tampered = spark.read.parquet(s"$path/_manifest")
+    // (a local frame over the decoded rows: no lazy scan of the path
+    // the overwrite replaces)
+    val tampered = spark.createDataFrame(
+        java.util.Arrays.asList(manifest._2: _*), manifest._1)
       .withColumn("checksum",
         when(col("shard") === 0, col("checksum") + 1L)
           .otherwise(col("checksum")))
-      .localCheckpoint()
     tampered.coalesce(1).write.mode("overwrite")
       .parquet(s"$path/_manifest")
     val after = ShardSink.verifyShards(spark, path).collect()

@@ -37,29 +37,7 @@ class WarehouseSpec extends AnyFunSuite {
   }
 
   test("default bloom sizing derives from plan statistics, not a count job") {
-    import java.util.concurrent.atomic.AtomicInteger
-    def jobsDuring(f: => Unit): Int = {
-      val counter = new AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        f
-        // listener delivery is async: poll until the count stabilizes
-        var last = -1
-        var same = 0
-        while (same < 3) {
-          Thread.sleep(100)
-          val c = counter.get
-          if (c == last) same += 1 else { same = 0; last = c }
-        }
-        last
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+    def jobsDuring(f: => Unit): Int = JobLedger.during(spark)(f)._2.length
     val li = Tables.lineitem(spark, sf).select(col("l_suppkey"))
     val sup = Tables.supplier(spark, sf)
       .filter(col("s_nationkey") === 7).select(col("s_suppkey"))
