@@ -734,13 +734,12 @@ object Accessibility {
     * everything after it operates on CELLS, whose count is bounded by
     * the geographic extent / cellDeg^2 — a constant as the corpus
     * grows, so the core set and its labels BROADCAST at any data
-    * scale, and the component closure itself is driver union-find over
-    * the collected cell set (geography-sized driver state — the
-    * Scalars-discipline bound; labels identical to the distributed
-    * min-label loop this ran through r20, which spent ~40 stage-jobs
-    * on a <100-cell graph). Points meet cluster labels through two
-    * broadcast hash joins (self cell, then neighborhood lookup) — the
-    * point frame is never shuffled at all before the oracle ORDER BY. */
+    * scale, and the component closure itself is [[Graph.minLabels]]
+    * on the driver over the collected cell set (geography-sized driver
+    * state, within its asserted edge bound). Points meet cluster labels
+    * through two broadcast hash joins (self cell, then neighborhood
+    * lookup) — the point frame is never shuffled at all before the
+    * oracle ORDER BY. */
   def gridDensity(spark: SparkSession, dir: String,
                   cellDeg: Double = 8.0, minPts: Long = 3): DataFrame = {
     val cid = (cx: Column, cy: Column) => cx * 1000L + cy
@@ -755,36 +754,18 @@ object Accessibility {
     // 8-connected components of the CORE CELLS — a geography-sized
     // graph (extent/cellDeg² cells, CONSTANT as the corpus grows: the
     // same bound that lets the core set and its labels broadcast
-    // below), so the closure is driver arithmetic under the Scalars
-    // discipline: collect the core cells once, enumerate each cell's
-    // 3x3 stencil against the cell-id set (identical adjacency to the
-    // old stencil-join: ncid = cid + dx·1000 + dy, self excluded), and
-    // union-find with min-label roots — labels identical to the
-    // distributed min-label loop (cluster = min cell id reachable),
-    // with zero per-round jobs/planning (the r21 profile measured the
-    // loop at ~40 stage-jobs over a <100-cell graph).
+    // below), so it is closed on the driver by Graph.minLabels over
+    // each core cell's 3x3 stencil against the core set (ncid = cid +
+    // dx·1000 + dy; the cell itself included, so an isolated core cell
+    // is its own cluster)
     import spark.implicits._
-    val coreCells = core.select(col("cid")).collect().map(_.getLong(0))
+    val coreCells = core.select(col("cid")).as[Long].collect()
     val cidSet = coreCells.toSet
-    val parent = scala.collection.mutable.Map(coreCells.map(c => c -> c): _*)
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    coreCells.foreach { c =>
-      for (dx <- -1L to 1L; dy <- -1L to 1L if dx != 0L || dy != 0L) {
-        val n = c + dx * 1000L + dy
-        if (cidSet.contains(n)) {
-          val (ra, rb) = (find(c), find(n))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-      }
-    }
-    val labels = coreCells.toSeq.map(c => (c, find(c)))
-      .toDF("cid", "cluster")
+    val stencil = for (c <- coreCells; dx <- -1L to 1L; dy <- -1L to 1L
+                       if cidSet.contains(c + dx * 1000L + dy))
+      yield (c, c + dx * 1000L + dy)
+    val (cells, clusters) = Graph.minLabels(stencil.map(_._1), stencil.map(_._2))
+    val labels = cells.zip(clusters).toSeq.toDF("cid", "cluster")
     val offsets = array((-1 to 1).flatMap(dx => (-1 to 1).map(dy =>
       struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy")))): _*)
     val coreLabeled = core.join(broadcast(labels), Seq("cid"))

@@ -493,8 +493,8 @@ object Dedup {
         .join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
       .select(col("doc_id"), array_distinct(col("shingles")).as("sh")))
     // output is verified-pair-sized (tinier still); pinning it lets
-    // multi-reference consumers (nearDupClusters' two-orientation
-    // union, splitLeakage's two broadcast builds) read it instead of
+    // multi-reference consumers (nearDupClusters' edge set and node
+    // list, splitLeakage's two broadcast builds) read it instead of
     // re-running the verify join per reference, and frees the
     // candidate pin immediately
     s.pin(candsP
@@ -775,77 +775,23 @@ object Dedup {
   }
 
   /** Near-duplicate CLUSTERS from the verified pair list: connected
-    * components via iterative min-label propagation — the final step of
-    * a production dedup pipeline (pairs alone over-count; keep-one-per-
-    * component is the actual delete set).
-    *
-    * Each iteration is ONE job: the changed-label count rides inside the
-    * same aggregation that materializes the next label frame (a lazy
-    * pin whose first action is that count), instead of a
-    * separate join + isEmpty convergence probe. Converges in O(component
-    * diameter) rounds — near-dup components are shallow in practice
-    * (diameter 1-2 after a 0.8-Jaccard verify), which is also why this
-    * stays the single-hop loop rather than [[Graph.minLabelComponents]]'
-    * pointer jumping: the r21 optimization round measured the jump
-    * kernel's three joins per round costing more AQE stage-jobs than
-    * its round savings returns on these graphs (3.2 s vs 4.2 s at
-    * sf0.1). A per-round pin truncates the growing lineage each round
-    * so the plan stays O(1) instead of O(iterations); the superseded
-    * round's pinned blocks are explicitly unpersisted. Driver-side
-    * loop control with a scalar count per round; no per-row driver work.
-    *
-    * If maxIter is hit before convergence the labels are UNDER-MERGED
-    * (a component of diameter > maxIter keeps several labels), so this
-    * throws rather than silently returning a wrong delete set; the
-    * default bounds any real corpus (diameter-20 near-dup chains do not
-    * survive a 0.8-Jaccard verify step).
+    * components ([[Graph.minLabelComponents]] over the pairs, labeling
+    * the docs that appear in a pair) — the final step of a production
+    * dedup pipeline (pairs alone over-count; keep-one-per-component is
+    * the actual delete set).
     *
     * Output: (doc_id, cluster, cluster_size), cluster = min doc_id of
     * the component (deterministic), singletons excluded (docs in no
     * pair are their own survivor by definition). */
-  def nearDupClusters(spark: SparkSession, dir: String,
-                      maxIter: Int = 20): DataFrame = Pins.scope { s =>
-    import spark.implicits._
+  def nearDupClusters(spark: SparkSession,
+                      dir: String): DataFrame = Pins.scope { s =>
     val pairs = ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b"))
-    // single-hop min-label loop, deliberately NOT the pointer-jumping
-    // kernel: near-dup components are SHALLOW (diameter 1-2 — a
-    // 0.8-Jaccard verify step does not produce long chains), so the
-    // hop loop converges in 2-3 one-join rounds while the jump
-    // kernel's three joins per round cost more AQE stage-jobs than
-    // its round savings returns (r21 measured: 3.2 s hop vs 4.2 s
-    // jump at sf0.1; job profile 38 vs 59 jobs).
-    val edges = s.pin(pairs
-      .union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst"))
-    var labels = s.pin(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prop = edges.join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-      val next = s.pin(labels.join(prop, labels("id") === prop("src"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          (coalesce(col("nlabel"), col("label")) < col("label"))
-            .cast("long").as("_chg")), eager = false)
-      // the one job per round: materializes `next` into the checkpoint
-      // AND returns the changed-label count (sum of the _chg flags)
-      val nChanged = next.agg(coalesce(sum(col("_chg")), lit(0L)))
-        .as[Long].head()
-      converged = nChanged == 0L
-      labels = s.advance(labels, next.drop("_chg"))
-      i += 1
-    }
-    require(converged,
-      s"label propagation did not converge in $maxIter iterations — " +
-        "a component has diameter > maxIter and its labels are under-" +
-        "merged; raise maxIter")
+    val labels = Graph.minLabelComponents(pairs,
+      pairs.select(explode(array(col("doc_a"), col("doc_b")))).distinct())
     // cluster size via a window over the label partition — one shuffle,
-    // no join (a labels x sizes join would be large-large at scale, and
-    // the checkpointed side has no stats for a broadcast decision).
-    // The result is pinned (output-sized) so the working label frame and
-    // edge list are released at scope exit rather than at context GC.
+    // no join (a labels x sizes join would be large-large at scale).
+    // The result is pinned (output-sized) so the pair pin is released
+    // at scope exit rather than at context GC.
     s.pin(labels
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("label"))))

@@ -225,52 +225,114 @@ object Graph {
     chain.union(skip).select(col("src"), col("dst"))
   }
 
-  /** Connected components via min-label propagation WITH pointer jumping:
-    * each round takes the neighbor minimum (information moves one hop)
-    * and then hops through the label itself (l'(x) = min(m(x), m(m(x))),
-    * valid because labels are always node ids), which doubles the
-    * effective reach — O(log diameter) rounds instead of the O(diameter)
-    * a plain hash-min loop needs. Same per-round engineering as
-    * [[pagerank]] / [[graft.operators.Dedup.nearDupClusters]]: the
-    * symmetrized edge list is partitioned on its join key and
-    * checkpointed ONCE; each round is one materializing job whose
-    * changed-label count rides in the same action; superseded label
-    * checkpoints are released; non-convergence THROWS (an under-merged
-    * component table is wrong, not slow).
+  /** Most distinct undirected edges a component closure runs on the
+    * driver ([[minLabelComponents]] below it, [[minLabels]] always).
+    * Peak driver heap it allows, per edge: the bounded `take` holds a
+    * collected block (~20 B), an UnsafeRow copy (~80 B) and a (Long,
+    * Long) tuple (~40 B); [[minLabels]] holds the two endpoint arrays
+    * (16 B) and, for at most two endpoints per edge, their sorted copy,
+    * the distinct ids, labels and int parents (56 B); the labels sent
+    * back are at most one (id, label) tuple per edge (~40 B). About
+    * 250 B per edge, so 2^20 edges peak near 260 MB. */
+  val DriverEdgeMax: Int = 1 << 20
+
+  /** Min-label union-find over undirected edges `src(i)`--`dst(i)`: the
+    * sorted distinct endpoint ids and, index for index, the min id
+    * reachable from each. Roots are always the smaller index of a merged
+    * pair, and ids are sorted, so every root is its component's min id.
+    * Asserts the [[DriverEdgeMax]] bound. */
+  private[graft] def minLabels(src: Array[Long],
+                               dst: Array[Long]): (Array[Long], Array[Long]) = {
+    require(src.length == dst.length && src.length <= DriverEdgeMax,
+      s"${src.length} edges exceed the driver union-find bound $DriverEdgeMax")
+    val all = src ++ dst
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (i <- all.indices if n == 0 || all(i) != all(n - 1)) {
+      all(n) = all(i)
+      n += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) {
+        parent(r) = parent(parent(r))
+        r = parent(r)
+      }
+      r
+    }
+    for (e <- src.indices) {
+      val a = find(java.util.Arrays.binarySearch(ids, src(e)))
+      val b = find(java.util.Arrays.binarySearch(ids, dst(e)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    (ids, Array.tabulate(n)(i => ids(find(i))))
+  }
+
+  /** Connected components by min label: `edges` (src, dst) taken as
+    * undirected; every id in `nodes` gets a row (id, label), label = the
+    * min id reachable in the undirected graph, so an id in no edge is
+    * its own singleton. Ids are longs. Precondition: every edge endpoint
+    * is in `nodes` (an endpoint outside it gets no row).
     *
-    * Scale posture: per round, two equi-joins — edges x labels (the big
-    * one, partial-agg'd min by src) and the label-sized self-join for
-    * the jump. Nothing driver-side but a scalar count. At 100 TB the
-    * edge join dominates and reuses the checkpointed layout; the jump
-    * join is output-sized.
+    * The distinct undirected edge set is pinned once and at most
+    * [[DriverEdgeMax]] + 1 of it is taken to the driver. Within the
+    * bound the closure is [[minLabels]] — no per-round job — and the
+    * labels of merged endpoints return through `parallelize`, meeting
+    * `nodes` in a left join (`nodes` is never collected; the rest keep
+    * their own id). Above the bound the pointer-jumping loop
+    * ([[jumpLabels]]) runs over the same pin, within `maxIter` rounds. */
+  def minLabelComponents(edges: DataFrame, nodes: DataFrame,
+                         maxIter: Int = 24): DataFrame = Pins.scope { s =>
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val e = edges.toDF("src", "dst")
+    // lazy: the bounded take is the pin's first action, and the pin then
+    // computes only the partitions the take did not read
+    val und = s.pin(e.select(least(col("src"), col("dst")).as("u"),
+      greatest(col("src"), col("dst")).as("w")).distinct(), eager = false)
+    val head = und.as[(Long, Long)].take(DriverEdgeMax + 1)
+    if (head.length > DriverEdgeMax) jumpLabels(und, nodes, maxIter)
+    else {
+      val (ids, labels) = minLabels(head.map(_._1), head.map(_._2))
+      val merged = ids.indices.iterator.filter(i => labels(i) != ids(i))
+        .map(i => (ids(i), labels(i))).toArray
+      val moved = spark.sparkContext.parallelize(merged.toSeq).toDF("id", "label")
+      nodes.toDF("id").join(moved, Seq("id"), "left")
+        .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+    }
+  }
+
+  /** The distributed closure behind [[minLabelComponents]] above
+    * [[DriverEdgeMax]]: min-label propagation WITH pointer jumping. Each
+    * round takes the neighbor minimum (information moves one hop) and
+    * then hops through the label itself twice (l'(x) = min(m(x),
+    * m(m(x))), valid because labels are always node ids), so the reach
+    * squares per jump — O(log diameter) rounds instead of the
+    * O(diameter) a plain hash-min loop needs. Each round is one
+    * materializing job whose changed-label count rides in the same
+    * action; superseded label pins are released; non-convergence THROWS
+    * (an under-merged component table is wrong, not slow).
     *
-    * Output: (node, component, component_size), component = min node id
-    * reachable in the undirected graph. */
-  /** The pointer-jumping min-label loop behind [[components]] (and any
-    * other component problem — e.g. semantic-dedup clusters over
-    * near-duplicate pairs): directed `edges0` (src, dst) is symmetrized
-    * internally; every id in `nodes` gets a label even if it appears in
-    * no edge (its own singleton component). Returns (id, label), label
-    * = min id reachable in the undirected graph. Engineering as
-    * documented on [[components]].
+    * Scale posture: per round, the edges x labels equi-join (partial-
+    * agg'd min by src) and two label-sized self-joins for the jumps.
+    * Nothing driver-side but a scalar count.
     *
     * Iteration budget: convergence is observed by a round whose
-    * changed-label count is zero, so the budget must cover
+    * changed-label count is zero, so `maxIter` must cover
     * ROUNDS-TO-FIXPOINT + 1 — the last productive round cannot know it
-    * was last; the observation round is part of the contract, not
-    * overhead. Pointer jumping reaches fixpoint in O(log2 diameter)
-    * rounds, so the default of 24 covers any component diameter up to
-    * ~2^22 with the +1 included; callers with a known diameter bound
-    * should derive their own (see [[CcMaxIter]]). */
-  def minLabelComponents(edges0: DataFrame, nodes: DataFrame,
-                         maxIter: Int = 24): DataFrame = Pins.scope { s =>
-    val spark = edges0.sparkSession
+    * was last. [[minLabelComponents]]' default of 24 covers any
+    * component diameter up to ~2^22; callers with a known diameter
+    * bound derive their own (see [[CcMaxIter]]). Same (id, label)
+    * contract as [[minLabelComponents]]; edges may repeat or loop. */
+  private[graft] def jumpLabels(edges: DataFrame, nodes: DataFrame,
+                                maxIter: Int): DataFrame = Pins.scope { s =>
+    val spark = edges.sparkSession
     import spark.implicits._
-    val edges = s.pin(edges0.toDF("src", "dst")
-      .union(edges0.toDF("dst", "src").select(col("src"), col("dst")))
-      .distinct()
-      .withColumnRenamed("src", "esrc")
-      .repartition(col("esrc")))
+    val e = edges.toDF("a", "b")
+    val sym = e.select(col("a").as("esrc"), col("b").as("dst"))
+      .union(e.select(col("b"), col("a")))
     var labels = s.pin(nodes.toDF("id")
       .select(col("id"), col("id").as("label")))
     var converged = false
@@ -279,8 +341,7 @@ object Graph {
       // one scope per round: the round-local pin m is released when the
       // round's count has materialized `next`
       val (next, nChanged) = Pins.scope { r =>
-      val tB0 = System.nanoTime()
-      val nb = edges.join(labels, edges("dst") === labels("id"))
+      val nb = sym.join(labels, sym("dst") === labels("id"))
         .groupBy(col("esrc")).agg(min(col("label")).as("nl"))
       // m feeds BOTH sides of the jump join; the lazy checkpoint makes
       // the edge join compute once per round, not once per branch
@@ -293,19 +354,9 @@ object Graph {
         .select(col("id"), col("plabel"),
           least(col("mlabel"), coalesce(col("jlabel"), col("mlabel")))
             .as("l1"))
-      // SECOND pointer jump in the same round: each jump squares the
-      // effective reach, so doubling up cuts the round count to
-      // ~log4(diameter) — and the round count, not per-round work, is
-      // what dominates wall-clock here (each round is a full job with
-      // its own scheduling/codegen floor; the extra label-sized
-      // self-join is marginal against that floor).
-      // j1 is deliberately NOT checkpointed: both jump-2 references
-      // re-derive it from the checkpointed m with label-sized joins
-      // only (the corpus-scale edge join stays compute-once behind m's
-      // checkpoint), and skipping the third lazy checkpoint removes
-      // one full query planning per round — the r21 profile measured
-      // the loop's wall as ~80% driver plan-build (0.3-0.7 s/round)
-      // against <0.1 s of action.
+      // the second jump re-derives j1 from the pinned m with label-sized
+      // joins only: a third pin would cost one more query planning per
+      // round, which dominates a round at small scale
       val jump2 = j1.select(col("id").as("jid2"), col("l1").as("jlabel2"))
       val next = r.pin(j1.join(jump2, j1("l1") === jump2("jid2"), "left")
         .select(col("id"),
@@ -313,11 +364,8 @@ object Graph {
           col("plabel"))
         .withColumn("_chg", (col("label") < col("plabel")).cast("long"))
         .drop("plabel"), eager = false)
-      val tR0 = System.nanoTime()
       val nChanged = next.agg(coalesce(sum(col("_chg")), lit(0L)))
         .as[Long].head()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $i chg=$nChanged build=${(tR0 - tB0) / 1e9}%.2f s act=${(System.nanoTime() - tR0) / 1e9}%.2f s")
       (next, nChanged)
       }
       converged = nChanged == 0L
@@ -340,12 +388,14 @@ object Graph {
   val CcMaxIter: Int =
     (32 - Integer.numberOfLeadingZeros(CcBlock - 1)) + 1 + 1 + 2
 
-  def components(spark: SparkSession, dir: String,
-                 maxIter: Int = CcMaxIter): DataFrame = Pins.scope { s =>
+  /** Connected components of [[ccEdges]] over the supplier keys through
+    * [[minLabelComponents]]. Output: (node, component, component_size),
+    * component = min node id reachable in the undirected graph. */
+  def components(spark: SparkSession, dir: String): DataFrame = Pins.scope { s =>
     val labels = minLabelComponents(
       ccEdges(spark, dir),
       Tables.supplier(spark, dir).select(col("s_suppkey")),
-      maxIter)
+      CcMaxIter)
     s.pin(labels
       .withColumn("component_size", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window
@@ -891,11 +941,11 @@ object Graph {
     * tie-break, so the cut is deterministic both engines. */
   def jaccardLinks(spark: SparkSession, dir: String,
                    topN: Int = 20): DataFrame = Pins.scope { s =>
-    // pin the edge list once (edge-sized — the minLabelComponents
-    // bound): und is referenced THREE times (both adj orientations +
-    // the non-edge anti-join) and triEdges is itself a multi-branch
-    // union, so unpinned the plan re-derived the closed-form edge set
-    // per reference — 84 parquet scans in the r22 before-plan
+    // pin the edge list once (edge-sized): und is referenced THREE
+    // times (both adj orientations + the non-edge anti-join) and
+    // triEdges is itself a multi-branch union, so unpinned the plan
+    // re-derived the closed-form edge set per reference — 84 parquet
+    // scans in the r22 before-plan
     val und = s.pin(triEdges(spark, dir))
     val adj = und.select(col("u").as("node"), col("w").as("nbr"))
       .unionByName(und.select(col("w").as("node"), col("u").as("nbr")))

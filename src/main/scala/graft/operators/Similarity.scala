@@ -1302,7 +1302,7 @@ object Similarity {
 
   /** End-to-end SEMANTIC dedup: LSH-verified near-duplicate pairs
     * ([[semanticPairs]]) -> connected components via the shared
-    * pointer-jumping min-label loop ([[Graph.minLabelComponents]]) ->
+    * min-label primitive ([[Graph.minLabelComponents]]) ->
     * per-vector survivor verdict (component representative = min
     * vec_id; unpaired vectors are their own singleton component). This
     * is the embedding-space counterpart of [[Dedup.finalSurvivors]],
@@ -1312,9 +1312,10 @@ object Similarity {
     *
     * Scale posture: pairs come from capped LSH buckets — no blocking
     * metadata, no label-blocked all-pairs join anywhere in the plan
-    * (spec-pinned); the component loop shuffles edge-sized frames for
-    * O(log diameter) rounds; the final verdict is one window-free
-    * projection. */
+    * (spec-pinned); the component closure pins the pair set once and
+    * closes it on the driver within [[Graph.DriverEdgeMax]] pairs (the
+    * distributed O(log diameter)-round loop above it); the final
+    * verdict is one window-free projection. */
   def semanticDedup(spark: SparkSession, dir: String,
                     tau: Double = 0.35): DataFrame = Pins.scope { s =>
     val pairs = semanticPairs(spark, dir, tau).select(col("va"), col("vb"))
@@ -1925,8 +1926,8 @@ object Similarity {
   /** PRODUCTION-TAU SEMANTIC-DEDUP COMPOSITION, ORACLE-GATED (the r19
     * verdict's top ask — closes [[semanticDedup]]'s `weak` mark): the
     * full embedding-dedup pipeline at production tau — banded LSH pair
-    * source on the planted corpus, pointer-jumping min-label connected
-    * components ([[Graph.minLabelComponents]]), per-vector survivor
+    * source on the planted corpus, min-label connected components
+    * ([[Graph.minLabelComponents]]), per-vector survivor
     * verdict — end-to-end under one hash. The registered
     * `emb_dedup_final` key's bench tau (0.35) rides the declared
     * exact-quadratic arm; THIS key runs the identical downstream
@@ -1940,9 +1941,10 @@ object Similarity {
     * a precision slip, OR a component/survivor defect all break the
     * hash.
     *
-    * Scale posture = [[semanticDedup]]: capped banded buckets feed
-    * edge-sized component rounds (O(log diameter) shuffles), one
-    * window-free survivor projection. */
+    * Scale posture = [[semanticDedup]]: capped banded buckets feed the
+    * component closure (driver union-find within
+    * [[Graph.DriverEdgeMax]] pairs), one window-free survivor
+    * projection. */
   def prodDedupChecked(spark: SparkSession, dir: String,
                        tau: Double = 0.9,
                        targetOcc: Long = 1024): DataFrame = Pins.scope { s =>

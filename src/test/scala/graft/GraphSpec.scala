@@ -50,10 +50,11 @@ class GraphSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(0)).distinct.length == rows.length)
   }
 
-  test("components: pointer jumping converges well under the O(diameter) bound") {
+  test("jumpLabels: pointer jumping converges well under the O(diameter) bound") {
     // CcBlock=64 chains would need ~63 plain hash-min rounds; the jump
-    // makes maxIter=16 ample — tightening to 10 must still converge
-    val rows = Graph.components(spark, sf, maxIter = 10).collect()
+    // makes CcMaxIter ample — tightening to 10 must still converge
+    val rows = Graph.jumpLabels(Graph.ccEdges(spark, sf),
+      Tables.supplier(spark, sf).select(col("s_suppkey")), 10).collect()
     assert(rows.nonEmpty)
   }
 
@@ -68,6 +69,31 @@ class GraphSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
       9L -> 9L))
+  }
+
+  test("minLabelComponents: the driver union-find and the distributed loop agree") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val inputs: Seq[(String, Seq[(Long, Long)], Seq[Long])] = Seq(
+      ("self-loops, duplicate edges, isolated nodes",
+        Seq((2L, 1L), (2L, 3L), (2L, 3L), (1L, 1L), (6L, 5L)),
+        Seq(1L, 2L, 3L, 5L, 6L, 9L)),
+      ("seeded random graph",
+        Seq.fill(150)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong)),
+        0L until 200L),
+      ("chain longer than CcBlock", (1L to 2L * Graph.CcBlock).map(i => (i, i - 1)),
+        0L to 2L * Graph.CcBlock),
+      ("no edges", Nil, 0L until 5L))
+    inputs.foreach { case (name, es, ns) =>
+      val edges = es.toDF("src", "dst")
+      val nodes = ns.toDF("id")
+      def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val driver = labels(Graph.minLabelComponents(edges, nodes))
+      val loop = labels(Graph.jumpLabels(edges, nodes, 24))
+      assert(driver.size == ns.size, name)
+      assert(driver == loop, name)
+    }
   }
 
   test("triangles: degree-oriented count equals direct x<y<z enumeration") {

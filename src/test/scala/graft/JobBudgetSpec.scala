@@ -1,11 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Accessibility
+import graft.operators.{Accessibility, Dedup, Graph, Similarity}
 import graft.sources.SnapshotLog
 
 /** Job budgets: the most Spark jobs each SnapshotLog verb the benchmark's
-  * `table_churn` pass drives may start, and `nearestPoi` at sf0.001.
+  * `table_churn` pass drives may start, and `nearestPoi` and the three
+  * connected-components callers (`nearDupClusters`, `semanticDedup`,
+  * `Graph.components`) at sf0.001.
   * Job counts are deterministic where wall times are not, and at these
   * sizes a verb's latency is mostly its job count, so a change that adds
   * jobs back fails here. Each lazy verb is counted with the action the
@@ -15,13 +17,16 @@ class JobBudgetSpec extends AnyFunSuite {
   import TestSession._
 
   /** Set at the counts measured on TestSession's fixed local[4], where a
-    * schema-less parquet read cost one more job per read site. */
+    * schema-less parquet read cost one more job per read site, and the
+    * components closure one job per round (38, 170 and 44 jobs for the
+    * three components callers). */
   private val budgets: Seq[(String, Int)] = Seq(
     "create" -> 4, "merge" -> 7, "append" -> 5, "readPoint" -> 2,
     "read" -> 2, "mergeDv" -> 11, "compact" -> 6, "diff" -> 3, "gc" -> 0,
-    "nearestPoi" -> 7)
+    "nearestPoi" -> 7, "nearDupClusters" -> 26, "semanticDedup" -> 13,
+    "components" -> 12)
 
-  test("each verb of the table_churn pass, and nearestPoi, stays within its job budget") {
+  test("each table_churn verb, nearestPoi and the components callers stay in budget") {
     import spark.implicits._
     val path = {
       val d = new java.io.File("target/tmp-jobbudget/churn")
@@ -52,7 +57,10 @@ class JobBudgetSpec extends AnyFunSuite {
       "diff" -> (() => noop(SnapshotLog.diff(spark, path, 0,
         SnapshotLog.latestVersion(path).get, "k"))),
       "gc" -> (() => SnapshotLog.gc(spark, path, 1)),
-      "nearestPoi" -> (() => noop(Accessibility.nearestPoi(spark, sf))))
+      "nearestPoi" -> (() => noop(Accessibility.nearestPoi(spark, sf))),
+      "nearDupClusters" -> (() => noop(Dedup.nearDupClusters(spark, sf))),
+      "semanticDedup" -> (() => noop(Similarity.semanticDedup(spark, sf))),
+      "components" -> (() => noop(Graph.components(spark, sf))))
     val counted = steps.map { case (verb, run) =>
       verb -> JobLedger.during(spark)(run())._2
     }
