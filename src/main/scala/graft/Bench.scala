@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import Probe.r3
 object Bench {
   /** Contention-vs-regression adjudication of per-key 2x breaches (the
     * r18 verdict ask: the judge and builder both did this by hand
@@ -52,11 +53,8 @@ object Bench {
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
         "UTF-8"))
       root \ "queries" match {
-        case JObject(fields) => Some(fields.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v)) => k -> v.toDouble
-          case (k, JDecimal(v)) => k -> v.toDouble
-        }.toMap)
+        case JObject(fields) =>
+          Some(fields.flatMap { case (k, v) => Probe.num(v).map(k -> _) }.toMap)
         case _ => None
       }
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -95,57 +93,29 @@ object Bench {
     // one JVM, so a single pass leaves individual timings at the mercy of
     // GC pauses triggered by earlier queries (observed 1.2 s -> 8 s
     // swings); min-of-3 after a collection attributes time to the query.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = Probe.only
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     // Every rep time is kept (not just the min): the per-rep spread in
     // the output file lets a one-off 17 s GC/environment outlier
     // self-identify (max >> median) without a same-machine judge rerun.
-    def timeReps(name: String, fn: (SparkSession, String) => DataFrame): Seq[Double] = {
-      // reset per REP: a result persisted for the caller, or a pin a
-      // query hands over to this scope-less caller, stays in the block
-      // manager, and across 131 queries x reps those blocks squeeze the
-      // unified memory region — later queries pay eviction/spill churn
-      // instead of their own cost (the round-7 geo_knn "regression",
-      // 7.7 s there vs 0.6 s isolated; the r16 adjudication's
-      // ann_nndescent reps growing 27 -> 60 -> 159 s).
-      (1 to reps).map { _ =>
-        GraftSession.reset(spark)
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          // a broken query must read as broken, not as a fast time:
-          // record the -1 sentinel and keep benchmarking the rest
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          -1.0
-        }
-      }
-    }
-    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val times = timeReps(name, fn)
-      if (times.exists(_ < 0)) -1.0 else times.min
-    }
+    // A failed rep reads -1, so a min below 0 marks a failed query.
+    def timeReps(name: String, fn: (SparkSession, String) => DataFrame): Seq[Double] =
+      Probe.reps(spark, reps, s"[bench] $name")(fn(spark, sfDir).count())
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // per query: (operator time, verification surplus, full gate time,
     // full-gate per-rep samples — the spread record)
     val results: Map[String, (Double, Option[Double], Double, Seq[Double])] =
       selected.map { case (name, fn) =>
-        rawTwins.get(name) match {
-          case Some(raw) =>
-            val tRaw = timeOne(name, raw)
-            val fullReps = timeReps(name, fn)
-            val tFull = if (fullReps.exists(_ < 0)) -1.0 else fullReps.min
-            if (tRaw < 0 || tFull < 0) name -> (-1.0, Some(-1.0), -1.0, Nil)
-            // noise clamp: the operator can't cost more than op+check,
-            // so a raw sample above the full sample reads as full
-            else name -> (math.min(tRaw, tFull),
-              Some(math.max(0.0, tFull - tRaw)), tFull, fullReps)
-          case None =>
-            val fullReps = timeReps(name, fn)
-            val t = if (fullReps.exists(_ < 0)) -1.0 else fullReps.min
-            name -> (t, None, t, if (t < 0) Nil else fullReps)
-        }
+        val tRaw = rawTwins.get(name).map(timeReps(name, _).min)
+        val fullReps = timeReps(name, fn)
+        val tFull = fullReps.min
+        if (tFull < 0 || tRaw.exists(_ < 0))
+          name -> (-1.0, tRaw.map(_ => -1.0), -1.0, Nil)
+        // noise clamp: the operator can't cost more than op+check, so a
+        // raw sample above the full sample reads as full
+        else name -> (tRaw.fold(tFull)(math.min(_, tFull)),
+          tRaw.map(r => math.max(0.0, tFull - r)), tFull, fullReps)
       }
     val failed = results.collect { case (k, (_, _, f, _)) if f < 0 => k }.toSeq.sorted
     // environment fingerprint: heap ceiling, GC algorithm, physical
@@ -154,26 +124,23 @@ object Bench {
     // cross-round or cross-machine outlier (r8's 17.5 s q40, r9's
     // geo_knn) can be attributed to the box, not the plan, without a
     // same-machine judge rerun
-    val envRef = timeOne("_env_ref_q1",
-      (s, d) => SparkEntry.queries("q1_pricing_summary")(s, d))
+    val envRef = timeReps("_env_ref_q1", SparkEntry.queries("q1_pricing_summary")).min
     val gcAlgo = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .stream.map[String](_.getName).toArray.mkString("+")
     // shuffle_partitions recorded explicitly: the r10 red-gate class
     // (cross-partitioning float-sum drift) is a function of exactly
     // this knob, so the fingerprint must make a driver/builder
     // partitioning mismatch visible at a glance
-    val envJson = s"""{"heap_max_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)},"gc":"$gcAlgo","cpus":${Runtime.getRuntime.availableProcessors()},"spark_cpus":$cpus,"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},"java":"${System.getProperty("java.version")}","warm_ref_q1_sec":${if (envRef < 0) "-1" else BigDecimal(envRef).setScale(3, BigDecimal.RoundingMode.HALF_UP)}}"""
+    val envJson = s"""{"heap_max_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)},"gc":"$gcAlgo","cpus":${Runtime.getRuntime.availableProcessors()},"spark_cpus":$cpus,"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},"java":"${System.getProperty("java.version")}","warm_ref_q1_sec":${r3(envRef)}}"""
     // Full per-query record to a FILE: the driver's stdout capture keeps
     // only a tail, which in round 7 truncated ~56 of 131 per-query times
     // and let a 2.3x regression hide outside the slowest-10. The file is
     // the round-over-round comparison surface; stdout keeps the summary.
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     // The harness keeps only the LAST ~2000 chars of stdout. Keep the line
-    // small (3 dp — ms resolution is all GC noise allows anyway) and put
-    // the headline total/failed/sf AFTER the per-query map so they survive
-    // even if the map's head is truncated out of the tail window.
-    def r3(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    // small (3 dp) and put the headline total/failed/sf AFTER the
+    // per-query map so they survive even if the map's head is truncated
+    // out of the tail window.
     // failed queries appear ONLY in the `failed` array — a -1 inside the
     // queries map skews any consumer computing means/ratios over it
     val qs = results.flatMap { case (k, (op, check, f, _)) =>
@@ -214,11 +181,8 @@ object Bench {
       // (endsWith("") matches every sfDir)
       if (pinnedSf.isEmpty || !sfDir.endsWith(pinnedSf)) Map.empty
       else root \ "queries" match {
-        case JObject(fields) => fields.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v)) => k -> v.toDouble
-          case (k, JDecimal(v)) => k -> v.toDouble
-        }.toMap
+        case JObject(fields) =>
+          fields.flatMap { case (k, v) => Probe.num(v).map(k -> _) }.toMap
         case _ => Map.empty
       }
     } catch { case _: Throwable => Map.empty }

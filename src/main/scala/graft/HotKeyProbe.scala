@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Pins
+import Probe.r3
 
 /** HOT-KEY PROBE — the adversarial input the shape-preserving scale
   * replication cannot manufacture: a boilerplate sentence present in
@@ -62,12 +63,11 @@ object HotKeyProbe {
     val spark = GraftSession.local("HotKeyProbe")
 
     val docs = s.pin(corpus(spark, nDocs))
-    // each probe's pins end with it (the corpus pin outlives them all)
+    // each probe's pins end with it; the corpus pin outlives them all,
+    // so no GraftSession.reset here (it would release the corpus too)
     def timed[A](f: => A): (A, Double) = {
       spark.catalog.clearCache(); System.gc()
-      val t0 = System.nanoTime()
-      val a = Pins.scope { _ => f }
-      (a, (System.nanoTime() - t0) / 1e9)
+      Probe.timed(Pins.scope { _ => f })
     }
 
     // dedup_containment at probe scale: the planted pair must surface,
@@ -291,8 +291,6 @@ object HotKeyProbe {
       wTotal - wHotPairs <= 100L
 
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    def r3(v: Double) = BigDecimal(v).setScale(3,
-      BigDecimal.RoundingMode.HALF_UP).toString
     val ok = cPlanted && !cLeaked && dPlanted && !dLeaked &&
       mPlanted && !mLeaked && sPlanted && !sLeaked && vPlanted && !vLeaked &&
       prPlanted && lpOk && q37Ok && q38Ok && cdcOk && wOk

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import Probe.r3
 
 /** STAGE-LEVEL PROFILE of the production-tau banded near-dup pipeline —
   * the measurement behind any optimization of the `emb_neardup_prod*`
@@ -33,14 +33,9 @@ object ProdProfile {
     import operators.Similarity
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
-    def timeOne(mk: => DataFrame): (Double, Long) = {
+    def timeOne(stage: String)(mk: => DataFrame): (Double, Long) = {
       var rows = 0L
-      val ts = (1 to reps).map { _ =>
-        GraftSession.reset(spark)
-        val t0 = System.nanoTime()
-        rows = mk.count()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val ts = Probe.reps(spark, reps, s"[prod] $stage") { rows = mk.count() }
       (ts.min, rows)
     }
 
@@ -53,14 +48,12 @@ object ProdProfile {
     def gathered: DataFrame =
       Similarity.cappedBucketPairs(banded, plan.cap.toInt)
 
-    val (tDerive, nCorpus) = timeOne(corpus)
-    val (tBand, nBanded) = timeOne(banded)
-    val (tGather, nCands) = timeOne(gathered)
+    val (tDerive, nCorpus) = timeOne("derive")(corpus)
+    val (tBand, nBanded) = timeOne("band")(banded)
+    val (tGather, nCands) = timeOne("gather")(gathered)
     val (tFull, nPairs) =
-      timeOne(Similarity.prodPairsChecked(spark, dir, tau,
+      timeOne("full")(Similarity.prodPairsChecked(spark, dir, tau,
         targetOcc = targetOcc))
-    def r3(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     println(s"""{"metric":"prod_profile","dir":"$dir","tau":$tau,""" +
       s""""target_occ":$targetOcc,"reps":$reps,""" +
       s""""plan":{"arm":"${plan.arm}","r":${plan.r},""" +

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Probe.{num, r3}
 
 /** ONE-DECADE SCALE PROBE — the empirical test of the 100 TB claim the
   * single-scale-factor bench gate cannot run: the slowest registry keys
@@ -16,17 +17,18 @@ import org.apache.spark.sql.functions._
   * union of 10 identical copies would manufacture cross-copy duplicate
   * clusters (every doc pairs with its 9 clones: candidate counts then
   * scale with copies², an artifact of the construction, not the
-  * operator), so each copy is made DISJOINT from the others in every
-  * similarity space while keeping the within-copy structure intact:
+  * operator), so each copy is set apart from the others (disjoint in
+  * the key and token spaces, only partly in cosine space) while keeping
+  * the within-copy structure intact:
   *   - keys shift by copy * (max+1) (referential structure per copy);
   *   - document tokens get a per-copy suffix (token/shingle/n-gram
   *     spaces disjoint across copies, identical within a copy);
-  *   - embeddings get a per-copy deterministic hash perturbation
-  *     (breaks exact-duplicate geometry; within-copy neighborhoods
-  *     essentially unchanged at 1e-3 amplitude).
+  *   - embeddings get a per-copy sign flip per dimension (within-copy
+  *     cosines exact; across copies NOT disjoint at tau 0.35, see
+  *     the embeddings block in [[buildScaled]]).
   * Dup-density, vocabulary growth, and cluster structure per unit of
-  * data therefore match the base corpus — the ratio measures the
-  * OPERATOR's scaling, not the generator's.
+  * data therefore match the base corpus in the key and token spaces —
+  * the ratio measures the OPERATOR's scaling, not the generator's.
   *
   * Usage: runMain graft.ScaleProbe [baseDir] [scaledDir] [factor]
   * (defaults /root/testdata/sf0.1, /tmp/graft_sf1, 10). Emits one JSON
@@ -71,7 +73,7 @@ object ScaleProbe {
 
     // keyed dimension tables: shift the key per copy, carry the rest
     def keyShift(name: String, key: String): Unit = {
-      val df = spark.read.parquet(s"$src/$name.parquet")
+      val df = Tables.load(spark, src, name)
       val m = maxOf(df, key)
       copies(df) { (d, i) =>
         d.withColumn(key, col(key) + lit(i * m))
@@ -83,7 +85,7 @@ object ScaleProbe {
     // documents: per-copy token suffix — token spaces disjoint across
     // copies, so dedup/shingle structure scales linearly by design
     locally {
-      val d = spark.read.parquet(s"$src/documents.parquet")
+      val d = Tables.load(spark, src, "documents")
       val m = maxOf(d, "doc_id")
       copies(d) { (df, i) =>
         val text =
@@ -99,20 +101,19 @@ object ScaleProbe {
     // embeddings: per-copy RADEMACHER sign flip — one deterministic
     // ±1 vector per (copy, dim), applied to every vector of the copy.
     // Within a copy, both endpoints of any pair flip the SAME signs,
-    // so every within-copy cosine (and norm) is preserved EXACTLY —
-    // strictly better shape preservation than the r17 1e-3 additive
-    // perturbation. Across copies, s_i ⊙ s_j is an iid ±1 vector, so
-    // cross-copy cosines concentrate around 0 (std ~ dim^-1/2): the
-    // copies are DISJOINT in cosine space, as the construction
-    // contract above demands. The r17 perturbation only broke EXACT
-    // cross-copy duplication — at tau-level similarity every vector
-    // still paired with its 99 clones AND each base pair re-paired
-    // copy²-wise, manufacturing an O(copies²) true-pair explosion
-    // (~50M pairs at factor 100) that the r17/r18 emb_neardup_lsh
-    // probe ratios (182x / 294x) were largely measuring. gen=2 in the
-    // completion marker forces the rebuild everywhere.
+    // so every within-copy cosine (and norm) is preserved EXACTLY.
+    // Across copies, s_i ⊙ s_j is an iid ±1 vector, so cross-copy
+    // cosines centre on 0 with std ~ dim^-1/2 (≈ 0.125 at 64 dims) —
+    // NOT disjoint at a loose tau: cross-copy pairs appear at about the
+    // base rate and grow with copies². Measured with
+    // `Similarity.semanticPairs(dir, 0.35)`: 4,137 pairs at sf0.1 and
+    // 43,115,182 at factor 100, where 100 disjoint copies would give
+    // 413,700. What the flip does remove is the r17 construction's exact
+    // cross-copy clones (every vector paired with its 99 copies at any
+    // tau). A disjoint construction is a new gen and a re-pin of
+    // SCALE_BASELINE.json.
     locally {
-      val e = spark.read.parquet(s"$src/embeddings.parquet")
+      val e = Tables.load(spark, src, "embeddings")
       val m = maxOf(e, "vec_id")
       copies(e) { (df, i) =>
         val emb =
@@ -135,7 +136,7 @@ object ScaleProbe {
     // (nanosAsLong=true) and is written back as nanos — Tables.events
     // normalizes either representation.
     locally {
-      val raw = spark.read.parquet(s"$src/events.parquet")
+      val raw = Tables.load(spark, src, "events")
       // normalize ts to nanos-long regardless of the writer's physical
       // type (TIMESTAMP(NANOS)->LongType under nanosAsLong, or
       // timestamp[us] NTZ — session TZ is UTC so the cast is identity
@@ -167,7 +168,7 @@ object ScaleProbe {
     // so fingerprints and incidental loads resolve)
     Seq("region", "nation", "orders", "lineitem", "part")
       .foreach { t =>
-        spark.read.parquet(s"$src/$t.parquet")
+        Tables.load(spark, src, t)
           .write.mode("overwrite").parquet(s"$dst/$t.parquet")
       }
     // completion marker LAST (r16 ADVICE): records what was built, so a
@@ -208,33 +209,17 @@ object ScaleProbe {
       buildScaled(spark, base, scaled, factor)
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
-    def timeOne(fn: (SparkSession, String) => DataFrame,
-                dir: String): Double = {
-      val ts = (1 to reps).map { _ =>
-        // release finished frames BETWEEN reps/keys: at factor 100 one
-        // key's leftover blocks can hold most of the heap into the NEXT
-        // key's quadratic pass (observed: emb_dedup_final OOMing right
-        // after ann_nndescent's cold fit)
-        GraftSession.reset(spark)
-        val t0 = System.nanoTime()
-        try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] FAILED at $dir: ${e.getMessage}")
-          -1.0
-        }
-      }
-      if (ts.exists(_ < 0)) -1.0 else ts.min
-    }
-    def r3(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3,
-        BigDecimal.RoundingMode.HALF_UP).toString
-
-    val keys = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSeq).getOrElse(probeKeys)
+    val keys = Probe.only.getOrElse(probeKeys)
     val rows = keys.flatMap { k =>
       SparkEntry.queries.get(k).map { fn =>
-        val tB = timeOne(fn, base)
-        val tS = timeOne(fn, scaled)
+        // reset between reps AND keys (Probe.reps): at factor 100 one
+        // key's leftover blocks can hold most of the heap into the NEXT
+        // key's quadratic pass (observed: emb_dedup_final OOMing right
+        // after ann_nndescent's cold fit); a failed rep makes the min -1
+        def time(dir: String): Double =
+          Probe.reps(spark, reps, s"[scale] $k at $dir")(fn(spark, dir).count()).min
+        val tB = time(base)
+        val tS = time(scaled)
         val ratio = if (tB > 0 && tS >= 0) tS / tB else -1.0
         System.err.println(f"[scale] $k%-22s base=${r3(tB)}s " +
           f"scaled=${r3(tS)}s ratio=${r3(ratio)}")
@@ -268,12 +253,6 @@ object ScaleProbe {
         import org.json4s._
         val root = org.json4s.jackson.JsonMethods.parse(new String(
           java.nio.file.Files.readAllBytes(pinPath), "UTF-8"))
-        def num(v: JValue): Option[Double] = v match {
-          case JDouble(d) => Some(d)
-          case JInt(i) => Some(i.toDouble)
-          case JDecimal(d) => Some(d.toDouble)
-          case _ => None
-        }
         val fileFactor = num(root \ "factor").map(_.toInt).getOrElse(factor)
         root \ "keys" match {
           case JObject(fields) => fields.flatMap { case (k, v) =>
@@ -311,47 +290,7 @@ object ScaleProbe {
           s""""worst":${worstP.map(w => r3(w._2)).getOrElse("-1")},""" +
           s""""n_over_2x":$over,"n_compared":${cmp.size}}"""
       }
-    // SPARK_GRAFT_WIDENED=1: one extra datum — the WIDENED seeded-band
-    // arm at production near-dup tau on the scaled corpus (the regime
-    // the r18 adaptive plan exists for; the registered key's bench tau
-    // always dispatches exact, so this path otherwise has no at-scale
-    // measurement). Emits the plan the closed form chose plus measured
-    // wall/pairs.
-    val widenedJson =
-      if (!sys.env.get("SPARK_GRAFT_WIDENED").contains("1")) ""
-      else {
-        val tau = 0.9; val occ = 256L
-        val n = spark.read.parquet(s"$scaled/embeddings.parquet").count()
-        // DEFAULT config (r18 verdict ask #2): the cap is now derived
-        // from the plan's expected occupancy (Similarity.
-        // adaptiveMaxBucket — 32x n/2^r, floor 64, ceiling 2000)
-        // instead of the hand-run 256 this datum needed in r18, when
-        // the constant-2000 default let clustered signature buckets
-        // spill the cap²-bounded candidate explode past the disk.
-        // TWO band budgets: once r* saturates maxBands, banded
-        // candidate mass grows ~ n² x bands x 2^-r* — quadratic again —
-        // and the recovery knob is the band BUDGET (each extra key bit
-        // costs ~1/p more bands and halves the random mass). The
-        // second datum measures exactly that trade at the same corpus.
-        val arms = Seq(32, 64).map { mb =>
-          val (arm, r, bands) =
-            operators.Similarity.nearDupLshPlan(n, tau, 64, 8, occ, mb)
-          GraftSession.reset(spark)
-          val t0 = System.nanoTime()
-          val nPairs = operators.Similarity
-            .nearDupLsh(spark, scaled, tau, 64, 8, targetOcc = occ,
-              maxBands = mb)
-            .count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[scale] widened-arm tau=$tau maxBands=$mb " +
-            f"r=$r bands=$bands pairs=$nPairs sec=${r3(sec)}")
-          s"""{"max_bands":$mb,"arm":"$arm","r":$r,"bands":$bands,""" +
-            s""""pairs":$nPairs,"sec":${r3(sec)}}"""
-        }
-        s""","widened_arm":{"tau":$tau,"target_occ":$occ,"n":$n,""" +
-          s""""budgets":[${arms.mkString(",")}]}"""
-      }
-    println(s"""{"metric":"scale_probe","factor":$factor,"base":"$base","scaled":"$scaled","reps":$reps,"keys":$qs,"worst_ratios":$worst,$vsPin$widenedJson}""")
+    println(s"""{"metric":"scale_probe","factor":$factor,"base":"$base","scaled":"$scaled","reps":$reps,"keys":$qs,"worst_ratios":$worst,$vsPin}""")
     if (sys.env.get("SPARK_GRAFT_SCALE_PIN").contains("1")) {
       // MERGE into any existing pin (a probe may run key subsets):
       // this run's measurements override, other pinned keys survive

@@ -9,8 +9,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // local-iteration hook, same contract as Bench: SPARK_GRAFT_ONLY=a,b
     // dumps a subset (the driver never sets it — full map by default)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = Probe.only
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Probe.{r3, timed}
 
 /** WRITE-AMPLIFICATION PROBE — the measured version of the deletion-
   * vector pitch: the same scattered point-merge applied to the same
@@ -28,12 +29,6 @@ object WriteAmpProbe {
       if (f.isFile) f.length()
       else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
     walk(new java.io.File(path))
-  }
-
-  private def timed[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
   }
 
   def main(args: Array[String]): Unit = {
@@ -88,8 +83,6 @@ object WriteAmpProbe {
     val purgedBytes = dirBytes(s"$mor/data") + dirBytes(s"$mor/dv") - morBytes
     val (_, morReadPurged) = timed(scanAll(mor))
 
-    def r3(v: Double) = BigDecimal(v).setScale(3,
-      BigDecimal.RoundingMode.HALF_UP)
     println(s"""{"metric":"write_amplification","n_rows":$nRows,""" +
       s""""n_changes":${2 * nUpd},"base_data_bytes":$segBytes,""" +
       s""""cow":{"bytes":$cowBytes,"sec":${r3(cowSec)},""" +

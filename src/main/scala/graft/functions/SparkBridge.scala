@@ -106,6 +106,12 @@ object SparkBridge {
   def mergeSchemas(spark: SparkSession, a: StructType, b: StructType): StructType =
     a.merge(b, spark.sessionState.conf.caseSensitiveAnalysis)
 
+  /** Block until the listener bus has delivered every event posted so
+    * far: it delivers asynchronously, so a listener that counts a block's
+    * jobs drains it before and after the block (`listenerBus` is
+    * `private[spark]`). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Whether a file source's listing skips the file or directory named
     * `name` (`_`/`.` names other than parquet summaries, `._COPYING_`). */
   def hiddenPathName(name: String): Boolean =

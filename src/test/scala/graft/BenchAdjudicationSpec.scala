@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Bench's breach adjudication (r18 verdict ask #5): the
   * contention-vs-regression call the judge and builder previously made
-  * by hand from committed peer runs, now a function in the artifact. */
+  * by hand from committed peer runs, now a function in the artifact;
+  * and the [[Probe]] harness every bench and probe main times with. */
 class BenchAdjudicationSpec extends AnyFunSuite {
 
   private val baseline = Map("q_fast" -> 1.0, "q_slow" -> 4.0)
@@ -72,5 +73,38 @@ class BenchAdjudicationSpec extends AnyFunSuite {
     java.nio.file.Files.write(bad.toPath, "not json".getBytes("UTF-8"))
     assert(Bench.readQueriesMap(bad.getPath).isEmpty)
     assert(Bench.readQueriesMap(dir.getPath + "/absent.json").isEmpty)
+  }
+
+  test("Probe.reps reads -1 for a throwing rep and still runs the later reps") {
+    var ran = 0
+    val ts = Probe.reps(TestSession.spark, 3, "[test] planted") {
+      ran += 1
+      if (ran == 2) sys.error("planted failure")
+    }
+    assert(ran == 3)
+    assert(ts.length == 3 && ts(1) == -1.0 && ts(0) >= 0 && ts(2) >= 0, ts)
+  }
+
+  test("Probe.reps releases a frame persisted in rep 1 before rep 2") {
+    val spark = TestSession.spark
+    import spark.implicits._
+    val df = (1 to 100).toDF("x")
+    var rep = 0
+    var heldInRep2 = -1
+    Probe.reps(spark, 2, "[test] persist") {
+      rep += 1
+      if (rep == 1) df.persist().count()
+      else heldInRep2 = spark.sparkContext.getPersistentRDDs.size
+    }
+    assert(heldInRep2 == 0)
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("Probe.num reads every json4s number and no string") {
+    import org.json4s._
+    assert(Probe.num(JInt(3)).contains(3.0))
+    assert(Probe.num(JDecimal(BigDecimal("1.25"))).contains(1.25))
+    assert(Probe.num(JDouble(0.5)).contains(0.5))
+    assert(Probe.num(JString("1.0")).isEmpty)
   }
 }

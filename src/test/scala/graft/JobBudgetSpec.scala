@@ -72,5 +72,8 @@ class JobBudgetSpec extends AnyFunSuite {
     }
     println(counted.map { case (v, j) => s"$v=${j.length}" }.mkString("job counts: ", " ", ""))
     assert(over.isEmpty, over.mkString("\n"))
+    // a pinned job names the operator that pinned, not the pin primitive
+    val pinSites = counted.flatMap(_._2).filter(_.site.contains("Pins.scala"))
+    assert(pinSites.isEmpty, JobLedger.bySite(pinSites))
   }
 }

@@ -126,13 +126,12 @@ class ParquetFooterSpec extends AnyFunSuite {
   test("no schema-less parquet read outside ParquetFooter") {
     // `.read.parquet(` and `.read.option(...).parquet(`, across line breaks
     val schemaLess = """\.read\s*(?:\.option\([^()]*\)\s*)*\.parquet\(""".r
-    // allowed: the helper itself; ScaleProbe, a probe main that copies
-    // the sf tables once; and SnapshotLog.history's one mergeSchema scan
-    // over every manifest (SnapshotLogGuardSpec keeps it the only one)
-    val allowedFiles = Seq("ParquetFooter.scala", "ScaleProbe.scala")
+    // allowed: the helper itself, and SnapshotLog.history's one
+    // mergeSchema scan over every manifest (SnapshotLogGuardSpec keeps it
+    // the only one)
     val sites = for {
       (p, code) <- SourceScan.mainSources
-      if !allowedFiles.contains(p.getFileName.toString)
+      if p.getFileName.toString != "ParquetFooter.scala"
       m <- schemaLess.findAllMatchIn(code)
       if !code.startsWith("versions.map(manifestDir(", m.end)
     } yield s"$p:${code.take(m.start).count(_ == '\n') + 1}"
