@@ -43,8 +43,9 @@ object ProdProfile {
       Similarity.prodDerivedPairs(spark, dir, tau, targetOcc = targetOcc)
     def banded: DataFrame =
       Similarity.bandedBuckets(corpus, plan.r, plan.bands, 64, 8)
-    // the engine's own gather seam (r20 ADVICE: a hand-copy here would
-    // silently measure a different plan if the engine's gather changes)
+    // the engine's own gather seam, the one capped bucket-pair gather
+    // (Dedup.bucketPairs) that nearDupLshOf runs: a hand copy here would
+    // silently measure a different plan if that gather changes
     def gathered: DataFrame =
       Similarity.cappedBucketPairs(banded, plan.cap.toInt)
 

@@ -207,4 +207,14 @@ object CappedSet {
     SparkBridge.column(CappedDistinctPairSet(
       SparkBridge.expression(id.cast("long")),
       SparkBridge.expression(v.cast("long")), cap).toAggregateExpression())
+
+  /** Generator Column: one row per i<j pair of the array `xs`, built by
+    * `pair(xs[i], xs[j])` — the map-side pair explode every gathered
+    * member list feeds (n²/2 rows per array, so callers bound n first:
+    * a capped set, or a size filter). */
+  def explode_pairs(xs: Column)(pair: (Column, Column) => Column): Column = {
+    import org.apache.spark.sql.functions.{explode, flatten, size, slice, transform}
+    explode(flatten(transform(xs, (x, i) =>
+      transform(slice(xs, i + 2, size(xs)), y => pair(x, y)))))
+  }
 }

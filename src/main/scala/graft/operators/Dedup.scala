@@ -331,7 +331,7 @@ object Dedup {
   private[graft] def classifyBatch(spark: SparkSession, dir: String,
                                    index: DataFrame, batch: DataFrame,
                                    tau: Double, k: Int = 64,
-                                   bands: Int = 16): DataFrame = Pins.scope { s =>
+                                   bands: Int = 16): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 5 =!= 4)
     // hash ladder (the [[incremental]] definitions, corpus pre-reduced).
@@ -361,31 +361,14 @@ object Dedup {
       .agg(min(when(col("kind") === "e", col("match_id"))).as("exact_match"),
         min(when(col("kind") === "n", col("match_id"))).as("norm_match"))
     // LSH probe: batch-side banding only; the index is the standing one.
-    // The candidate frame is referenced twice below (member list +
-    // verify join) — pin it once, candidate-pair-sized (unpinned, the
-    // banding + index join ran once per reference)
-    val cands = s.pin(minhashBands(batch, k, bands)
+    // Candidates are verified by exact Jaccard over their members only
+    // ([[verifiedJaccard]], which pins the candidate frame)
+    val cands = minhashBands(batch, k, bands)
       .join(index, Seq("band", "bucket"))
       .select(col("doc_id"), explode(col("corpus_ids")).as("cand_doc"))
       .filter(col("doc_id") =!= col("cand_doc"))
-      .distinct())
-    // exact-Jaccard verify over candidate members only (the
-    // [[ngramJaccard]] semi-join-prune-then-shingle discipline)
-    val members = cands.select(col("doc_id")).union(
-      cands.select(col("cand_doc").as("doc_id"))).distinct()
-    // member-sized, referenced by both verify-join sides — pinned so
-    // the pruned corpus scan runs once
-    val sets = s.pin(withShingles(
-      docs.join(broadcast(members), Seq("doc_id"), "left_semi"))
-      .select(col("doc_id"), array_distinct(col("shingles")).as("sh")))
-    val jac = round(
-      size(array_intersect(col("sa"), col("sb"))).cast("double") /
-        size(array_union(col("sa"), col("sb"))).cast("double"), 4)
-    val verified = cands
-      .join(sets.select(col("doc_id"), col("sh").as("sa")), Seq("doc_id"))
-      .join(sets.select(col("doc_id").as("cand_doc"), col("sh").as("sb")),
-        Seq("cand_doc"))
-      .withColumn("jaccard", jac)
+      .distinct()
+    val verified = verifiedJaccard(docs, cands, "doc_id", "cand_doc")
       .filter(col("jaccard") >= tau)
     // best corpus match: jaccard desc, then lower corpus id
     val w = org.apache.spark.sql.expressions.Window
@@ -397,7 +380,7 @@ object Dedup {
         col("jaccard").as("near_j"))
     ladder
       // the verified-best frame is near-dup-density-sized (tiny vs the
-      // batch) — broadcast, the paraphrasePairs discipline
+      // batch) — broadcast, as [[verifiedJaccard]] broadcasts its members
       .join(broadcast(best), Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         when(col("exact_match").isNotNull, "exact_dup")
@@ -420,35 +403,41 @@ object Dedup {
       minhashBands(Tables.documents(spark, dir), k, bands), maxBucket)
 
   /** [[minhashCandidates]]' gather half over a prebuilt (doc_id, band,
-    * bucket) frame: one shuffle, no self-join — gather each bucket's
-    * (sorted) doc list, gate on bucket size, expand the i<j pairs
-    * map-side with higher-order functions. The banding subtree is
-    * evaluated exactly once (a self-join re-evaluates it per side —
-    * AQE does not reuse the exchange across join branches), and pair
-    * expansion is bounded by maxBucket^2 per bucket.
-    * State-bounded gather (see [[corpusLshIndex]]): the size gate is
-    * enforced INSIDE the aggregation, so a degenerate bucket never
-    * materializes past maxBucket ids anywhere. */
+    * bucket) frame: [[bucketPairs]], ordered. */
   private[graft] def candidatesFromBanded(banded: DataFrame,
-                                          maxBucket: Long): DataFrame = {
-    val buckets = banded.groupBy(col("band"), col("bucket"))
-      .agg(CappedSet.capped_distinct_set(col("doc_id"), maxBucket.toInt)
-        .as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) > 1)
-    buckets
-      // re-spread before the pair explode (the cappedBucketPairs fix):
-      // AQE coalesces the byte-tiny gathered-bucket read toward one
-      // partition, but each row explodes to up to maxBucket²/2 pairs —
-      // single-task generator stages in every dedup consumer's r22
-      // profile. The exchange moves only capped id arrays; the
-      // distinct right after makes row order immaterial.
-      .repartition(banded.sparkSession.sparkContext.defaultParallelism)
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))), y =>
-          struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b")).distinct()
+                                          maxBucket: Long): DataFrame =
+    bucketPairs(banded, "doc_id", maxBucket.toInt, "doc_a", "doc_b")
       .orderBy(col("doc_a"), col("doc_b"))
-  }
+
+  /** The one capped bucket-pair gather of the LSH family (MinHash
+    * [[minhashCandidates]], embedding [[Similarity.nearDupLshOf]]): the
+    * distinct i<j pairs `(a, b)` of `id` values sharing a bucket, where
+    * a bucket is one value of every other column of `banded` (Dedup's
+    * `(band, bucket)`, Similarity's `bucket`). One shuffle, no
+    * self-join — each bucket's sorted member list is gathered once and
+    * its pairs expand map-side, so the banding subtree is evaluated
+    * exactly once (a self-join re-evaluates it per side — AQE does not
+    * reuse the exchange across join branches). The size gate is
+    * enforced INSIDE the aggregation ([[CappedSet.capped_distinct_set]]),
+    * so a bucket of more than `cap` ids never materializes past `cap`
+    * anywhere and pair expansion is bounded by cap²/2 per bucket. */
+  private[graft] def bucketPairs(banded: DataFrame, id: String, cap: Int,
+                                 a: String, b: String): DataFrame =
+    banded.groupBy(banded.columns.filter(_ != id).map(col): _*)
+      .agg(CappedSet.capped_distinct_set(col(id), cap).as("ids"))
+      .filter(col("ids").isNotNull && size(col("ids")) > 1)
+      // re-spread the bounded bucket rows BEFORE the pair explode: AQE
+      // sizes the post-gather read by BYTES (kilobytes of capped id
+      // arrays) and coalesces it toward one partition, but every row
+      // explodes to up to cap²/2 pairs, so the generator stage ran
+      // SINGLE-TASK (r22 profile: a 1.2 s 1-task stage under
+      // emb_neardup_lsh while 31 cores idled, and the same in every
+      // dedup consumer). The exchange moves only the capped id arrays;
+      // the distinct right after makes row order immaterial.
+      .repartition(banded.sparkSession.sparkContext.defaultParallelism)
+      .select(CappedSet.explode_pairs(col("ids"))((x, y) =>
+        struct(x.as(a), y.as(b))).as("p"))
+      .select(col(s"p.$a"), col(s"p.$b")).distinct()
 
   /** Exact n-gram Jaccard similarity, evaluated only on LSH candidates
     * (the verify step of the classic LSH pipeline).
@@ -461,51 +450,60 @@ object Dedup {
     * 100 TB the difference is two full-corpus passes). */
   def ngramJaccard(spark: SparkSession, dir: String,
                    tau: Double = 0.8): DataFrame =
-    verifiedJaccard(spark, dir, minhashCandidates(spark, dir), tau)
+    jaccardAtLeast(spark, dir, minhashCandidates(spark, dir), tau)
 
-  /** [[ngramJaccard]]'s verify half over an explicit candidate-pair
-    * frame — the seam that lets [[lshSweep]] feed candidates banded
-    * from its shared signature frame. */
-  private[graft] def verifiedJaccard(spark: SparkSession, dir: String,
-                                     cands: DataFrame,
-                                     tau: Double): DataFrame = Pins.scope { s =>
-    // The candidate frame is referenced TWICE below (member list +
-    // verify join) and Catalyst does not reuse the aggregated exchange
-    // across the two branches, so without a pin the ENTIRE banding +
-    // bucket-gather chain runs twice per call (r22 profile: two
-    // identical 32-task kernel stages in every consumer). The frame is
-    // near-dup-density-sized (the point of LSH), so one localCheckpoint
-    // costs one tiny materialization and halves the corpus-scale work —
+  /** The (doc_a, doc_b) candidates at exact Jaccard >= tau, ordered and
+    * pinned: output is verified-pair-sized, and the pin lets
+    * multi-reference consumers (nearDupClusters' edge set and node
+    * list, splitLeakage's two broadcast builds) read it instead of
+    * re-running the verify join per reference, and frees the
+    * verify's candidate and set pins when the scope exits. */
+  private def jaccardAtLeast(spark: SparkSession, dir: String,
+                             cands: DataFrame, tau: Double): DataFrame =
+    Pins.scope { s =>
+      s.pin(verifiedJaccard(Tables.documents(spark, dir), cands)
+        .filter(col("jaccard") >= tau)
+        .select(col("doc_a"), col("doc_b"), col("jaccard"))
+        .orderBy(col("doc_a"), col("doc_b")))
+    }
+
+  /** The one exact shingle-Jaccard verify: every column of `pairs`
+    * plus `jaccard`, the 4-decimal Jaccard of the distinct word
+    * shingles of documents `a` and `b` (ids into `docs`' `doc_id`). A
+    * pair whose member is missing from `docs` or has no shingle drops.
+    * Pins handed to the caller's scope: `pairs` and the member-sized
+    * shingle sets. */
+  private[graft] def verifiedJaccard(docs: DataFrame, pairs: DataFrame,
+                                     a: String = "doc_a",
+                                     b: String = "doc_b"): DataFrame = Pins.scope { s =>
+    // The pair frame is referenced TWICE below, by the member list and
+    // by the verify join, and the set pin puts them in different
+    // actions: no exchange is reused across actions, so without a pin
+    // the ENTIRE pair source (an LSH banding + bucket gather) runs twice
+    // per call (r22 profile: two identical 32-task kernel stages in
+    // every consumer). The frame is near-dup-density-sized (the point
+    // of LSH), so one localCheckpoint costs one tiny materialization —
     // at 100 TB the saved pass is a full corpus banding.
-    val candsP = s.pin(cands)
-    // LSH output is a tiny fraction of the corpus (that is the point of
-    // LSH) — broadcast its member list to prune map-side
-    val candDocs = candsP
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+    val pinned = s.pin(pairs)
+    // pair output is a tiny fraction of the corpus (the point of LSH) —
+    // broadcast its member list to prune map-side
+    val members = pinned
+      .select(explode(array(col(a), col(b))).as("doc_id"))
       .distinct()
     // semi-join FIRST, then shingle: the broadcast-hinted semi-join does
     // not push below a projection, so the reverse order would re-shingle
-    // the whole corpus (verified on the optimized plan). The set frame
-    // is member-sized and referenced by BOTH verify-join sides — pinned,
-    // so the pruned corpus scan runs once, not once per side.
+    // the whole corpus (TextDedupSpec checks the optimized plan). The
+    // set frame is member-sized and referenced by BOTH verify-join
+    // sides — pinned, so the pruned corpus scan runs once, not per side.
     val sets = s.pin(withShingles(
-      Tables.documents(spark, dir)
-        .join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
+      docs.join(broadcast(members), Seq("doc_id"), "left_semi"))
       .select(col("doc_id"), array_distinct(col("shingles")).as("sh")))
-    // output is verified-pair-sized (tinier still); pinning it lets
-    // multi-reference consumers (nearDupClusters' edge set and node
-    // list, splitLeakage's two broadcast builds) read it instead of
-    // re-running the verify join per reference, and frees the
-    // candidate pin immediately
-    s.pin(candsP
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("jaccard", round(
+    pinned
+      .join(sets.select(col("doc_id").as(a), col("sh").as("sh_a")), Seq(a))
+      .join(sets.select(col("doc_id").as(b), col("sh").as("sh_b")), Seq(b))
+      .select(pairs.columns.map(col) :+ round(
         size(array_intersect(col("sh_a"), col("sh_b"))) /
-          size(array_union(col("sh_a"), col("sh_b"))), 4))
-      .filter(col("jaccard") >= tau)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b")))
+          size(array_union(col("sh_a"), col("sh_b"))), 4).as("jaccard"): _*)
   }
 
   /** The LSH BANDING S-CURVE TABLE — [[graft.operators.Similarity
@@ -555,7 +553,7 @@ object Dedup {
       if (b == 16 && cands16.isDefined) cands16.get
       else candidatesFromBanded(bandsFromSigs(sigs, k, b), 100)
     val truthPairs =
-      if (k == 64) verifiedJaccard(spark, dir, cands16.get, tau)
+      if (k == 64) jaccardAtLeast(spark, dir, cands16.get, tau)
       else ngramJaccard(spark, dir, tau)
     val truth = s.pin(truthPairs
       .select(col("doc_a"), col("doc_b")))
@@ -667,7 +665,7 @@ object Dedup {
     val pairs = ngramJaccard(spark, dir, tau)
     // split assignment is ROW-LOCAL (md5 of the text), so it only needs
     // computing for PAIR MEMBERS: semi-join prune the corpus scan first
-    // (the verifiedJaccard discipline) instead of md5-hashing the whole
+    // (as [[verifiedJaccard]] does) instead of md5-hashing the whole
     // corpus twice — the old shape joined the full corpus-sized split
     // frame against the broadcast pairs once per side, two full scans
     // whose rows were then discarded by the inner join anyway. The
@@ -738,7 +736,7 @@ object Dedup {
       .agg(CappedSet.capped_distinct_set(col("doc_id"), maxDF).as("docs"))
       .filter(col("docs").isNotNull)
       .select(col("docs"))
-      // re-spread BEFORE the checkpoint (the cappedBucketPairs fix):
+      // re-spread BEFORE the checkpoint (as [[bucketPairs]] does):
       // AQE coalesces the byte-tiny kept-index read toward one
       // partition, the checkpoint inherits that layout, and both
       // consumers' explodes (up to maxDF²/2 pairs per row) then run
@@ -890,12 +888,10 @@ object Dedup {
         count(when(col("ds").isNull, 1)).as("dropped_buckets"),
         count(lit(1)).as("buckets"))
       .filter(col("ds").isNotNull && size(col("ds")) > 1)
-      .select(explode(flatten(transform(col("ds"), (x, i) =>
-        transform(slice(col("ds"), i + 2, size(col("ds"))), y =>
-          struct(x.getField("id").as("doc_a"),
-            y.getField("id").as("doc_b"),
-            bit_count(x.getField("v").bitwiseXOR(y.getField("v")))
-              .as("hamming")))))).as("p"))
+      .select(CappedSet.explode_pairs(col("ds"))((x, y) =>
+        struct(x.getField("id").as("doc_a"), y.getField("id").as("doc_b"),
+          bit_count(x.getField("v").bitwiseXOR(y.getField("v")))
+            .as("hamming"))).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"), col("p.hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
@@ -905,40 +901,28 @@ object Dedup {
   /** Hash-checked contract restatement of [[simhashPairs]]: WHICH pairs
     * the 64-bit signature reports is engine-internal (simhash is not
     * SQL-expressible), but every REPORTED pair must be a genuine near
-    * duplicate. Each reported pair is re-verified with exact word-shingle
-    * Jaccard (linear in |pairs| — the shingle scan is pruned to pair
-    * members first, the ngramJaccard discipline) and folded into
-    * per-document verdicts: `partners_verified` = all of the document's
-    * reported partners sit at Jaccard >= floor; `hamming_ok` = reported
-    * distances within maxHamming. The oracle states the contract as
-    * all-TRUE over the corpus, so a simhash regression that pairs
-    * dissimilar documents flips a verdict and breaks the hash. floor =
-    * 0.9: the measured corpus minimum over reported pairs is 0.956 and
-    * the signature is deterministic, so the verdict is stable. */
+    * duplicate. Each reported pair is re-verified by [[verifiedJaccard]]
+    * (linear in |pairs| — the shingle scan is pruned to pair members
+    * first) and folded into per-document verdicts: `partners_verified`
+    * = all of the document's reported partners sit at the 4-decimal
+    * Jaccard >= floor; `hamming_ok` = reported distances within
+    * maxHamming. The oracle states the contract as all-TRUE over the
+    * corpus, so a simhash regression that pairs dissimilar documents
+    * flips a verdict and breaks the hash. floor = 0.9: the measured
+    * corpus minimum over reported pairs is 0.956 and the signature is
+    * deterministic, so the verdict is stable. */
   def simhashChecked(spark: SparkSession, dir: String, floor: Double = 0.9,
                      maxHamming: Int = 3): DataFrame = {
-    val pairs = simhashPairs(spark, dir, maxHamming)
-    val candDocs = pairs
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val sets = withShingles(
-      Tables.documents(spark, dir)
-        .join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
-      .select(col("doc_id"), array_distinct(col("shingles")).as("sh"))
-    val verified = pairs
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("j", size(array_intersect(col("sh_a"), col("sh_b"))) /
-        size(array_union(col("sh_a"), col("sh_b"))))
-    val perDoc = verified
+    val docs = Tables.documents(spark, dir)
+    val perDoc = verifiedJaccard(docs, simhashPairs(spark, dir, maxHamming))
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"),
-        col("j"), col("hamming"))
+        col("jaccard"), col("hamming"))
       .groupBy(col("doc_id"))
-      .agg(min(col("j")).as("_minj"), max(col("hamming")).as("_maxh"))
+      .agg(min(col("jaccard")).as("_minj"), max(col("hamming")).as("_maxh"))
     // the verdict frame only holds pair members — orders smaller than
-    // the corpus (the candDocs broadcast argument), so the corpus-wide
+    // the corpus (the member broadcast argument), so the corpus-wide
     // left join broadcasts it rather than shuffling the corpus
-    Tables.documents(spark, dir).select(col("doc_id"))
+    docs.select(col("doc_id"))
       .join(broadcast(perDoc), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("_minj") >= floor, lit(true)).as("partners_verified"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Pins
+import graft.functions.{CappedSet, Pins}
 
 /** Iterative graph analytics over a deterministic synthetic graph — the
   * same distributed fixed-point shape as [[Routing]]'s Bellman-Ford, but
@@ -953,9 +953,8 @@ object Graph {
     val pairs = adj.groupBy(col("node"))
       .agg(sort_array(collect_list(col("nbr"))).as("ns"))
       .filter(size(col("ns")) >= 2)
-      .select(explode(flatten(transform(col("ns"), (x, i) =>
-        transform(slice(col("ns"), i + 2, size(col("ns"))), y =>
-          struct(x.as("a"), y.as("b")))))).as("pr"))
+      .select(CappedSet.explode_pairs(col("ns"))((x, y) =>
+        struct(x.as("a"), y.as("b"))).as("pr"))
       .groupBy(col("pr.a").as("a"), col("pr.b").as("b"))
       .agg(count(lit(1)).as("common"))
     s.pin(pairs

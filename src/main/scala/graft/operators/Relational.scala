@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.Pins
+import graft.functions.{CappedSet, Pins}
 
 /** Relational core: the reference's DB-layer query shapes re-expressed as
   * declarative Spark plans (ram-analysis/app/index.js:200-339 — select /
@@ -644,9 +644,8 @@ object Relational {
       .groupBy(col("c"))
       .agg(sort_array(collect_list(col("p"))).as("parts"))
       .filter(size(col("parts")) >= 2 && size(col("parts")) <= BasketCap)
-      .select(explode(flatten(transform(col("parts"), (x, i) =>
-        transform(slice(col("parts"), i + 2, size(col("parts"))), y =>
-          struct(x.as("part_a"), y.as("part_b")))))).as("pr"))
+      .select(CappedSet.explode_pairs(col("parts"))((x, y) =>
+        struct(x.as("part_a"), y.as("part_b"))).as("pr"))
       .groupBy(col("pr.part_a").as("part_a"), col("pr.part_b").as("part_b"))
       .agg(count(lit(1)).as("n_customers"))
       .orderBy(col("n_customers").desc, col("part_a"), col("part_b"))

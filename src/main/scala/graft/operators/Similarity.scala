@@ -505,34 +505,19 @@ object Similarity {
     * banding is selective) the exact block join runs and the
     * registered hash is unchanged; at production paraphrase tau
     * (~0.9) the dispatch goes subquadratic via [[nearDupLsh]]
-    * (spec-pinned). The pair list is near-dup-density-sized (tiny vs
-    * the corpus), so it BROADCASTS into the two shingle joins;
-    * shingles are computed only for pair members (semi-join prune
-    * first — the ngramJaccard lesson, two full-corpus shingle passes
-    * saved). */
+    * (spec-pinned). The pair list is verified by
+    * [[Dedup.verifiedJaccard]]: pinned once, its member list broadcast
+    * to prune the corpus before shingling (two full-corpus shingle
+    * passes saved). */
   def paraphrasePairs(spark: SparkSession, dir: String,
                       tau: Double = 0.35,
                       lexTau: Double = 0.5): DataFrame = {
-    import graft.functions.TextFunctions
-    val pairs = semanticPairs(spark, dir, tau)
-    val members = pairs
-      .select(explode(array(col("va"), col("vb"))).as("doc_id")).distinct()
-    val sh = Tables.documents(spark, dir)
-      .join(broadcast(members), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        array_distinct(TextFunctions.word_shingles(col("text"), 3)).as("s"))
-      .filter(size(col("s")) >= 1)
-    val jac = round(
-      size(array_intersect(col("sa"), col("sb"))).cast("double") /
-        size(array_union(col("sa"), col("sb"))).cast("double"), 4)
     // dispatch provenance IN the hash (r16 verdict #8): which pair arm
     // ran, at what closed-form selectivity/recall — a silent arm switch
     // or a banding-stats regression breaks the oracle compare
     val (arm, candFrac, designRecall) = semanticDispatch(tau)
-    pairs
-      .join(sh.select(col("doc_id").as("va"), col("s").as("sa")), Seq("va"))
-      .join(sh.select(col("doc_id").as("vb"), col("s").as("sb")), Seq("vb"))
-      .withColumn("jaccard", jac)
+    Dedup.verifiedJaccard(Tables.documents(spark, dir),
+        semanticPairs(spark, dir, tau), "va", "vb")
       .select(col("va"), col("vb"), col("cos_sim"), col("jaccard"),
         (col("jaccard") < lexTau).as("paraphrase"),
         lit(arm).as("pair_arm"), lit(candFrac).as("cand_frac"),
@@ -1058,35 +1043,13 @@ object Similarity {
       .orderBy(col("va"), col("vb"))
   }
 
-  /** The GATHER stage of [[nearDupLshOf]] — capped bucket member
-    * gather + map-side pair explode over a (vec_id, bucket) banded
-    * frame: bucket members are gathered once, pairs expand map-side,
-    * and the size cap is enforced INSIDE the aggregation
-    * (CappedDistinctSet dead-bit — a degenerate bucket never
-    * materializes past `cap` ids on its reducer; identical keep/drop
-    * boundary to the old post-filter). Exposed as the single seam so
-    * [[graft.ProdProfile]]'s stage timing measures the plan production
-    * actually runs (the r20 ADVICE hand-copy hazard). */
+  /** The GATHER stage of [[nearDupLshOf]] over a (vec_id, bucket)
+    * banded frame: [[Dedup.bucketPairs]], the one capped bucket-pair
+    * gather. Exposed as the single seam so [[graft.ProdProfile]]'s
+    * stage timing measures the plan production actually runs. */
   private[graft] def cappedBucketPairs(banded: DataFrame,
                                        cap: Int): DataFrame =
-    banded.groupBy(col("bucket"))
-      .agg(graft.functions.CappedSet.capped_distinct_set(
-        col("vec_id"), cap).as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) > 1)
-      // re-spread the bounded bucket rows BEFORE the pair explode: AQE
-      // sizes the post-gather read by BYTES (kilobytes of capped id
-      // arrays) and coalesces it toward one partition, but every row
-      // explodes to up to cap²/2 pairs, so the generator stage ran
-      // SINGLE-TASK (r22 profile: a 1.2 s 1-task stage under
-      // emb_neardup_lsh while 31 cores idled — the guide §2.5
-      // generator-skew case). The exchange moves only the tiny array
-      // rows; round-robin balances tile work at any scale, and the
-      // distinct right after makes row order immaterial.
-      .repartition(banded.sparkSession.sparkContext.defaultParallelism)
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))), y =>
-          struct(x.as("va"), y.as("vb")))))).as("p"))
-      .select(col("p.va"), col("p.vb")).distinct()
+    Dedup.bucketPairs(banded, "vec_id", cap, "va", "vb")
 
   /** The (vec_id, bucket) banded frame behind [[nearDupLshOf]] (and,
     * with `only0`, the [[nearDupLshAuto]] occupancy probe, which reads
@@ -1845,14 +1808,12 @@ object Similarity {
     * sf0.1 documents outnumber embeddings 5000 : 2000).
     *
     * Scale posture: identical to [[paraphrasePairs]] — the pair list
-    * is near-dup-density-sized so it BROADCASTS into the shingle
-    * joins, shingles are computed only for pair members (semi-join
-    * prune first), and the pair source is the capped banded LSH that
-    * never materializes an all-pairs join. */
+    * is verified by [[Dedup.verifiedJaccard]] over pair members only,
+    * and the pair source is the capped banded LSH that never
+    * materializes an all-pairs join. */
   def prodParaphraseChecked(spark: SparkSession, dir: String,
                             tau: Double = 0.9, lexTau: Double = 0.5,
                             targetOcc: Long = 1024): DataFrame = {
-    import graft.functions.TextFunctions
     val (_, pairs0, plan) =
       prodDerivedPairs(spark, dir, tau, targetOcc = targetOcc)
     val pairs = pairs0.select(col("va"), col("vb"), col("cos_sim"))
@@ -1865,21 +1826,7 @@ object Similarity {
       when(pmod(col("doc_id"), lit(2)) === 0, col("text"))
         .otherwise(concat_ws(" ", transform(split(col("text"), " "),
           t => concat(t, lit("~p"))))).as("text"))
-    val docs = baseDocs.unionByName(planted)
-    val members = pairs
-      .select(explode(array(col("va"), col("vb"))).as("doc_id")).distinct()
-    val sh = docs
-      .join(broadcast(members), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        array_distinct(TextFunctions.word_shingles(col("text"), 3)).as("s"))
-      .filter(size(col("s")) >= 1)
-    val jac = round(
-      size(array_intersect(col("sa"), col("sb"))).cast("double") /
-        size(array_union(col("sa"), col("sb"))).cast("double"), 4)
-    pairs
-      .join(sh.select(col("doc_id").as("va"), col("s").as("sa")), Seq("va"))
-      .join(sh.select(col("doc_id").as("vb"), col("s").as("sb")), Seq("vb"))
-      .withColumn("jaccard", jac)
+    Dedup.verifiedJaccard(baseDocs.unionByName(planted), pairs, "va", "vb")
       .select(Seq(col("va"), col("vb"), col("cos_sim"), col("jaccard"),
         (col("jaccard") < lexTau).as("paraphrase")) ++
         prodProvCols(plan): _*)

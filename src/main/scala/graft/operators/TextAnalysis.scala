@@ -260,7 +260,7 @@ object TextAnalysis {
     sh.groupBy(col("s"))
       .agg(CappedSet.capped_distinct_set(col("doc_id"), maxDF).as("docs"))
       .filter(col("docs").isNotNull)
-      // no respread here (unlike cappedBucketPairs): this gather is
+      // no respread here (unlike Dedup.bucketPairs): this gather is
       // SHINGLE-keyed, so its row count — and hence its byte size —
       // grows with the corpus and AQE sizes the read sensibly at any
       // scale; the respread measured as pure exchange tax at sf0.1

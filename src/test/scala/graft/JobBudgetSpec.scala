@@ -7,7 +7,8 @@ import graft.sources.SnapshotLog
 /** Job budgets: the most Spark jobs each SnapshotLog verb the benchmark's
   * `table_churn` pass drives may start, and `nearestPoi` and the three
   * connected-components callers (`nearDupClusters`, `semanticDedup`,
-  * `Graph.components`) at sf0.001.
+  * `Graph.components`) and three callers of the shingle-Jaccard verify
+  * (`ngramJaccard`, `simhashChecked`, `paraphrasePairs`) at sf0.001.
   * Job counts are deterministic where wall times are not, and at these
   * sizes a verb's latency is mostly its job count, so a change that adds
   * jobs back fails here. Each lazy verb is counted with the action the
@@ -19,12 +20,15 @@ class JobBudgetSpec extends AnyFunSuite {
   /** Set at the counts measured on TestSession's fixed local[4], where a
     * schema-less parquet read cost one more job per read site, and the
     * components closure one job per round (38, 170 and 44 jobs for the
-    * three components callers). */
+    * three components callers). `simhashChecked` and `paraphrasePairs`
+    * ran 15 and 12 jobs with a hand-typed, unpinned verify; the shared
+    * verify's pair and shingle-set pins cost each a few jobs more. */
   private val budgets: Seq[(String, Int)] = Seq(
     "create" -> 4, "merge" -> 7, "append" -> 5, "readPoint" -> 2,
     "read" -> 2, "mergeDv" -> 11, "compact" -> 6, "diff" -> 3, "gc" -> 0,
     "nearestPoi" -> 7, "nearDupClusters" -> 26, "semanticDedup" -> 13,
-    "components" -> 12)
+    "components" -> 12, "ngramJaccard" -> 17, "simhashChecked" -> 17,
+    "paraphrasePairs" -> 15)
 
   test("each table_churn verb, nearestPoi and the components callers stay in budget") {
     import spark.implicits._
@@ -60,7 +64,10 @@ class JobBudgetSpec extends AnyFunSuite {
       "nearestPoi" -> (() => noop(Accessibility.nearestPoi(spark, sf))),
       "nearDupClusters" -> (() => noop(Dedup.nearDupClusters(spark, sf))),
       "semanticDedup" -> (() => noop(Similarity.semanticDedup(spark, sf))),
-      "components" -> (() => noop(Graph.components(spark, sf))))
+      "components" -> (() => noop(Graph.components(spark, sf))),
+      "ngramJaccard" -> (() => noop(Dedup.ngramJaccard(spark, sf))),
+      "simhashChecked" -> (() => noop(Dedup.simhashChecked(spark, sf))),
+      "paraphrasePairs" -> (() => noop(Similarity.paraphrasePairs(spark, sf))))
     val counted = steps.map { case (verb, run) =>
       verb -> JobLedger.during(spark)(run())._2
     }

@@ -418,12 +418,13 @@ class SimilaritySpec extends AnyFunSuite {
     // semanticPairs, so production-tau runs (~0.9) take the
     // subquadratic LSH arm while the bench tau keeps the exact arm
     // (and with it the registered oracle hash)
+    // (the verify pins the pair frame, so the pair source shows in the
+    // plans the call runs, not in the result's own plan)
     def usesLsh(tau: Double): Boolean =
-      Similarity.paraphrasePairs(spark, sf, tau)
-        .queryExecution.optimizedPlan
-        .collect { case p => p.expressions.flatMap(_.collect {
+      PlanCapture.during(spark)(Similarity.paraphrasePairs(spark, sf, tau))
+        .flatMap(_.collect { case p => p.expressions.flatMap(_.collect {
           case _: graft.functions.VecSimHash => true
-        }) }.flatten.nonEmpty
+        }) }).flatten.nonEmpty
     assert(!usesLsh(0.35),
       "bench tau must keep the exact block-join pair source")
     assert(usesLsh(0.9),

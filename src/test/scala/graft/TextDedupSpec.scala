@@ -228,6 +228,29 @@ class TextDedupSpec extends AnyFunSuite {
     rows.foreach(r => assert(r.getDouble(2) >= 0.8 && r.getDouble(2) <= 1.0))
   }
 
+  test("the Jaccard verify semi-joins to pair members below the shingle projection") {
+    // Catalyst does not push the broadcast semi join below a projection,
+    // so shingling after the join is what keeps the verify member-sized:
+    // in every optimized plan that shingles semi-joined documents, the
+    // LeftSemi join must print below (run before) word_shingles
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "ngramJaccard" -> (() => Dedup.ngramJaccard(spark, sf)),
+      "paraphrasePairs" -> (() =>
+        graft.operators.Similarity.paraphrasePairs(spark, sf))
+    ).foreach { case (name, run) =>
+      val pruned = PlanCapture.during(spark)(run().collect())
+        .map(_.toString.linesIterator.toSeq)
+        .filter(ls => ls.exists(_.contains("Join LeftSemi")) &&
+          ls.exists(_.contains("word_shingles")))
+      assert(pruned.nonEmpty, s"$name ran no semi-joined shingle plan")
+      pruned.foreach { ls =>
+        assert(ls.indexWhere(_.contains("Join LeftSemi")) >
+          ls.indexWhere(_.contains("word_shingles")),
+          s"$name shingles before pruning:\n${ls.mkString("\n")}")
+      }
+    }
+  }
+
   test("simhash blocked join equals brute-force hamming filter") {
     val got = Dedup.simhashPairs(spark, "/root/testdata/sf0.01")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
